@@ -818,10 +818,11 @@ def q44_frame_sample(spark, sf_dir):
 def q45_span_enumeration(spark, sf_dir):
     """Exhaustive token n-gram span enumeration (N4,
     modeling_E2E_exhaustive.py:87-104) via the Arrow/numpy zero-shuffle form
-    (mentions.candidate_spans_arrow — the round-4 default in the flagship's
-    02_mentions stage): every 1..3-token window with exact character offsets
-    and span text == substr(text, start+1, end-start). Hard oracle: DuckDB
-    reproduces offsets with ordinality + running-sum windows + lead()."""
+    (mentions.candidate_spans_arrow — the enumeration core of the flagship's
+    fused 02_mentions detector): every 1..3-token window with exact
+    character offsets and span text == substr(text, start+1, end-start).
+    Hard oracle: DuckDB reproduces offsets with ordinality + running-sum
+    windows + lead()."""
     from e2e_el_spark.operators.mentions import candidate_spans_arrow
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 20).select(
@@ -857,7 +858,7 @@ def q46_gazetteer_mentions(spark, sf_dir):
         )
         .filter(F.length("alias") >= 3)
     )
-    return detect_mentions(docs, gaz, max_tokens=3, span_mode="fused")
+    return detect_mentions(docs, gaz, max_tokens=3, mode="fused")
 
 
 def q47_wordpiece_greedy(spark, sf_dir):

@@ -141,12 +141,15 @@ def _one_scaling_run(cpus: int, pages: int, mult: int, ents: int) -> dict:
 def run_scaling(levels: list[int], pages: int, mult: int, ents: int, trials: int) -> dict:
     """Interleave parallelism levels ABBA-style across trials — this VM's
     throughput drifts ±40% over minutes, so back-to-back same-level trials
-    would bake the drift into the ratio. Per-level wall = median of trials."""
+    would bake the drift into the ratio. Per-level wall = median of trials.
+    A trial whose worker printed no RESULT is recorded in ``failed_trials``
+    with its stderr tail, never dropped silently."""
     import statistics
 
     walls: dict[int, list[float]] = {c: [] for c in levels}
     stage_mins: dict[int, dict[str, float]] = {c: {} for c in levels}
     last: dict[int, dict] = {}
+    failed: list[dict] = []
     ceiling_samples: list[tuple[float, float, float]] = []
     for t in range(trials):
         # one machine-ceiling probe per ABBA round: samples the SAME noise
@@ -155,7 +158,10 @@ def run_scaling(levels: list[int], pages: int, mult: int, ents: int, trials: int
         ceiling_samples.append(_ceiling_probe_once())
         for cpus in (levels if t % 2 == 0 else list(reversed(levels))):
             r = _one_scaling_run(cpus, pages, mult, ents)
-            if "best_wall_s" in r:
+            if "best_wall_s" not in r:
+                failed.append({"level": cpus, "trial": t,
+                               "stderr_tail": r.get("error", "")})
+            else:
                 walls[cpus].append(r["best_wall_s"])
                 last[cpus] = r
                 # best-of-trials PER STAGE (each worker process is one
@@ -164,7 +170,7 @@ def run_scaling(levels: list[int], pages: int, mult: int, ents: int, trials: int
                 for s, w in (r.get("stage_walls_s") or {}).items():
                     prev = stage_mins[cpus].get(s)
                     stage_mins[cpus][s] = w if prev is None else min(prev, w)
-    results: dict = {}
+    results: dict = {"failed_trials": failed}
     for cpus in levels:
         if not walls[cpus]:
             results[f"n{cpus}"] = {"error": "no successful runs"}
@@ -393,6 +399,8 @@ def compact_throughput(scaling: dict) -> dict:
     ceil = scaling.get("machine_ceiling") or {}
     if "cpu_efficiency_2_to_8" in ceil:
         out["machine_ceiling_2_to_8"] = ceil["cpu_efficiency_2_to_8"]
+    # the count only; the stderr tails are on the SCALING_FULL line
+    out["failed_trials"] = len(scaling.get("failed_trials", []))
     return out
 
 

@@ -31,11 +31,7 @@ def main() -> None:
     # L3 rerank measured by default (EL_BENCH_RERANK=0 disables) so the bench
     # covers the full production pipeline incl. the 04b stage
     rerank = int(os.environ.get("EL_BENCH_RERANK", "5")) or None
-    # EL_SPAN_MODE A/Bs the four detection forms (fused/window/narrow/arrow)
-    cfg = PipelineConfig(
-        rerank_topk=rerank,
-        span_mode=os.environ.get("EL_SPAN_MODE", PipelineConfig.span_mode),
-    )
+    cfg = PipelineConfig(rerank_topk=rerank)
     # shuffle partitions default to the core count (each level emulates a
     # cluster of that size), overridable for partition-sizing campaigns:
     # at 1.92M pages the 2-partition shuffles of the n2 level put ~27M
@@ -73,6 +69,9 @@ def main() -> None:
     build_kb_artifacts(spark, ents, cfg, kb_dir, kb_fingerprint=kb_fp)
     kb_build_s = round(time.time() - t_kb, 1)
     n_aliases = gaz.count()
+    # the engine's one fused -> window rule: distinct aliases against
+    # cfg.fused_max_aliases (mentions.detect_mentions)
+    fused_fits = gaz.select("alias").distinct().count() <= cfg.fused_max_aliases
     walls = []
     n_clusters = 0
     stage_walls: dict[str, float] = {}
@@ -132,9 +131,7 @@ def main() -> None:
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum")),
         "pages": n_pages, "size_mult": mult, "entities": n_ents,
         "n_aliases": n_aliases, "kb_build_s": kb_build_s,
-        "detect_mode": ("window" if (cfg.span_mode == "fused"
-                                     and n_aliases > cfg.fused_max_aliases)
-                        else cfg.span_mode),
+        "detect_mode": "fused" if fused_fits else "window",
         "cc_reliable_checkpoint": bool(cc_dir),
         "clusters": n_clusters, "clusters_hash": clusters_hash,
         "walls_s": walls, "best_wall_s": best,

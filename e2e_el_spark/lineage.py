@@ -96,16 +96,24 @@ class StageRunner:
         wall_ms = int((time.monotonic() - t0) * 1000)
         out = self.spark.read.parquet(data_path)
         self._record_lineage(stage, out, wall_ms)
-        with open(marker, "w") as f:
-            json.dump(
-                {"stage": stage, "wall_ms": wall_ms, "ts": time.time(),
-                 "fingerprint": self.fingerprint,
-                 # stored so RESUME reads skip parquet schema inference —
-                 # one Spark job per resumed stage, pure serial floor on a
-                 # fully-checkpointed rerun
-                 "schema": out.schema.json()},
-                f,
-            )
+        # write-then-rename: a kill mid-write leaves a stray temp file, never
+        # a truncated marker that a rerun would take for a complete stage
+        tmp = f"{marker}.tmp"
+        try:
+            with open(tmp, "w") as f:
+                json.dump(
+                    {"stage": stage, "wall_ms": wall_ms, "ts": time.time(),
+                     "fingerprint": self.fingerprint,
+                     # stored so RESUME reads skip parquet schema inference
+                     # — one Spark job per resumed stage, pure serial floor
+                     # on a fully-checkpointed rerun
+                     "schema": out.schema.json()},
+                    f,
+                )
+            os.replace(tmp, marker)
+        finally:
+            if os.path.exists(tmp):
+                os.remove(tmp)
         return out
 
     def _read(self, data_path: str, schema_json: str | None) -> DataFrame:
@@ -127,9 +135,10 @@ class StageRunner:
         pyarrow metadata reads AND the lineage append both happen driver-side
         (zero Spark jobs: the previous createDataFrame().write per stage was
         one small scheduled job of pure serial floor per stage). For a
-        non-local workdir (hdfs://, s3a://) the local glob sees nothing — we
-        fall back to a Spark-side per-partition count + append rather than
-        silently recording rows_out=0."""
+        non-local workdir (hdfs://, s3a://) the local glob sees nothing, and
+        a footer can be unreadable — either way we fall back to a Spark-side
+        per-partition count + append rather than silently recording too few
+        rows."""
         import datetime
         import glob as _glob
         import uuid
@@ -143,8 +152,9 @@ class StageRunner:
         for pid, part in enumerate(sorted(_glob.glob(os.path.join(data_path, "part-*")))):
             try:
                 n = pq.ParquetFile(part).metadata.num_rows
-            except Exception:
-                continue
+            except (OSError, pa.ArrowException):
+                rows = []
+                break
             rows.append((stage, pid, n, wall_ms))
         if rows:
             os.makedirs(lineage_dir, exist_ok=True)

@@ -18,6 +18,8 @@ Span invariant preserved: ``substr(text, start_index+1, end_index-start_index)
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -27,6 +29,12 @@ from pyspark.sql import functions as F
 #: texts). Exhaustive 1..4-gram enumeration inflates text ~10×, so large
 #: mapInPandas batches of big docs can genuinely cross this.
 _UTF8_CHUNK_LIMIT = 2**31 - 1
+
+#: distinct-alias limit of the fused detector's driver-side gazetteer
+#: collect (``PipelineConfig.fused_max_aliases`` defaults to it)
+FUSED_MAX_ALIASES = 2_000_000
+
+logger = logging.getLogger(__name__)
 
 
 def _utf8_from_lens(lens, values: bytes):
@@ -235,107 +243,19 @@ def _spans_window(
     )
 
 
-def candidate_spans_narrow(
-    documents: DataFrame, max_tokens: int = 4
-) -> DataFrame:
-    """Token n-gram span candidates computed NARROWLY — zero token shuffle.
-
-    Same output contract as ``candidate_spans(tokenize_with_offsets(docs))``
-    (equivalence-tested), but the whole enumeration happens INSIDE each line
-    row: in-row prefix sums give token start offsets, ``transform`` over
-    1..max_tokens widths gives the spans. The window form shuffles and sorts
-    EVERY token row — the single largest exchange of the mention stage
-    (~10-100× the raw document bytes).
-
-    WHEN TO USE WHICH (measured, 60k pages × mult 8, this host):
-    the window form is whole-stage-codegen'd and CPU-cheaper (~2.2×:
-    higher-order-function lambdas evaluate interpreted, per element), while
-    this form trades that CPU for ZERO token-level exchange. On a single
-    shared-memory box the shuffle is a memory-bandwidth copy, so the
-    codegen'd window form wins wall-clock and stays the default in
-    ``detect_mentions``. On a multi-executor cluster the same exchange is
-    NETWORK + disk spill at 10-100× document bytes — there, eliminating it
-    buys more than the lambda overhead costs, and this operator is the
-    drop-in (``detect_mentions(..., narrow_spans=True)``).
-    """
-    lines = documents.select(
-        "document_id", F.posexplode(F.split("text", "\n")).alias("line", "_lt")
-    )
-    lw = (
-        Window.partitionBy("document_id")
-        .orderBy("line")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    # line start offsets still need one running sum — but over LINE rows
-    # (≈ documents-sized, not token-sized)
-    lines = lines.withColumn(
-        "_ls", F.coalesce(F.sum(F.length("_lt") + F.lit(1)).over(lw), F.lit(0)).cast("int")
-    )
-    # per-line token starts, built in-row from token-length prefix sums:
-    # start_i = i + Σ len(token_<i). The inner aggregate(slice(...)) makes
-    # this O(tokens²) integer adds per line — cheap next to either
-    # alternative tried: a per-char substr space scan is O(chars²) BYTE
-    # scans (UTF8 char indexing rescans from 0), and an array_append prefix
-    # scan copies the accumulator per step. No substr anywhere: span text is
-    # concat_ws over a token slice, so nothing rescans the line string.
-    prep = (
-        lines.withColumn("_tk", F.split("_lt", " "))
-        .withColumn("_lens", F.expr("transform(_tk, t -> length(t))"))
-        .withColumn(
-            "_starts",
-            F.expr(
-                "transform(sequence(0, size(_tk) - 1), "
-                "i -> CAST(i + aggregate(slice(_lens, 1, i), 0, (a, x) -> a + x) AS INT))"
-            ),
-        )
-    )
-    # spans of n consecutive tokens, n = 1..max_tokens; end of span i..i+n-1
-    # = start_{i+n-1} + len(token_{i+n-1}); guard width > token count (an
-    # unguarded descending sequence() would emit phantom spans)
-    span_arrays = ", ".join(
-        (
-            f"CASE WHEN size(_tk) >= {n} THEN transform(sequence(0, size(_tk) - {n}), "
-            f"i -> struct("
-            f"CAST(_ls + _starts[i] AS INT) AS start_index, "
-            f"CAST(_ls + _starts[i + {n - 1}] + _lens[i + {n - 1}] AS INT) AS end_index, "
-            f"concat_ws(' ', slice(_tk, i + 1, {n})) AS text)) "
-            f"ELSE CAST(array() AS ARRAY<STRUCT<start_index: INT, end_index: INT, text: STRING>>) END"
-        )
-        for n in range(1, max_tokens + 1)
-    )
-    return (
-        prep.select(
-            "document_id",
-            F.explode(F.expr(f"concat({span_arrays})")).alias("_s"),
-        )
-        .select(
-            "document_id",
-            F.col("_s.start_index").alias("start_index"),
-            F.col("_s.end_index").alias("end_index"),
-            F.col("_s.text").alias("text"),
-        )
-    )
-
-
 def candidate_spans_arrow(documents: DataFrame, max_tokens: int = 4) -> DataFrame:
     """Token n-gram span candidates via Arrow-batched numpy — zero token
-    shuffle AND C-speed enumeration (the third form; VERDICT r3 #2).
+    shuffle AND C-speed enumeration.
 
     Same output contract as ``candidate_spans(tokenize_with_offsets(docs))``
-    and ``candidate_spans_narrow`` (equivalence-tested). Shape rationale:
-
-    - the window form shuffles + sorts EVERY token row — the largest
-      exchange of the mention stage (~10-100× raw document bytes over the
-      network on a real cluster);
-    - the narrow form eliminates the shuffle but pays ~2.2× CPU because
-      higher-order-function lambdas evaluate interpreted per element
-      (measured round 3, recorded in ``candidate_spans_narrow``);
-    - this form is ``mapInPandas`` over document rows (zero shuffle, like
-      ``segmentation.segment_documents`` which proved the shape), measured
-      at ~3-10% CPU tax vs the codegen'd window form on this host (60k
-      pages × mult 8: n2 parity, n8 best-of 10.1s vs 9.1s) — so the window
-      form stays the shared-memory default, and this is the drop-in where
-      the token exchange is network (``span_mode="arrow"``).
+    (equivalence-tested). The window form shuffles + sorts EVERY token row
+    — the largest exchange of the mention stage (~10-100× raw document
+    bytes over the network on a real cluster); this form is
+    ``mapInPandas`` over document rows (zero shuffle, like
+    ``segmentation.segment_documents``), measured at ~3-10% CPU tax vs the
+    codegen'd window form (60k pages × mult 8: n2 parity, n8 best-of 10.1s
+    vs 9.1s). Its enumeration core is the one the fused detector
+    (:func:`_match_mentions_arrow`) runs at anchor positions only.
 
     Python-boundary discipline: the whole Arrow batch is enumerated as ONE
     flat numpy problem — all (ASCII) docs concatenate into a single byte
@@ -512,10 +432,7 @@ def candidate_spans_arrow(documents: DataFrame, max_tokens: int = 4) -> DataFram
 
 
 def _match_mentions_arrow(
-    documents: DataFrame,
-    gazetteer: DataFrame,
-    max_tokens: int,
-    max_collected_aliases: int | None = None,
+    documents: DataFrame, aliases, max_tokens: int
 ) -> DataFrame:
     """Fused gazetteer matcher: anchor-pruned span enumeration AND alias
     lookup inside one zero-shuffle ``mapInPandas`` pass (the "fused arrow
@@ -530,14 +447,10 @@ def _match_mentions_arrow(
     starts some alias at an allowed width — measured ~10-50× fewer span
     constructions than exhaustive enumeration on web-like text.
 
-    Laziness note: the gazetteer (KB-bounded, ≪ corpus) is collected
-    driver-side at plan-construction time — the Spark broadcast-variable
-    pattern, same trade as ``operators.similarity``'s lazy-dim fallback.
-    The collect is guarded by ``max_collected_aliases`` (default
-    ``EL_FUSED_MAX_ALIASES`` or 5,000,000 — ~hundreds of MB of driver heap
-    at web-KB alias lengths): past the limit the matcher raises instead of
-    silently betting driver memory; callers should fall back to
-    ``span_mode="window"`` (broadcast/shuffle join picks itself via AQE).
+    ``aliases`` is the driver-side pandas frame ``(a, e)`` = (raw alias,
+    min entity_id) that :func:`detect_mentions` collects, bounded, at plan
+    construction — the Spark broadcast-variable pattern, same trade as
+    ``operators.similarity``'s lazy-dim fallback.
 
     Case folding: aliases are collected RAW and folded driver-side with
     Python ``str.lower()`` — the SAME function the non-ASCII doc path
@@ -551,7 +464,6 @@ def _match_mentions_arrow(
     non-Latin scripts too (equivalence property-tested incl. Cyrillic /
     Greek final sigma / Turkish dotted-dotless I).
     """
-    import os
     from collections.abc import Iterator
 
     import numpy as np
@@ -559,30 +471,6 @@ def _match_mentions_arrow(
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    if max_collected_aliases is None:
-        max_collected_aliases = int(
-            os.environ.get("EL_FUSED_MAX_ALIASES", "5000000")
-        )
-    # raw-alias dedupe happens JVM-side (bounds the collect to distinct
-    # aliases); folding happens DRIVER-side so it uses the match-time
-    # function. limit(n+1) bounds the transferred rows even when the guard
-    # trips — the error costs one truncated collect, not an OOM. toPandas
-    # (Arrow batches) instead of row collect: 2.0s vs 12.7s at 1.2M
-    # aliases — the collect was the dominant fused fixed cost at web-KB
-    # alias counts (BENCH/SCALING_EVIDENCE.md R5-h).
-    gpdf = (
-        gazetteer.groupBy(F.col("alias").alias("a"))
-        .agg(F.min("entity_id").alias("e"))
-        .limit(max_collected_aliases + 1)
-        .toPandas()
-    )
-    if len(gpdf) > max_collected_aliases:
-        raise ValueError(
-            f"fused gazetteer matcher: >{max_collected_aliases} distinct"
-            " aliases — too large to collect driver-side; raise"
-            " EL_FUSED_MAX_ALIASES (costs driver heap) or use"
-            ' span_mode="window" (distributed gazetteer join)'
-        )
     # min(entity_id) per FOLDED alias: two-level min (per raw alias on the
     # cluster, per folded key here) == global min per folded key —
     # deterministic on colliding cross-entity aliases and identical to the
@@ -591,7 +479,7 @@ def _match_mentions_arrow(
     # the match-time folding function is unchanged; lexicographic min per
     # folded key replicates the old dict fold exactly.
     folded = (
-        pd.DataFrame({"k": gpdf["a"].fillna("").str.lower(), "e": gpdf["e"]})
+        pd.DataFrame({"k": aliases["a"].fillna("").str.lower(), "e": aliases["e"]})
         .groupby("k", sort=False)["e"].min()
     )
     alias_norms = folded.index.tolist()
@@ -811,39 +699,18 @@ def _match_mentions_arrow(
     return src.mapInPandas(gen, schema)
 
 
-SPAN_MODES = ("window", "narrow", "arrow")
-#: modes accepted by :func:`detect_mentions` — the three generic span
-#: enumerators plus "fused" (detection-only: enumeration + alias matching
-#: collapsed into one scan, no standalone span DataFrame exists)
-DETECT_MODES = SPAN_MODES + ("fused",)
-
-
-def enumerate_spans(
-    documents: DataFrame, max_tokens: int = 4, mode: str = "window"
-) -> DataFrame:
-    """Dispatch over the three equivalence-tested span enumerators."""
-    if mode == "narrow":
-        return candidate_spans_narrow(documents, max_tokens)
-    if mode == "arrow":
-        return candidate_spans_arrow(documents, max_tokens)
-    if mode == "window":
-        return candidate_spans(tokenize_with_offsets(documents), max_tokens)
-    raise ValueError(f"unknown span mode {mode!r}; one of {SPAN_MODES}")
-
-
 def detect_mentions(
     documents: DataFrame,
     gazetteer: DataFrame,
     max_tokens: int = 4,
-    longest_match: bool = True,
-    narrow_spans: bool = False,
-    span_mode: str | None = None,
+    mode: str = "window",
     anchor_prune: bool = True,
+    fused_max_aliases: int = FUSED_MAX_ALIASES,
 ) -> DataFrame:
     """Gazetteer mention detection (N1-analog + C6).
 
     gazetteer: (entity_id, alias, ...). Matching is case-insensitive exact
-    surface form. Returns
+    surface form, longest match wins. Returns
     (mention_id, document_id, start_index, end_index, text,
      gazetteer_entity_id) — gazetteer_entity_id is a *candidate* signal, not
     the final link (scoring + clustering decide downstream).
@@ -852,38 +719,50 @@ def detect_mentions(
     across reruns and parallelism levels (SURVEY.md §7.4: never
     monotonically_increasing_id).
 
-    ``span_mode`` selects the detection form: one of the three generic
-    enumerators (``"window"`` / ``"narrow"`` / ``"arrow"`` — see
-    ``enumerate_spans``) followed by the broadcast gazetteer join, or
-    ``"fused"`` (the pipeline default) which collapses enumeration + alias
-    matching into one zero-shuffle scan (:func:`_match_mentions_arrow`);
-    ``narrow_spans=True`` is the backward-compatible alias for
-    ``span_mode="narrow"``. Measured trade
-    (round 4, 60k pages × mult 8): the Arrow/numpy form has the window
-    form's CPU cost with the narrow form's zero token shuffle — see
-    ``candidate_spans_arrow`` and BENCH/SCALING_EVIDENCE.md.
+    ``mode`` picks one of two output-identical forms (equivalence-tested):
 
-    ``anchor_prune`` (default on; window mode) gates span materialization
-    on the :func:`alias_anchor_dim` necessary conditions — first token
-    starts some alias, span width in that alias set — before the span text
-    is ever built or probed. Output-identical for any gazetteer
-    (equivalence-tested); detection-only, so the generic ``enumerate_spans``
-    (N4 exhaustive enumeration) is unchanged.
+    - ``"fused"`` (the ``run_pipeline`` path): enumeration + alias matching
+      in one zero-shuffle scan (:func:`_match_mentions_arrow`). It collects
+      the distinct aliases driver-side at plan construction, bounded by
+      ``fused_max_aliases`` — past it, a driver-heap bet, so this logs the
+      fallback and builds the window form instead.
+    - ``"window"`` (the default; streaming's path, since it needs no
+      per-micro-batch driver collect): lead()-window spans joined to the
+      broadcast gazetteer. ``anchor_prune`` (default on) gates span
+      materialization on the :func:`alias_anchor_dim` necessary conditions
+      — first token starts some alias, span width in that alias set —
+      before the span text is ever built or probed; off, it is the
+      exhaustive :func:`candidate_spans` reference.
     """
-    mode = span_mode or ("narrow" if narrow_spans else "window")
-    if mode not in DETECT_MODES:
-        raise ValueError(f"unknown span mode {mode!r}; one of {DETECT_MODES}")
+    if mode not in ("fused", "window"):
+        raise ValueError(f"unknown detection mode {mode!r}; 'fused' or 'window'")
     if mode == "fused":
-        matches = _match_mentions_arrow(documents, gazetteer, max_tokens)
-    else:
-        if anchor_prune and mode == "window":
-            spans = _spans_window(
-                tokenize_with_offsets(documents),
-                max_tokens,
-                anchors=alias_anchor_dim(gazetteer, max_tokens),
+        # raw-alias dedupe happens JVM-side (bounds the collect to distinct
+        # aliases); folding happens driver-side so it uses the match-time
+        # function. limit(n+1) bounds the transferred rows even past the
+        # limit. toPandas (Arrow batches) instead of row collect: 2.0s vs
+        # 12.7s at 1.2M aliases (BENCH/SCALING_EVIDENCE.md R5-h).
+        aliases = (
+            gazetteer.groupBy(F.col("alias").alias("a"))
+            .agg(F.min("entity_id").alias("e"))
+            .limit(fused_max_aliases + 1)
+            .toPandas()
+        )
+        if len(aliases) > fused_max_aliases:
+            logger.warning(
+                "gazetteer has more than fused_max_aliases=%d distinct"
+                " aliases: falling back to the window detector",
+                fused_max_aliases,
             )
+            mode = "window"
         else:
-            spans = enumerate_spans(documents, max_tokens, mode)
+            matches = _match_mentions_arrow(documents, aliases, max_tokens)
+    if mode == "window":
+        spans = _spans_window(
+            tokenize_with_offsets(documents),
+            max_tokens,
+            anchors=alias_anchor_dim(gazetteer, max_tokens) if anchor_prune else None,
+        )
         # min(entity_id) per normalized alias — deterministic on colliding
         # cross-entity aliases (dropDuplicates would pick an arbitrary row)
         # and identical to the fused matcher's driver-side dedupe
@@ -894,26 +773,25 @@ def detect_mentions(
             F.broadcast(gaz), F.lower(spans["text"]) == gaz["_alias_norm"], "inner"
         ).drop("_alias_norm")
 
-    if longest_match:
-        # prune spans contained in a longer match of the same doc — a single
-        # window pass, not a self-join (which would evaluate the whole
-        # spans⋈gazetteer subtree twice): ordering by (start asc, end desc),
-        # a span is contained iff some PRECEDING span ends at-or-after it
-        # (preceding ⇒ starts at-or-before it; equal spans can't repeat
-        # because the gazetteer is deduped per normalized alias).
-        w = (
-            Window.partitionBy("document_id")
-            .orderBy(F.asc("start_index"), F.desc("end_index"))
-            .rowsBetween(Window.unboundedPreceding, -1)
+    # prune spans contained in a longer match of the same doc — a single
+    # window pass, not a self-join (which would evaluate the whole
+    # spans⋈gazetteer subtree twice): ordering by (start asc, end desc),
+    # a span is contained iff some PRECEDING span ends at-or-after it
+    # (preceding ⇒ starts at-or-before it; equal spans can't repeat
+    # because the gazetteer is deduped per normalized alias).
+    w = (
+        Window.partitionBy("document_id")
+        .orderBy(F.asc("start_index"), F.desc("end_index"))
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    matches = (
+        matches.withColumn("_max_prev_end", F.max("end_index").over(w))
+        .filter(
+            F.col("_max_prev_end").isNull()
+            | (F.col("_max_prev_end") < F.col("end_index"))
         )
-        matches = (
-            matches.withColumn("_max_prev_end", F.max("end_index").over(w))
-            .filter(
-                F.col("_max_prev_end").isNull()
-                | (F.col("_max_prev_end") < F.col("end_index"))
-            )
-            .drop("_max_prev_end")
-        )
+        .drop("_max_prev_end")
+    )
 
     return matches.select(
         F.concat_ws(

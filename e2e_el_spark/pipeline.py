@@ -18,7 +18,6 @@ from __future__ import annotations
 
 import hashlib
 import json
-import logging
 from dataclasses import asdict, dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -36,7 +35,7 @@ from e2e_el_spark.operators.blocking import (
     token_prefix_key,
 )
 from e2e_el_spark.operators.clustering import cluster_nodes, cluster_star_links
-from e2e_el_spark.operators.mentions import detect_mentions
+from e2e_el_spark.operators.mentions import FUSED_MAX_ALIASES, detect_mentions
 from e2e_el_spark.operators.scoring import score_pairs
 from e2e_el_spark.operators.segmentation import segment_documents
 
@@ -53,16 +52,6 @@ class PipelineConfig:
     lsh_rows_per_band: int = 2
     link_threshold: float = 0.55
     max_mention_tokens: int = 4
-    # span enumeration form for mention detection: "fused" (anchor-pruned
-    # enumeration + alias matching inside one zero-shuffle mapInPandas pass
-    # — fastest at BOTH parallelism levels measured, round 4, and the 100 TB
-    # shape: only matched mentions leave the scan; see
-    # mentions._match_mentions_arrow), "window" (codegen'd token-shuffle
-    # windows, anchor-pruned by default since round 4), "narrow" (in-row HOF
-    # prefix sums, zero shuffle at 2.2x CPU), or "arrow" (mapInPandas
-    # batch-global numpy enumeration of ALL spans + broadcast gazetteer
-    # join; the generic-N4 zero-shuffle form)
-    span_mode: str = "fused"
     # --- KB-size-aware plan decisions (round-5: the 5k-entity bench KB is
     # NOT the realistic 10^5-10^6-entity dictionary scale; these thresholds
     # switch plans instead of silently betting memory) ------------------
@@ -72,10 +61,11 @@ class PipelineConfig:
     # that is a driver+executor memory bet. Without the hint the joins
     # shuffle (AQE still picks broadcast when the actual size allows).
     broadcast_kb_max_entities: int = 200_000
-    # Above this ALIAS count the detection stage falls back from the fused
-    # matcher (plan-time driver-side gazetteer collect,
-    # mentions._match_mentions_arrow) to the distributed window-join form.
-    fused_max_aliases: int = 2_000_000
+    # Above this DISTINCT-alias count mention detection falls back from the
+    # fused matcher (plan-time driver-side gazetteer collect,
+    # mentions._match_mentions_arrow) to the distributed window-join form;
+    # the fallback is logged (mentions.detect_mentions).
+    fused_max_aliases: int = FUSED_MAX_ALIASES
     # prune near-zero tf·idf entries before the gram join (see
     # blocking.tfidf_vectors — the 100 TB hot-gram guard); None = exact
     tfidf_min_weight: float | None = 0.05
@@ -752,33 +742,21 @@ def run_pipeline(
         pages = pages.filter(F.col("lang").isin(*cfg.langs))
     documents = runner.run("01_extract", lambda: extract_documents(pages))
 
-    def _detect(docs_df: DataFrame) -> DataFrame:
-        mode = cfg.span_mode
-        if mode == "fused" and gazetteer.count() > cfg.fused_max_aliases:
-            # the fused matcher collects the gazetteer driver-side at plan
-            # construction; past the alias threshold that is a driver-heap
-            # bet, so fall back to the distributed window-join detector.
-            # The count job is KB-bounded and only paid when this stage
-            # actually computes (resume skips the whole lambda).
-            logging.getLogger(__name__).warning(
-                "gazetteer exceeds fused_max_aliases=%d: falling back to"
-                " span_mode='window' for detection", cfg.fused_max_aliases,
-            )
-            mode = "window"
-        return detect_mentions(
-            docs_df, gazetteer, cfg.max_mention_tokens, span_mode=mode
-        )
-
     def _mentions() -> DataFrame:
-        if cfg.segment_budget_chars is None:
-            return _detect(documents)
-        # W1: detect on budget-bounded segments, then translate spans back to
-        # corpus coordinates so the rest of the pipeline (and the evaluation
-        # join on (document_id, start, end)) never sees segment ids
-        segs = segment_documents(documents, cfg.segment_budget_chars)
-        m = _detect(
-            segs.select(F.col("segment_id").alias("document_id"), "text")
+        docs = documents
+        if cfg.segment_budget_chars is not None:
+            # W1: detect on budget-bounded segments, then translate spans
+            # back to corpus coordinates so the rest of the pipeline (and the
+            # evaluation join on (document_id, start, end)) never sees
+            # segment ids
+            segs = segment_documents(documents, cfg.segment_budget_chars)
+            docs = segs.select(F.col("segment_id").alias("document_id"), "text")
+        m = detect_mentions(
+            docs, gazetteer, cfg.max_mention_tokens, mode="fused",
+            fused_max_aliases=cfg.fused_max_aliases,
         )
+        if cfg.segment_budget_chars is None:
+            return m
         back = segs.select(
             F.col("segment_id"), F.col("document_id").alias("_orig"), "seg_start"
         )

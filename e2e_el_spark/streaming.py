@@ -53,7 +53,7 @@ def stream_mentions_to(
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         docs = extract_documents(batch_df)
-        # anchor-pruned window form, not span_mode="fused": the fused
+        # anchor-pruned window form, not the fused one: the fused
         # matcher collects the gazetteer driver-side at plan-build time,
         # which here would mean one extra KB job EVERY micro-batch; the
         # two forms are output-identical (equivalence-tested), so batch
@@ -106,10 +106,10 @@ def make_links_processor(
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         docs = extract_documents(batch_df)
-        # default (window-form) detection, NOT cfg.span_mode: the fused
-        # matcher collects the gazetteer at plan construction, i.e. once
-        # per MICRO-BATCH here — same rationale as stream_mentions_to.
-        # cfg.span_mode is intentionally ignored for this stage.
+        # default (window-form) detection, not run_pipeline's fused form:
+        # the fused matcher collects the gazetteer at plan construction,
+        # i.e. once per MICRO-BATCH here — same rationale as
+        # stream_mentions_to.
         mentions = detect_mentions(docs, gazetteer, cfg.max_mention_tokens)
         cands = candidate_pairs(mentions, entities, cfg, kb=kb_art)
         scored = score_candidates(cands, mentions, entities, cfg, gazetteer)

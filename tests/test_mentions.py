@@ -97,15 +97,10 @@ def _span_fixture(spark):
 
 
 def test_candidate_spans_alt_forms_equal_window_form(spark):
-    """The zero-shuffle enumerations (narrow HOF form, Arrow/numpy form) must
-    emit EXACTLY the span set of the window form (same offsets, same texts),
-    including multi-space / multi-line / unicode quirks."""
-    from e2e_el_spark.operators.mentions import (
-        candidate_spans,
-        candidate_spans_arrow,
-        candidate_spans_narrow,
-        tokenize_with_offsets,
-    )
+    """The zero-shuffle Arrow/numpy enumeration must emit EXACTLY the span
+    set of the window form (same offsets, same texts), including
+    multi-space / multi-line / unicode quirks."""
+    from e2e_el_spark.operators.mentions import candidate_spans_arrow
 
     docs = _span_fixture(spark)
     for mt in (1, 2, 4):
@@ -113,30 +108,25 @@ def test_candidate_spans_alt_forms_equal_window_form(spark):
             (r.document_id, r.start_index, r.end_index, r.text)
             for r in candidate_spans(tokenize_with_offsets(docs), mt).collect()
         )
-        for alt in (candidate_spans_narrow, candidate_spans_arrow):
-            got = sorted(
-                (r.document_id, r.start_index, r.end_index, r.text)
-                for r in alt(docs, mt).collect()
-            )
-            assert got == want, (alt.__name__, mt, got[:5], want[:5])
+        got = sorted(
+            (r.document_id, r.start_index, r.end_index, r.text)
+            for r in candidate_spans_arrow(docs, mt).collect()
+        )
+        assert got == want, (mt, got[:5], want[:5])
 
 
 def test_candidate_spans_alt_forms_substring_invariant(spark):
     # span invariant: span text == substr(doc text, start+1, end-start)
-    from e2e_el_spark.operators.mentions import (
-        candidate_spans_arrow,
-        candidate_spans_narrow,
-    )
+    from e2e_el_spark.operators.mentions import candidate_spans_arrow
 
     docs = _span_fixture(spark)
-    for alt in (candidate_spans_narrow, candidate_spans_arrow):
-        spans = alt(docs, 4).withColumnRenamed("text", "span_text")
-        joined = spans.join(docs, "document_id")
-        n_bad = joined.filter(
-            F.expr("substr(text, start_index + 1, end_index - start_index)")
-            != F.col("span_text")
-        ).count()
-        assert n_bad == 0, alt.__name__
+    spans = candidate_spans_arrow(docs, 4).withColumnRenamed("text", "span_text")
+    joined = spans.join(docs, "document_id")
+    n_bad = joined.filter(
+        F.expr("substr(text, start_index + 1, end_index - start_index)")
+        != F.col("span_text")
+    ).count()
+    assert n_bad == 0
 
 
 def test_detect_mentions_same_result_across_span_modes(spark):
@@ -148,10 +138,9 @@ def test_detect_mentions_same_result_across_span_modes(spark):
         [("e1", "amber anchor labs"), ("e2", "amber anchor"), ("e3", "today")],
         "entity_id string, alias string",
     )
-    want = sorted(map(tuple, detect_mentions(docs, gaz, span_mode="window").collect()))
-    for mode in ("narrow", "arrow", "fused"):
-        got = sorted(map(tuple, detect_mentions(docs, gaz, span_mode=mode).collect()))
-        assert got == want, mode
+    want = sorted(map(tuple, detect_mentions(docs, gaz, mode="window").collect()))
+    got = sorted(map(tuple, detect_mentions(docs, gaz, mode="fused").collect()))
+    assert got == want
 
 
 def test_detect_mentions_anchor_prune_equivalence(spark):
@@ -188,7 +177,7 @@ def test_detect_mentions_anchor_prune_equivalence(spark):
         map(tuple, detect_mentions(docs, gaz, anchor_prune=True).collect())
     )
     got_fused = sorted(
-        map(tuple, detect_mentions(docs, gaz, span_mode="fused").collect())
+        map(tuple, detect_mentions(docs, gaz, mode="fused").collect())
     )
     assert got_pruned == want
     assert got_fused == want
@@ -217,10 +206,10 @@ def test_detect_mentions_fused_non_ascii_fallback(spark):
     want = sorted(
         map(tuple, detect_mentions(docs, gaz, anchor_prune=False).collect())
     )
-    got = sorted(map(tuple, detect_mentions(docs, gaz, span_mode="fused").collect()))
+    got = sorted(map(tuple, detect_mentions(docs, gaz, mode="fused").collect()))
     assert got == want
     # the span invariant holds through the fallback: char-offset substr
-    m = detect_mentions(docs, gaz, span_mode="fused").withColumnRenamed(
+    m = detect_mentions(docs, gaz, mode="fused").withColumnRenamed(
         "text", "mtext"
     )
     bad = (
@@ -239,12 +228,12 @@ def test_detect_mentions_fused_empty_gazetteer(spark):
         [("d1", "some text here")], "document_id string, text string"
     )
     gaz = spark.createDataFrame([], "entity_id string, alias string")
-    assert detect_mentions(docs, gaz, span_mode="fused").count() == 0
+    assert detect_mentions(docs, gaz, mode="fused").count() == 0
 
 
 def test_detect_mentions_mode_equivalence_property(spark):
-    """Property: all four detection forms agree on random corpora and
-    gazetteers — words drawn from a small alphabet so aliases collide with
+    """Property: both detection forms (anchor-pruned window, fused) agree
+    with the unpruned window reference on random corpora and gazetteers — words drawn from a small alphabet so aliases collide with
     document n-grams often, plus unicode words to force the fused matcher's
     fallback, empty tokens (double spaces), newlines, and width-1..5
     aliases (5 > max_tokens exercises the never-matchable prune)."""
@@ -279,12 +268,7 @@ def test_detect_mentions_mode_equivalence_property(spark):
         want = sorted(
             map(tuple, detect_mentions(docs, gaz, anchor_prune=False).collect())
         )
-        for kw in (
-            {"anchor_prune": True},
-            {"span_mode": "fused"},
-            {"span_mode": "narrow"},
-            {"span_mode": "arrow"},
-        ):
+        for kw in ({"anchor_prune": True}, {"mode": "fused"}):
             got = sorted(map(tuple, detect_mentions(docs, gaz, **kw).collect()))
             assert got == want, (kw, texts, aliases)
 
@@ -332,10 +316,10 @@ def test_detect_mentions_mode_equivalence_non_latin(spark):
         if gaz.isEmpty():
             return
         want = sorted(
-            map(tuple, detect_mentions(docs, gaz, span_mode="window").collect())
+            map(tuple, detect_mentions(docs, gaz, mode="window").collect())
         )
         got = sorted(
-            map(tuple, detect_mentions(docs, gaz, span_mode="fused").collect())
+            map(tuple, detect_mentions(docs, gaz, mode="fused").collect())
         )
         assert got == want, (texts, aliases)
 
@@ -356,7 +340,7 @@ def test_detect_mentions_fused_cross_case_non_ascii(spark):
     for mode in ("fused", "window"):
         got = {
             (r.document_id, r.text, r.gazetteer_entity_id)
-            for r in detect_mentions(docs, gaz, span_mode=mode).collect()
+            for r in detect_mentions(docs, gaz, mode=mode).collect()
         }
         assert got == {
             ("d0", "москва", "E1"), ("d0", "сегодня", "E2"),
@@ -364,26 +348,35 @@ def test_detect_mentions_fused_cross_case_non_ascii(spark):
         }, mode
 
 
-def test_detect_mentions_fused_alias_limit(spark):
+def test_detect_mentions_fused_alias_limit(spark, caplog):
     """The fused matcher's driver-side gazetteer collect is guarded: past
-    max_collected_aliases it raises with the window-join fallback named,
-    instead of silently betting driver memory (round-4 verdict #6)."""
-    import pytest
-
-    from e2e_el_spark.operators.mentions import _match_mentions_arrow
+    fused_max_aliases distinct aliases detection falls back to the window
+    form — same output — and logs the fallback instead of silently betting
+    driver memory (round-4 verdict #6)."""
+    import logging
 
     docs = spark.createDataFrame(
-        [("d0", "a b c")], "document_id string, text string"
+        [("d0", "a alias1 c alias7\nALIAS3 b")], "document_id string, text string"
     )
     gaz = spark.createDataFrame(
-        [(f"E{i}", f"alias{i}") for i in range(10)],
+        [(f"E{i}", f"alias{i}") for i in range(10)] + [("E0", "alias0")],
         "entity_id string, alias string",
     )
-    with pytest.raises(ValueError, match="span_mode"):
-        _match_mentions_arrow(docs, gaz, 4, max_collected_aliases=5).count()
-    # at-limit passes
-    out = _match_mentions_arrow(docs, gaz, 4, max_collected_aliases=10)
-    assert out.count() == 0
+    want = sorted(map(tuple, detect_mentions(docs, gaz, mode="window").collect()))
+    assert len(want) == 3  # fixture sanity
+    logger = "e2e_el_spark.operators.mentions"
+    with caplog.at_level(logging.WARNING, logger=logger):
+        got = detect_mentions(docs, gaz, mode="fused", fused_max_aliases=9)
+    assert sorted(map(tuple, got.collect())) == want
+    assert any("falling back" in r.getMessage() for r in caplog.records)
+    # at the limit (10 distinct aliases; the duplicate row does not count)
+    # the fused form runs and nothing is logged
+    caplog.clear()
+    with caplog.at_level(logging.WARNING, logger=logger):
+        got = detect_mentions(docs, gaz, mode="fused", fused_max_aliases=10)
+    assert sorted(map(tuple, got.collect())) == want
+    assert not caplog.records
+    assert "MapInPandas" in got._jdf.queryExecution().executedPlan().toString()
 
 
 def test_detect_mentions_colliding_folded_aliases_min_entity(spark):
@@ -399,7 +392,7 @@ def test_detect_mentions_colliding_folded_aliases_min_entity(spark):
         "entity_id string, alias string",
     )
     for mode in ("fused", "window"):
-        got = detect_mentions(docs, gaz, span_mode=mode).collect()
+        got = detect_mentions(docs, gaz, mode=mode).collect()
         assert len(got) == 1, (mode, got)
         assert got[0].gazetteer_entity_id == "e1", (mode, got)
         assert got[0].text == "acme"

@@ -44,7 +44,7 @@ def test_extract_prunes_stored_text_column(spark, tmp_path):
 def test_gazetteer_join_is_broadcast(spark):
     docs = spark.createDataFrame([("d1", "alpha beta")], "document_id string, text string")
     gaz = aliases_df(spark, 20, seed=42)
-    plan = _plan(detect_mentions(docs, gaz, span_mode="window"))
+    plan = _plan(detect_mentions(docs, gaz, mode="window"))
     assert "BroadcastHashJoin" in plan, plan
 
 
@@ -58,7 +58,7 @@ def test_fused_detector_plan_has_no_pre_scan_exchange(spark):
         [("d1", "alpha beta gamma")], "document_id string, text string"
     )
     gaz = aliases_df(spark, 20, seed=42)
-    plan = _plan(detect_mentions(docs, gaz, span_mode="fused"))
+    plan = _plan(detect_mentions(docs, gaz, mode="fused"))
     assert "MapInPandas" in plan, plan
     # nothing below the python scan: no join, no explode/generate anywhere
     assert "Join" not in plan, plan
@@ -76,7 +76,7 @@ def test_anchor_pruned_window_form_gates_explode_on_anchor_join(spark):
     )
     gaz = aliases_df(spark, 20, seed=42)
     plan = _plan(
-        detect_mentions(docs, gaz, span_mode="window", anchor_prune=True)
+        detect_mentions(docs, gaz, mode="window", anchor_prune=True)
     )
     # the anchor dim is broadcast-joined on the lowered token...
     assert "_anchor_first" in plan and "BroadcastHashJoin [lower(token" in plan, plan
@@ -187,11 +187,13 @@ def test_kb_broadcast_hint_dropped_past_threshold(spark):
     assert hint_count(s_big) < hint_count(s_small)
 
 
-def test_kb_scale_plan_decisions_output_invariant(spark, tmp_path):
+def test_kb_scale_plan_decisions_output_invariant(spark, tmp_path, caplog):
     """Forcing the large-KB plan paths (shuffle KB joins + window-mode
     detection fallback) on a small input must give bit-identical clusters
     to the default broadcast/fused paths — plan decisions are performance
     only."""
+    import logging
+
     from e2e_el_spark.pipeline import PipelineConfig, run_pipeline
     from e2e_el_spark.synth import aliases_df, entities_df, pages_df
 
@@ -200,7 +202,10 @@ def test_kb_scale_plan_decisions_output_invariant(spark, tmp_path):
     gaz = aliases_df(spark, 30, seed=11)
     base = run_pipeline(spark, pages, ents, gaz, str(tmp_path / "a"))
     big_kb_cfg = PipelineConfig(broadcast_kb_max_entities=0, fused_max_aliases=0)
-    alt = run_pipeline(spark, pages, ents, gaz, str(tmp_path / "b"), big_kb_cfg)
+    with caplog.at_level(logging.WARNING, logger="e2e_el_spark.operators.mentions"):
+        alt = run_pipeline(spark, pages, ents, gaz, str(tmp_path / "b"), big_kb_cfg)
+    # the window fallback really fired (else this compares fused to fused)
+    assert any("fused_max_aliases=0" in r.getMessage() for r in caplog.records)
 
     def key(df):
         return sorted((r.mention_id, r.cluster_id) for r in df.collect())
