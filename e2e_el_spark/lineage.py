@@ -20,11 +20,14 @@ monotonically_increasing_id anywhere).
 from __future__ import annotations
 
 import json
+import logging
 import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+logger = logging.getLogger(__name__)
 
 _HAS_ICEBERG = False  # iceberg-spark-runtime jar not in this image; parquet fallback
 MARKER = "_STAGE_COMPLETE"
@@ -72,10 +75,9 @@ class StageRunner:
                 meta = {}
             if self.fingerprint is None or meta.get("fingerprint") == self.fingerprint:
                 return self._read(data_path, meta.get("schema"))
-            print(
-                f"[lineage] stage {stage}: checkpoint fingerprint "
-                f"{meta.get('fingerprint')!r} != current {self.fingerprint!r}"
-                " — recomputing"
+            logger.warning(
+                "stage %s: checkpoint fingerprint %r != current %r — recomputing",
+                stage, meta.get("fingerprint"), self.fingerprint,
             )
             # drop the stale marker BEFORE recomputing: a kill mid-recompute
             # must not leave an old marker that a rerun under the original

@@ -391,7 +391,22 @@ def candidate_pairs(
     so the per-run plan touches only surface-side work; None builds them
     inline (one count job over the KB).
     """
-    surfaces = mentions.select(F.col("text").alias("surface")).distinct().cache()
+    # Surfaces are byte-tiny (distinct strings) but every consumer explodes
+    # them 10-100× (n-grams, MinHash shingles). AQE may coalesce cached
+    # plans (session.py), and it sizes this cache by its compact bytes: one
+    # partition at 20k pages, so the explodes and every scan of the derived
+    # ``sv`` cache ran as single tasks (03_pairs median 31.5 s against 26.9 s
+    # with uncoalesced caches, 7 runs each at 20k pages × 5k entities on 4
+    # cores). An explicit-count repartition is never coalesced: the explodes
+    # keep the session's shuffle parallelism, and ``sv`` keeps a known
+    # hash(surface) partitioning, so its norm join needs no re-shuffle.
+    surfaces = (
+        mentions.select(F.col("text").alias("surface")).distinct()
+        .repartition(
+            int(mentions.sparkSession.conf.get("spark.sql.shuffle.partitions")), "surface"
+        )
+        .cache()
+    )
     vocab, ev, eb = kb if kb is not None else kb_frames(entities, cfg)
     # ``n_entities`` drives the broadcast decision on the KB-PROPORTIONAL
     # frames (entity vectors, entity blocks). Vocabulary-bounded frames

@@ -71,6 +71,17 @@ def get_spark(
             "spark.sql.adaptive.coalescePartitions.parallelismFirst",
             os.environ.get("SPARK_GRAFT_PARALLELISM_FIRST", "true"),
         )
+        # let AQE coalesce a CACHED plan's output too. Spark's default
+        # (false) freezes every .cache()/.persist() whose plan ends in an
+        # exchange at initialPartitionNum partitions, so each consumer of a
+        # few-KB cache (candidate_pairs' sv/survivors, kb_frames, dedup's
+        # candidate pairs) ran one task per frozen partition. Measured on a
+        # 4-core box, perfbench flagship_batch seed 0: 03_pairs 851 -> 66
+        # tasks, 12.7 -> 7.2 s task CPU, 14.9 -> 9.2 s wall; the streaming
+        # micro-batch 1,516 -> 107 tasks; outputs hash-identical. A cache
+        # that feeds explodes must pin its own partition count (see
+        # candidate_pairs' surfaces), or it coalesces to one task.
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # size post-shuffle partitions for the EXPLODED row counts the
         # blocking/span operators produce, not the compact pre-explode bytes

@@ -7,6 +7,7 @@ the approximation is confined to which candidates survive, never to the
 scores the downstream link threshold sees.
 """
 
+import re
 from dataclasses import replace
 
 import pytest
@@ -195,3 +196,19 @@ def test_shuffled_kb_path_equals_broadcast_path(spark, kb, surfaces_as_mentions)
     assert set(small) == set(big)
     for k, v in small.items():
         assert big[k] == pytest.approx(v, abs=1e-12), k
+
+
+def test_surfaces_keep_shuffle_parallelism(spark, kb, surfaces_as_mentions):
+    """The distinct-surface frame is byte-tiny but every consumer explodes it
+    (n-grams, MinHash shingles). It is pinned to spark.sql.shuffle.partitions
+    by an explicit-count repartition, which AQE never coalesces; sized by its
+    compact bytes the coalesced cache was one partition and every explode
+    downstream of it ran as a single task."""
+    ents, cfg, frames = kb
+    out = candidate_pairs(surfaces_as_mentions, ents, cfg, kb=frames, n_entities=N_ENT)
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    sp = spark.conf.get("spark.sql.shuffle.partitions")
+    assert re.search(
+        r"hashpartitioning\(surface#\d+, %s\), REPARTITION_BY_NUM" % sp, plan
+    ), plan

@@ -46,10 +46,13 @@ def test_resume_identical_after_kill(spark, corpus, tmp_workdir):
     assert r1 == r2
 
 
-def test_config_change_invalidates_checkpoints(spark, corpus, tmp_path):
+def test_config_change_invalidates_checkpoints(spark, corpus, tmp_path, caplog):
     """Resume must NOT serve stale stages when the config changed: rerunning
     the same workdir with a different link_threshold must re-link, so the
-    knob visibly takes effect (was: marker-only resume ignored config)."""
+    knob visibly takes effect (was: marker-only resume ignored config), and
+    each recompute is logged as a WARNING, not printed."""
+    import logging
+
     from e2e_el_spark.pipeline import PipelineConfig
 
     w = str(tmp_path / "fp")
@@ -59,10 +62,16 @@ def test_config_change_invalidates_checkpoints(spark, corpus, tmp_path):
     )
     n_loose = loose.select("cluster_id").distinct().count()
     # threshold 1.01 is unreachable → zero links → every mention a singleton
-    strict = run_pipeline(
-        spark, corpus["pages"], corpus["entities"], corpus["gazetteer"], w,
-        PipelineConfig(link_threshold=1.01),
-    )
+    with caplog.at_level(logging.WARNING, logger="e2e_el_spark.lineage"):
+        strict = run_pipeline(
+            spark, corpus["pages"], corpus["entities"], corpus["gazetteer"], w,
+            PipelineConfig(link_threshold=1.01),
+        )
+    assert any(
+        r.name == "e2e_el_spark.lineage" and r.levelno == logging.WARNING
+        and "recomputing" in r.getMessage()
+        for r in caplog.records
+    ), caplog.records
     n_strict = strict.select("cluster_id").distinct().count()
     assert n_strict == strict.count()  # all singletons
     assert n_strict > n_loose

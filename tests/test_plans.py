@@ -229,3 +229,12 @@ def test_shuffles_start_data_proportional_then_coalesce(spark):
     df = spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count()
     df.collect()
     assert df.rdd.getNumPartitions() < init
+    # ... and so does a CACHED one: with Spark's default
+    # canChangeCachedPlanOutputPartitioning=false the cache keeps all
+    # ``init`` partitions and every consumer scans it with ``init`` tasks
+    cached = spark.range(1000).groupBy((F.col("id") % 11).alias("k")).count().cache()
+    try:
+        cached.count()
+        assert cached.rdd.getNumPartitions() < init
+    finally:
+        cached.unpersist()
