@@ -75,22 +75,15 @@ def main() -> None:
     walls = []
     n_clusters = 0
     stage_walls: dict[str, float] = {}
-    # EL_CC_CHECKPOINT_DIR: reliable per-round parquet checkpoints for the
-    # CC fixpoint instead of localCheckpoint — the measured "executor-loss
-    # tolerance tax" campaign knob (clustering.connected_components)
-    cc_dir = os.environ.get("EL_CC_CHECKPOINT_DIR") or None
     for _ in range(trials):
         shutil.rmtree(workdir, ignore_errors=True)
-        if cc_dir:
-            shutil.rmtree(cc_dir, ignore_errors=True)
         t0 = time.time()
         clusters = run_pipeline(spark, pages, ents, gaz, workdir, cfg,
-                                kb_workdir=kb_dir, kb_fingerprint=kb_fp,
-                                cc_checkpoint_dir=cc_dir)
+                                kb_workdir=kb_dir, kb_fingerprint=kb_fp)
         n_clusters = clusters.count()
         walls.append(round(time.time() - t0, 2))
         # content hash (outside the timed window): campaign lines assert
-        # bit-identical output across parallelism levels / checkpoint modes
+        # bit-identical output across parallelism levels / engine versions
         # by comparing this value, not just row counts
         from pyspark.sql import functions as F  # noqa: PLC0415
 
@@ -132,7 +125,6 @@ def main() -> None:
         "pages": n_pages, "size_mult": mult, "entities": n_ents,
         "n_aliases": n_aliases, "kb_build_s": kb_build_s,
         "detect_mode": "fused" if fused_fits else "window",
-        "cc_reliable_checkpoint": bool(cc_dir),
         "clusters": n_clusters, "clusters_hash": clusters_hash,
         "walls_s": walls, "best_wall_s": best,
         "pages_per_sec": round(n_pages / best, 1),

@@ -1,18 +1,21 @@
-"""Transitive closure over the match graph (SURVEY.md §2.12).
+"""Connected components over general match graphs (SURVEY.md §2.12).
 
 The reference links each mention independently to its argmax entity
 (`/root/reference/run_E2E_exhaustive.py:570-575`); a "cluster" is the set of
-mentions sharing a predicted entity id (:584-611). This engine generalizes
-that to **connected components over the match graph** via the alternating
-large-star / small-star algorithm (Kiveris et al., "Connected Components in
-MapReduce and Beyond", SoCC'14) — a driver loop of pure DataFrame steps,
-converging in O(log n) rounds, with per-iteration ``localCheckpoint`` to
-truncate lineage (no Catalyst rule covers fixpoints; SURVEY.md §4 custom
-work #2).
+mentions sharing a predicted entity id (:584-611). That link graph is one star
+per entity, so the flagship pipeline labels it in closed form
+(``pipeline.clusters_from_links``). Graphs without that shape (q29's
+order–part graph, q49's document near-duplicate links) go through
+``connected_components`` here: the alternating large-star / small-star
+algorithm (Kiveris et al., "Connected Components in MapReduce and Beyond",
+SoCC'14) — a driver loop of pure DataFrame steps, converging in O(log n)
+rounds, with per-iteration ``localCheckpoint`` to truncate lineage (no
+Catalyst rule covers fixpoints; SURVEY.md §4 custom work #2).
 
-Node ids are 64-bit content hashes (xxhash64 of the string node key) so
-cluster assignment is deterministic across reruns and parallelism levels —
-never ``monotonically_increasing_id`` (SURVEY.md §7.4).
+Node ids are 64-bit ids supplied by the caller (content hashes, e.g.
+xxhash64 of a string key), so component labels are deterministic across
+reruns and parallelism levels — never ``monotonically_increasing_id``
+(SURVEY.md §7.4).
 """
 
 from __future__ import annotations
@@ -206,99 +209,4 @@ def connected_components(
     roots = final.select(F.col("src").alias("node"), F.col("src").alias("component"))
     return (
         members.unionAll(roots).groupBy("node").agg(F.min("component").alias("component"))
-    )
-
-
-def cluster_nodes(
-    edges_str: DataFrame, all_nodes: DataFrame | None = None,
-    src_col: str = "src_key", dst_col: str = "dst_key",
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """String-keyed wrapper: edges over string node keys → (node_key, cluster_id).
-
-    cluster_id is the xxhash64 of the component's minimum node id rendered as
-    a string — stable content-derived cluster labels. ``all_nodes`` (one
-    column ``node_key``) adds isolated nodes as singleton clusters.
-    """
-    ids = edges_str.select(
-        F.xxhash64(F.col(src_col)).alias("src"), F.xxhash64(F.col(dst_col)).alias("dst")
-    )
-    assign = connected_components(ids, checkpoint_dir=checkpoint_dir)
-    mapping = (
-        edges_str.select(F.col(src_col).alias("node_key"))
-        .unionAll(edges_str.select(F.col(dst_col).alias("node_key")))
-        .distinct()
-        .withColumn("node", F.xxhash64("node_key"))
-        .join(assign, "node", "left")
-        .select(
-            "node_key",
-            F.coalesce(F.col("component"), F.col("node")).alias("component"),
-        )
-    )
-    if all_nodes is not None:
-        extra = (
-            all_nodes.select("node_key")
-            .join(mapping.select("node_key"), "node_key", "left_anti")
-            .withColumn("component", F.xxhash64("node_key"))
-        )
-        mapping = mapping.unionByName(extra)
-    return mapping.select(
-        "node_key", F.concat(F.lit("c"), F.col("component").cast("string")).alias("cluster_id")
-    )
-
-
-def cluster_star_links(
-    edges_str: DataFrame, all_nodes: DataFrame | None = None,
-    src_col: str = "src_key", dst_col: str = "dst_key",
-) -> DataFrame:
-    """Closed-form connected components for STAR-SHAPED bipartite edge
-    sets: every ``src_col`` key occurs in exactly one edge (degree 1) and
-    the src/dst key namespaces are disjoint, so each component is one dst
-    hub plus its srcs and NO fixpoint is needed — the component label is
-    ``min(xxhash64)`` over {hub} ∪ {its srcs}, computed with one hub-keyed
-    aggregation and one hub-keyed join back. Output contract is IDENTICAL
-    to ``cluster_nodes`` on such inputs (equivalence-tested): srcs and
-    hubs both assigned ``'c' + min-hash``, ``all_nodes`` added as
-    singleton clusters.
-
-    The flagship links are star-shaped BY CONSTRUCTION: ``link_top1``
-    keeps a single argmax entity per surface, so ``mention_links`` emits
-    exactly one entity per mention and every src is a mention key while
-    every dst is an ``ENT:``-prefixed entity key. At 480k pages the
-    iterative fixpoint spent 83-160s (n8) on this trivially-starred graph
-    — all of it per-round shuffle/localCheckpoint overhead the closed
-    form does not have; a plain two-shuffle job also needs no reliable
-    checkpointing for executor-loss tolerance (Spark task retry covers
-    it), which is why this path takes no ``checkpoint_dir``.
-
-    PRECONDITION (caller-guaranteed, deliberately unchecked — verifying
-    degree-1 costs the aggregation this path exists to avoid): a src key
-    occurring with two different dst keys would silently SPLIT what the
-    fixpoint would merge. Use ``cluster_nodes`` when the edge shape is
-    not guaranteed by construction.
-    """
-    h = edges_str.select(
-        F.col(src_col).alias("_sk"), F.col(dst_col).alias("_dk"),
-        F.xxhash64(src_col).alias("_sid"), F.xxhash64(dst_col).alias("_did"),
-    )
-    hubs = h.groupBy("_dk").agg(
-        F.least(F.min("_sid"), F.min("_did")).alias("component")
-    )
-    mapping = (
-        h.select("_sk", "_dk").join(hubs, "_dk")
-        .select(F.col("_sk").alias("node_key"), "component")
-        .unionByName(hubs.select(F.col("_dk").alias("node_key"), "component"))
-        # duplicate (src, dst) edge rows collapse here; a precondition-
-        # violating src would surface as two rows rather than vanish
-        .distinct()
-    )
-    if all_nodes is not None:
-        extra = (
-            all_nodes.select("node_key")
-            .join(mapping.select("node_key"), "node_key", "left_anti")
-            .withColumn("component", F.xxhash64("node_key"))
-        )
-        mapping = mapping.unionByName(extra)
-    return mapping.select(
-        "node_key", F.concat(F.lit("c"), F.col("component").cast("string")).alias("cluster_id")
     )

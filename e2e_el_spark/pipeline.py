@@ -9,9 +9,9 @@ every join site (the reference's loop-invariant "embed the KB once" hoist,
 
 Link semantics mirror the reference: per-mention argmax candidate above a
 threshold (`/root/reference/run_E2E_exhaustive.py:536-544,570-575` — sigmoid-γ
-pruning + top-1), then clusters = connected components over the match graph,
-which reproduces "two mentions co-cluster iff linked to the same entity"
-(SURVEY.md §2.12).
+pruning + top-1), then "two mentions co-cluster iff linked to the same entity"
+(SURVEY.md §2.12). Top-1 linking makes the match graph one star per entity, so
+its connected components are computed in closed form (``clusters_from_links``).
 """
 
 from __future__ import annotations
@@ -34,7 +34,6 @@ from e2e_el_spark.operators.blocking import (
     tfidf_vectors,
     token_prefix_key,
 )
-from e2e_el_spark.operators.clustering import cluster_nodes, cluster_star_links
 from e2e_el_spark.operators.mentions import FUSED_MAX_ALIASES, detect_mentions
 from e2e_el_spark.operators.scoring import score_pairs
 from e2e_el_spark.operators.segmentation import segment_documents
@@ -114,14 +113,6 @@ class PipelineConfig:
     # prescore_keep must be ≥ 2·tfidf_topk (the final per-surface cut).
     prescore_grams: int = 8
     prescore_keep: int = 30
-    # R5-g: on the shuffled-KB path (past broadcast_kb_max_entities), prune
-    # the KB-proportional entity-vector frame by the vocab-bounded sets of
-    # grams that can actually appear on the probe side (phase 1: grams in
-    # some surface's top-prescore_grams; phase 2: grams in any surface
-    # vector) via broadcast semi-joins BEFORE the wide shuffles. Exactness
-    # is tested (test_shuffled_kb_path_equals_broadcast_path); the knob
-    # exists for campaign A/Bs, not correctness.
-    prune_kb_grams: bool = True
     # token-prefix blocks join at most this many entities per key (ordered
     # by entity_id — deterministic); the cap is the mention-entity analogue
     # of same_block_pairs' max_block_size
@@ -491,7 +482,7 @@ def candidate_pairs(
     # and the ones a top-by-weight cut excludes from sv_top. On the
     # broadcast path evh ships whole either way — prune nothing, keep the
     # plan-tested broadcast shape unchanged.
-    if kb_small or not cfg.prune_kb_grams:
+    if kb_small:
         evh_p1 = evh_p2 = evh
     else:
         sv_top = sv_top.persist()  # consumed by the prune AND the join chain
@@ -686,41 +677,37 @@ def mention_links(links: DataFrame, mentions: DataFrame) -> DataFrame:
     ).select("mention_id", "entity_id", "score")
 
 
-def clusters_from_links(
-    links: DataFrame, mentions: DataFrame, cc_checkpoint_dir: str | None = None,
-    star_fast_path: bool = True,
-) -> DataFrame:
-    """Connected components over the bipartite mention–entity match graph;
-    unlinked mentions become singleton clusters.
+def clusters_from_links(links: DataFrame, mentions: DataFrame) -> DataFrame:
+    """mention links → clusters(mention_id, document_id, start_index,
+    end_index, text, cluster_id); unlinked mentions become singletons.
 
-    The links are star-shaped by construction (``link_top1`` keeps one
-    entity per surface ⇒ one entity per mention), so the default path is
-    the closed-form ``cluster_star_links`` — one aggregation + one join
-    instead of the large-star/small-star fixpoint, identical output
-    (equivalence-tested at the operator AND this-function level). The
-    fixpoint remains reachable two ways: ``star_fast_path=False`` (edge
-    shape not guaranteed — e.g. callers feeding mention-mention links), or
-    ``cc_checkpoint_dir`` set, which makes the fixpoint's per-round
-    materialization reliable (parquet) instead of ``localCheckpoint`` for
-    multi-executor clusters where executor loss must not kill the
-    iteration (the closed form is a plain shuffle job — task retry covers
-    loss, no checkpoint mode exists for it)."""
-    edges = links.select(
-        F.col("mention_id").alias("src_key"),
-        F.concat(F.lit("ENT:"), F.col("entity_id")).alias("dst_key"),
+    Two mentions co-cluster iff they link to the same entity (SURVEY.md
+    §2.12). ``link_top1`` keeps one entity per surface, so ``links`` holds
+    at most one row per mention and the match graph is a set of stars: one
+    ``ENT:``-keyed hub per entity plus its mentions. Each star's connected-
+    component label therefore has a closed form, the minimum xxhash64 node
+    id over {hub} ∪ {its mentions}: one partial aggregation per entity_id
+    (its shuffle carries at most one row per entity per map task) and one
+    mention_id-keyed join, with no fixpoint. Broadcast vs shuffle of both joins is left to Spark's size
+    statistics.
+
+    PRECONDITION (guaranteed by construction, asserted in the e2e tests): a
+    mention with two links would appear twice here rather than merge the
+    two entities' clusters."""
+    hubs = links.groupBy("entity_id").agg(
+        F.least(
+            F.min(F.xxhash64("mention_id")),
+            F.xxhash64(F.concat(F.lit("ENT:"), F.col("entity_id"))),
+        ).alias("_component")
     )
-    nodes = mentions.select(F.col("mention_id").alias("node_key"))
-    if star_fast_path and cc_checkpoint_dir is None:
-        assign = cluster_star_links(edges, all_nodes=nodes)
-    else:
-        assign = cluster_nodes(
-            edges, all_nodes=nodes, checkpoint_dir=cc_checkpoint_dir,
-        )
+    component = F.coalesce(F.col("_component"), F.xxhash64("mention_id"))
     return (
-        assign.join(
-            mentions.select(F.col("mention_id").alias("node_key")), "node_key", "left_semi"
+        mentions.join(links.select("mention_id", "entity_id"), "mention_id", "left")
+        .join(hubs, "entity_id", "left")
+        .select(
+            "mention_id", "document_id", "start_index", "end_index", "text",
+            F.concat(F.lit("c"), component.cast("string")).alias("cluster_id"),
         )
-        .select(F.col("node_key").alias("mention_id"), "cluster_id")
     )
 
 
@@ -733,7 +720,6 @@ def run_pipeline(
     cfg: PipelineConfig | None = None,
     kb_workdir: str | None = None,
     kb_fingerprint: str | None = None,
-    cc_checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """pages → clusters(mention_id, document_id, start_index, end_index,
     text, cluster_id), with every stage checkpointed under ``workdir``.
@@ -820,14 +806,7 @@ def run_pipeline(
         "05_links",
         lambda: mention_links(link_top1(scored, cfg.link_threshold), mentions),
     )
-    clusters = runner.run(
-        "06_clusters",
-        lambda: clusters_from_links(links, mentions, cc_checkpoint_dir).join(
-            mentions.select("mention_id", "document_id", "start_index", "end_index", "text"),
-            "mention_id",
-        ).select("mention_id", "document_id", "start_index", "end_index", "text", "cluster_id"),
-    )
-    return clusters
+    return runner.run("06_clusters", lambda: clusters_from_links(links, mentions))
 
 
 def evaluate_pipeline(

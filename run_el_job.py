@@ -42,12 +42,6 @@ def main() -> None:
         help="L3: cross-encoder rerank of the top-K candidates per surface; 0 disables",
     )
     ap.add_argument(
-        "--cc-checkpoint-dir", default=None,
-        help="reliable per-round parquet checkpoints for the connected-"
-        "components fixpoint (executor-loss tolerant; default uses "
-        "localCheckpoint — fine in local mode)",
-    )
-    ap.add_argument(
         "--kb-workdir", default=None,
         help="persistent dir for the corpus-invariant KB artifacts (vocab, "
         "entity vectors, block keys) — reuse across corpus runs to skip the "
@@ -86,7 +80,6 @@ def main() -> None:
     clusters = run_pipeline(
         spark, pages, entities, gazetteer, args.workdir, cfg,
         kb_workdir=args.kb_workdir,
-        cc_checkpoint_dir=args.cc_checkpoint_dir,
     )
     n = clusters.count()
     n_clusters = clusters.select("cluster_id").distinct().count()

@@ -1,9 +1,11 @@
-"""large-star/small-star connected components (SURVEY.md §2.12)."""
+"""Connected components (SURVEY.md §2.12): the large-star/small-star
+fixpoint and the flagship closed-form star clustering."""
 
 import hypothesis.strategies as st
 from hypothesis import HealthCheck, given, settings
 
-from e2e_el_spark.operators.clustering import cluster_nodes, connected_components
+from e2e_el_spark.operators.clustering import connected_components
+from e2e_el_spark.pipeline import clusters_from_links
 
 
 def _reference_cc(edges):
@@ -110,55 +112,120 @@ def test_cc_delta_retires_early_closed_stars(spark):
     assert got == oracle
 
 
-def test_cluster_nodes_isolated_singletons(spark):
-    edges = spark.createDataFrame([("m1", "ENT:e1"), ("m2", "ENT:e1")], "src_key string, dst_key string")
-    nodes = spark.createDataFrame([("m1",), ("m2",), ("m3",)], "node_key string")
-    got = {r.node_key: r.cluster_id for r in cluster_nodes(edges, all_nodes=nodes).collect()}
-    assert got["m1"] == got["m2"]
-    assert got["m3"] != got["m1"]
-    assert set(got) == {"m1", "m2", "m3", "ENT:e1"}
-
-
-def test_cluster_star_links_equals_fixpoint(spark):
-    """Star-shaped bipartite inputs (flagship link shape): the closed-form
-    path must equal the iterative fixpoint exactly — node set, component
-    labels, singleton handling, duplicate-edge collapse."""
-    import random
-
-    from e2e_el_spark.operators.clustering import cluster_star_links
-
-    rng = random.Random(7)
-    for trial in range(3):
-        edges = [(f"m{i:03d}", f"ENT:e{rng.randrange(17)}") for i in range(120)]
-        if trial == 1:
-            edges += edges[:5]  # duplicate edges must collapse
-        nodes = [(f"m{i:03d}",) for i in range(129)]  # 9 isolated singletons
-        e = spark.createDataFrame(edges, "src_key string, dst_key string")
-        an = spark.createDataFrame(nodes, "node_key string")
-        fast = {(r.node_key, r.cluster_id)
-                for r in cluster_star_links(e, all_nodes=an).collect()}
-        slow = {(r.node_key, r.cluster_id)
-                for r in cluster_nodes(e, all_nodes=an).collect()}
-        assert fast == slow, trial
-        assert len(fast) == 129 + 17  # every mention + every hub assigned
-
-
-def test_clusters_from_links_star_path_matches_fixpoint(spark):
-    """The flagship clusters stage gives bit-equal output on both paths."""
-    from e2e_el_spark.pipeline import clusters_from_links
-
+def _links_and_mentions(spark, edges, mention_ids):
     links = spark.createDataFrame(
-        [("m1", "e1", 0.9), ("m2", "e1", 0.8), ("m3", "e2", 0.7),
-         ("m4", "e2", 0.95), ("m5", "e3", 0.99)],
+        [(m, e, 0.9) for m, e in edges],
         "mention_id string, entity_id string, score double",
     )
     mentions = spark.createDataFrame(
-        [(f"m{i}",) for i in range(1, 9)], "mention_id string"
+        [(m, "d1", i, i + 1, f"t{i}") for i, m in enumerate(mention_ids)],
+        "mention_id string, document_id string, start_index int, "
+        "end_index int, text string",
     )
-    star = {(r.mention_id, r.cluster_id)
+    return links, mentions
+
+
+def _fixpoint_clusters(links, mentions):
+    """The same labels by the iterative large-star/small-star fixpoint over
+    the mention–entity graph (mention keys and 'ENT:'-prefixed entity keys,
+    hashed as the engine hashes them); a mention absent from every edge is
+    a singleton labelled by its own id."""
+    from pyspark.sql import functions as F
+
+    edges = links.select(
+        F.xxhash64("mention_id").alias("src"),
+        F.xxhash64(F.concat(F.lit("ENT:"), "entity_id")).alias("dst"),
+    )
+    comp = {r.node: r.component for r in connected_components(edges).collect()}
+    own = {
+        r.mention_id: r.h
+        for r in mentions.select("mention_id", F.xxhash64("mention_id").alias("h")).collect()
+    }
+    return {m: f"c{comp.get(h, h)}" for m, h in own.items()}
+
+
+def test_cluster_nodes_isolated_singletons(spark):
+    """An unlinked mention is its own cluster, labelled by its own id; two
+    mentions of one entity share a cluster; one row per mention, no hub rows."""
+    from pyspark.sql import functions as F
+
+    links, mentions = _links_and_mentions(
+        spark, [("m1", "e1"), ("m2", "e1")], ["m1", "m2", "m3"]
+    )
+    got = {r.mention_id: r.cluster_id for r in clusters_from_links(links, mentions).collect()}
+    assert set(got) == {"m1", "m2", "m3"}
+    assert got["m1"] == got["m2"]
+    assert got["m3"] != got["m1"]
+    (own,) = spark.range(1).select(F.xxhash64(F.lit("m3")).alias("h")).collect()
+    assert got["m3"] == f"c{own.h}"
+
+
+def test_cluster_star_links_equals_fixpoint(spark):
+    """Star-shaped bipartite inputs (flagship link shape): the closed form
+    must equal the iterative fixpoint exactly — mention set, component
+    labels (hub minimum included) and singleton handling."""
+    import random
+
+    for trial in range(3):
+        rng = random.Random(7 + trial)
+        edges = [(f"m{i:03d}", f"e{rng.randrange(17)}") for i in range(120)]
+        mention_ids = [f"m{i:03d}" for i in range(129)]  # 9 isolated singletons
+        links, mentions = _links_and_mentions(spark, edges, mention_ids)
+        fast = {r.mention_id: r.cluster_id
+                for r in clusters_from_links(links, mentions).collect()}
+        assert fast == _fixpoint_clusters(links, mentions), trial
+        assert len(fast) == 129  # every mention assigned, once
+        assert len(set(fast.values())) == len({e for _, e in edges}) + 9
+
+
+def test_clusters_from_links_star_path_matches_fixpoint(spark):
+    """The flagship clusters stage gives bit-equal labels to the fixpoint
+    over the same links."""
+    links, mentions = _links_and_mentions(
+        spark,
+        [("m1", "e1"), ("m2", "e1"), ("m3", "e2"), ("m4", "e2"), ("m5", "e3")],
+        [f"m{i}" for i in range(1, 9)],
+    )
+    star = {r.mention_id: r.cluster_id
             for r in clusters_from_links(links, mentions).collect()}
-    fix = {(r.mention_id, r.cluster_id)
-           for r in clusters_from_links(links, mentions,
-                                        star_fast_path=False).collect()}
-    assert star == fix
+    assert star == _fixpoint_clusters(links, mentions)
     assert len(star) == 8  # m6-m8 singletons included
+    assert star["m1"] == star["m2"] != star["m3"] == star["m4"] != star["m5"]
+    assert len(set(star.values())) == 6
+
+
+@settings(max_examples=5, deadline=None, suppress_health_check=list(HealthCheck))
+@given(st.lists(st.one_of(st.none(), st.integers(0, 7)), min_size=1, max_size=40))
+def test_clusters_from_links_equals_transitive_closure(spark, linked_to):
+    """Star-shaped mention links (the flagship shape: at most one entity per
+    mention, entities with one or many mentions, unlinked mentions): every
+    mention's cluster_id is 'c' + the minimum xxhash64 node id of its
+    connected component in the mention–entity graph — the hub included —
+    and an unlinked mention is a singleton labelled by its own id."""
+    from pyspark.sql import functions as F
+
+    mention_ids = [f"m{i:02d}" for i in range(len(linked_to))]
+    edges = [(m, f"e{e}") for m, e in zip(mention_ids, linked_to) if e is not None]
+    links = spark.createDataFrame(
+        [(m, e, 0.9) for m, e in edges],
+        "mention_id string, entity_id string, score double",
+    )
+    mentions = spark.createDataFrame(
+        [(m, "d1", i, i + 1, f"t{i}") for i, m in enumerate(mention_ids)],
+        "mention_id string, document_id string, start_index int, "
+        "end_index int, text string",
+    )
+    # node ids exactly as the engine hashes them: mention keys and
+    # 'ENT:'-prefixed entity keys
+    keys = mention_ids + sorted({f"ENT:{e}" for _, e in edges})
+    node_id = {
+        r.k: r.h for r in spark.createDataFrame([(k,) for k in keys], "k string")
+        .select("k", F.xxhash64("k").alias("h")).collect()
+    }
+    cc = _reference_cc([(node_id[m], node_id[f"ENT:{e}"]) for m, e in edges])
+    want = {m: f"c{cc.get(node_id[m], node_id[m])}" for m in mention_ids}
+
+    rows = clusters_from_links(links, mentions).collect()
+    assert len(rows) == len(mention_ids)  # one row per mention, none added
+    assert {r.mention_id: r.cluster_id for r in rows} == want
+    assert all(r.text == f"t{r.start_index}" for r in rows)  # columns carried

@@ -116,6 +116,10 @@ def test_lineage_recorded_per_partition(spark, corpus, tmp_workdir):
     # per-partition counters sum to stage row counts
     total = lin.filter(F.col("stage") == "06_clusters").agg(F.sum("rows_out")).collect()[0][0]
     assert total == spark.read.parquet(os.path.join(tmp_workdir, "06_clusters", "data")).count()
+    # clusters_from_links' closed form needs at most one link per mention
+    links = spark.read.parquet(os.path.join(tmp_workdir, "05_links", "data"))
+    assert links.count() > 0
+    assert links.select("mention_id").distinct().count() == links.count()
 
 
 def test_rerun_from_scratch_deterministic(spark, corpus, tmp_path):

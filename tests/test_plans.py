@@ -238,3 +238,30 @@ def test_shuffles_start_data_proportional_then_coalesce(spark):
         assert cached.rdd.getNumPartitions() < init
     finally:
         cached.unpersist()
+
+
+def test_clusters_from_links_plan_is_one_join_chain(spark, tmp_path):
+    """06_clusters is closed form over star-shaped links: one entity_id
+    partial aggregate plus mention_id/entity_id joins. No union, anti-join
+    or semi-join of mention rows, and at most 3 shuffle exchanges (the
+    aggregate, plus both sides of the mention_id join when Spark does not
+    broadcast)."""
+    import re
+
+    from e2e_el_spark.pipeline import clusters_from_links
+
+    spark.createDataFrame(
+        [("m1", "d1", 0, 2, "ab", "e1"), ("m2", "d1", 3, 5, "cd", None)],
+        "mention_id string, document_id string, start_index int, "
+        "end_index int, text string, gazetteer_entity_id string",
+    ).write.parquet(str(tmp_path / "mentions"))
+    spark.createDataFrame(
+        [("m1", "e1", 0.9)], "mention_id string, entity_id string, score double"
+    ).write.parquet(str(tmp_path / "links"))
+    plan = _plan(clusters_from_links(
+        spark.read.parquet(str(tmp_path / "links")),
+        spark.read.parquet(str(tmp_path / "mentions")),
+    ))
+    for node in ("Union", "LeftAnti", "LeftSemi"):
+        assert node not in plan, plan
+    assert len(re.findall(r"\bExchange ", plan)) <= 3, plan

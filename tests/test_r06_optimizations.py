@@ -132,7 +132,9 @@ def test_q07_sort_runs_above_the_fan_out_exchange(spark):
     around a pre-exchange 1-task sort."""
     import __spark_entry__ as entrymod
 
-    df = entrymod.queries()["q07_topk_per_group"](spark, "/root/testdata/sf0.001")
+    from tests.test_oracle_parity import SF_DIR
+
+    df = entrymod.queries()["q07_topk_per_group"](spark, SF_DIR)
     plan = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
