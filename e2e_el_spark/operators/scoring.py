@@ -5,16 +5,16 @@ Three signals per the north star, combined as a weighted column expression
 `/root/reference/LATTE/modeling_LATTE.py:131-177`):
 
   * Jaro-Winkler surface similarity — not in the reference (its string
-    similarity is char-n-gram TF-IDF cosine, C1); pandas UDF, with Spark's
-    built-in ``levenshtein`` available as a cross-check column.
+    similarity is char-n-gram TF-IDF cosine, C1); Spark's built-in
+    ``levenshtein`` is available as a cross-check column.
   * TF-IDF cosine — computed relationally in ``blocking.cosine_topk``.
   * bi-encoder embedding dot product — the reference's dual-encoder score
     (`/root/reference/modeling_DualEncoder.py:44-66`,
     `/root/reference/modeling_E2E_exhaustive.py:147-173`); here a batched
     ``np.einsum`` over Arrow record batches. Test embeddings are
     deterministic hashed char-n-gram vectors (FIXTURES.md §7) so no model
-    weights are needed; a real encoder plugs into ``embed_udf``'s slot via
-    mapInPandas iterator form.
+    weights are needed; a real encoder plugs into ``embed_distinct``'s slot
+    inside ``pair_signals_udf``, which also computes Jaro-Winkler.
 
 No row-at-a-time Python UDFs anywhere (enforced by a test).
 """
@@ -37,7 +37,9 @@ EMB_DIM = 64
 
 
 def jaro_winkler(s1: str, s2: str, prefix_scale: float = 0.1) -> float:
-    """Plain-python Jaro-Winkler (standard published formula)."""
+    """Plain-python Jaro-Winkler (standard published formula). ``str.find``
+    picks the first unmatched occurrence in the window, as the textbook scan
+    does, so results are bit-identical to it (the oracle in the tests)."""
     if s1 == s2:
         return 1.0
     len1, len2 = len(s1), len(s2)
@@ -46,29 +48,24 @@ def jaro_winkler(s1: str, s2: str, prefix_scale: float = 0.1) -> float:
     window = max(len1, len2) // 2 - 1
     if window < 0:
         window = 0
-    match1 = [False] * len1
     match2 = [False] * len2
-    matches = 0
+    matched1 = []  # matched characters of s1, in s1 order
+    find = s2.find
     for i, c in enumerate(s1):
-        lo = max(0, i - window)
-        hi = min(len2, i + window + 1)
-        for j in range(lo, hi):
-            if not match2[j] and s2[j] == c:
-                match1[i] = True
-                match2[j] = True
-                matches += 1
-                break
+        hi = i + window + 1
+        j = find(c, i - window if i > window else 0, hi)
+        while j >= 0 and match2[j]:
+            j = find(c, j + 1, hi)
+        if j >= 0:
+            match2[j] = True
+            matched1.append(c)
+    matches = len(matched1)
     if matches == 0:
         return 0.0
     t = 0.0
-    k = 0
-    for i in range(len1):
-        if match1[i]:
-            while not match2[k]:
-                k += 1
-            if s1[i] != s2[k]:
-                t += 0.5
-            k += 1
+    for x, y in zip(matched1, [c for c, m in zip(s2, match2) if m]):
+        if x != y:
+            t += 0.5
     jaro = (matches / len1 + matches / len2 + (matches - t) / matches) / 3.0
     prefix = 0
     for a, b in zip(s1, s2):
@@ -77,15 +74,6 @@ def jaro_winkler(s1: str, s2: str, prefix_scale: float = 0.1) -> float:
         else:
             break
     return jaro + prefix * prefix_scale * (1.0 - jaro)
-
-
-@F.pandas_udf(T.DoubleType())
-def jaro_winkler_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Arrow-batched JW over string pairs (strings are short; the per-pair
-    loop runs inside one Arrow batch, not one Python call per Spark row)."""
-    return pd.Series(
-        [jaro_winkler(x or "", y or "") for x, y in zip(a, b)], dtype="float64"
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -129,21 +117,33 @@ def hash_embed_numpy(texts: "pd.Series | list[str]", dim: int = EMB_DIM) -> np.n
     return out / norms
 
 
-@F.pandas_udf(T.ArrayType(T.FloatType()))
-def embed_udf(texts: pd.Series) -> pd.Series:
-    """Arrow-batched text → ARRAY<FLOAT> embedding (mapInPandas-style slot
-    where a real model would be loaded once per executor)."""
-    m = hash_embed_numpy(texts)
-    return pd.Series(list(m.astype(np.float32)))
+def embed_distinct(texts: pd.Series) -> np.ndarray:
+    """``hash_embed_numpy`` rows for ``texts`` (None → the ''-vector),
+    hashing each distinct string once: a batch of pair rows repeats every
+    surface, alias and context window many times over."""
+    codes, uniq = pd.factorize(texts.fillna(""))
+    return hash_embed_numpy(uniq)[codes]
 
 
-@F.pandas_udf(T.DoubleType())
-def dot_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Batched dot product via one einsum per Arrow batch — the engine
-    analogue of torch.bmm (`/root/reference/modeling_DualEncoder.py:59`)."""
-    am = np.vstack(a.to_numpy())
-    bm = np.vstack(b.to_numpy())
-    return pd.Series(np.einsum("ij,ij->i", am, bm))
+# not a DDL string: parsing one needs a SparkContext, which workers lack
+@F.pandas_udf(T.StructType([
+    T.StructField("jw", T.DoubleType()), T.StructField("emb_dot", T.DoubleType())
+]))
+def pair_signals_udf(a: pd.Series, b: pd.Series) -> pd.DataFrame:
+    """Both per-pair Python signals in one Arrow pass: Jaro-Winkler per row,
+    and the bi-encoder dot of float32 embeddings — one einsum per batch, the
+    engine analogue of torch.bmm (`/root/reference/modeling_DualEncoder.py:59`).
+    A real encoder replaces ``embed_distinct`` here (load it once per
+    executor). None texts score as ''."""
+    a, b = a.fillna(""), b.fillna("")
+    e = embed_distinct(pd.concat([a, b], ignore_index=True)).astype(np.float32)
+    n = len(a)
+    return pd.DataFrame(
+        {
+            "jw": [jaro_winkler(x, y) for x, y in zip(a, b)],
+            "emb_dot": np.einsum("ij,ij->i", e[:n], e[n:]).astype(np.float64),
+        }
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -164,29 +164,12 @@ def score_pairs(
 
     ``pairs`` must carry the two surface strings; if ``tfidf_col`` is absent
     the TF-IDF component weight is redistributed to the other two signals.
+    Both Python signals run as one task per partition of ``pairs``.
     """
     w = dict(weights or DEFAULT_WEIGHTS)
-    out = pairs.withColumn("jw", jaro_winkler_udf(F.col(text_a), F.col(text_b)))
-    # embed each DISTINCT string once, then join the vectors back — the pair
-    # table repeats every surface ~topk×aliases times, so embedding per pair
-    # row would redo the (expensive) hashing that many times over. The
-    # distinct sides are far smaller than the pair table; AQE broadcasts the
-    # alias side on its own. eqNullSafe keeps the operator null-tolerant
-    # (embed_udf maps None to the empty-string vector; a plain equality join
-    # would silently DROP null-text rows).
-    ea = (
-        pairs.select(F.col(text_a).alias("_ta")).distinct()
-        .withColumn("_ea", embed_udf(F.col("_ta")))
-    )
-    eb = (
-        pairs.select(F.col(text_b).alias("_tb")).distinct()
-        .withColumn("_eb", embed_udf(F.col("_tb")))
-    )
-    out = (
-        out.join(ea, F.col(text_a).eqNullSafe(F.col("_ta"))).drop("_ta")
-        .join(eb, F.col(text_b).eqNullSafe(F.col("_tb"))).drop("_tb")
-    )
-    out = out.withColumn("emb_dot", dot_udf(F.col("_ea"), F.col("_eb"))).drop("_ea", "_eb")
+    out = pairs.withColumn(
+        "_sig", pair_signals_udf(F.col(text_a), F.col(text_b))
+    ).select(*pairs.columns, "_sig.*")
     if tfidf_col is not None and tfidf_col in pairs.columns:
         score = (
             F.col("jw") * F.lit(w["jw"])
@@ -232,8 +215,8 @@ def default_cross_scorer():
     the batch inside the returned callable."""
 
     def score(text_a: pd.Series, text_b: pd.Series) -> np.ndarray:
-        ea = hash_embed_numpy(text_a)
-        eb = hash_embed_numpy(text_b)
+        ea = embed_distinct(text_a)
+        eb = embed_distinct(text_b)
         dots = np.einsum("ij,ij->i", ea, eb)
         jws = np.array(
             [

@@ -36,7 +36,11 @@ def fan_out(
     (EnsureRequirements: HashPartitioning(k) satisfies
     ClusteredDistribution(k, ...)), so the fan-out replaces — not adds to —
     the first aggregation's shuffle. Callers pass a high-cardinality key
-    (the row id) so the hash spreads evenly.
+    (the row id) so the hash spreads evenly: at most as many partitions as
+    the key has distinct values can be non-empty, so a low-cardinality key
+    leaves cores idle however large ``target`` is (q07 keys on its window
+    key ``l_suppkey``, which fans out fully only while the suppliers
+    outnumber ``target``).
 
     ``df.rdd.getNumPartitions()`` compiles the physical plan but runs no
     job; callers apply this to raw scans where that is milliseconds.

@@ -352,6 +352,11 @@ def generated_candidates(
     return gen.select("surface", "entity_id")
 
 
+def _shuffle_partitions(df: DataFrame) -> int:
+    """``spark.sql.shuffle.partitions``: a repartition count AQE keeps."""
+    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+
+
 def candidate_pairs(
     mentions: DataFrame, entities: DataFrame, cfg: PipelineConfig,
     kb: tuple[DataFrame, DataFrame, DataFrame] | None = None,
@@ -393,9 +398,7 @@ def candidate_pairs(
     # hash(surface) partitioning, so its norm join needs no re-shuffle.
     surfaces = (
         mentions.select(F.col("text").alias("surface")).distinct()
-        .repartition(
-            int(mentions.sparkSession.conf.get("spark.sql.shuffle.partitions")), "surface"
-        )
+        .repartition(_shuffle_partitions(mentions), "surface")
         .cache()
     )
     vocab, ev, eb = kb if kb is not None else kb_frames(entities, cfg)
@@ -534,7 +537,7 @@ def candidate_pairs(
 
 
 def score_candidates(
-    cands: DataFrame, mentions: DataFrame, entities: DataFrame, cfg: PipelineConfig,
+    cands: DataFrame, entities: DataFrame, cfg: PipelineConfig,
     gazetteer: DataFrame | None = None,
     n_entities: int | None = None,
 ) -> DataFrame:
@@ -546,6 +549,11 @@ def score_candidates(
     (the reference's candidate dictionaries are alias-keyed the same way,
     `/root/reference/mention_candidates_AIDA.py:14-31`). Falls back to
     canonical names when no gazetteer is supplied.
+
+    The pairs reach the Python UDF through an explicit-count repartition
+    (as ``surfaces`` in ``candidate_pairs``): AQE would coalesce a plain
+    exchange of the one-file ``cands`` to one task. Pairs are KB-bounded
+    (surfaces <= distinct aliases), so that count fits any corpus size.
     """
     if gazetteer is not None:
         names = gazetteer.select("entity_id", F.col("alias").alias("text_b"))
@@ -555,10 +563,10 @@ def score_candidates(
     # (see candidate_pairs) — past the threshold the equi-join shuffles
     if n_entities is None or n_entities <= cfg.broadcast_kb_max_entities:
         names = F.broadcast(names)
-    pairs = cands.join(names, "entity_id").withColumn(
-        "text_a", F.col("surface")
+    pairs = cands.join(names, "entity_id").repartition(
+        _shuffle_partitions(cands), "surface"
     )
-    scored = score_pairs(pairs, "text_a", "text_b", "tfidf_cos", cfg.weights)
+    scored = score_pairs(pairs, "surface", "text_b", "tfidf_cos", cfg.weights)
     w = dict(cfg.weights)
     return (
         scored.groupBy("surface", "entity_id")
@@ -648,7 +656,11 @@ def rerank_candidates(
     cand_names = entities.select("entity_id", F.col("name").alias("_cand_text"))
     if n_entities is None or n_entities <= cfg.broadcast_kb_max_entities:
         cand_names = F.broadcast(cand_names)
-    pairs = top.join(cand_names, "entity_id")
+    # one cross-scorer task per shuffle partition, not one per checkpoint
+    # file (see score_candidates)
+    pairs = top.join(cand_names, "entity_id").repartition(
+        _shuffle_partitions(scored), "surface"
+    )
     rr = rerank_cross(
         pairs, id_col="surface", cand_col="entity_id",
         text_a=text_a, text_b="_cand_text", k=cfg.rerank_topk,
@@ -786,9 +798,7 @@ def run_pipeline(
     )
     scored = runner.run(
         "04_scored",
-        lambda: score_candidates(
-            cands, mentions, entities, cfg, gazetteer, n_entities=n_entities
-        ),
+        lambda: score_candidates(cands, entities, cfg, gazetteer, n_entities=n_entities),
     )
     if cfg.rerank_topk is not None:
         ctx = (

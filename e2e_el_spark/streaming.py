@@ -112,7 +112,7 @@ def make_links_processor(
         # stream_mentions_to.
         mentions = detect_mentions(docs, gazetteer, cfg.max_mention_tokens)
         cands = candidate_pairs(mentions, entities, cfg, kb=kb_art)
-        scored = score_candidates(cands, mentions, entities, cfg, gazetteer)
+        scored = score_candidates(cands, entities, cfg, gazetteer)
         links = mention_links(link_top1(scored, cfg.link_threshold), mentions)
         if epoch_idempotent:
             links.write.mode("overwrite").parquet(f"{out_path}/_epoch={epoch_id}")

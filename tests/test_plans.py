@@ -182,8 +182,8 @@ def test_kb_broadcast_hint_dropped_past_threshold(spark):
     assert all("Join LeftSemi" in line for line in big_hints), big_hints
 
     cands = small.limit(5)
-    s_small = score_candidates(cands, mentions, ents, cfg, gaz, n_entities=30)
-    s_big = score_candidates(cands, mentions, ents, cfg, gaz, n_entities=10**9)
+    s_small = score_candidates(cands, ents, cfg, gaz, n_entities=30)
+    s_big = score_candidates(cands, ents, cfg, gaz, n_entities=10**9)
     assert hint_count(s_big) < hint_count(s_small)
 
 
@@ -265,3 +265,63 @@ def test_clusters_from_links_plan_is_one_join_chain(spark, tmp_path):
     for node in ("Union", "LeftAnti", "LeftSemi"):
         assert node not in plan, plan
     assert len(re.findall(r"\bExchange ", plan)) <= 3, plan
+
+
+def _python_stage_inputs(spark, tmp_path):
+    """Parquet-backed (one file each, like the stage checkpoints) candidate
+    pairs, scored pairs, entities and gazetteer."""
+    from e2e_el_spark.synth import entities_df
+
+    ents = entities_df(spark, 12, seed=4)
+    gaz = aliases_df(spark, 12, seed=4)
+    cands = gaz.select(
+        F.col("alias").alias("surface"), "entity_id", F.lit(0.5).alias("tfidf_cos")
+    )
+    scored = cands.withColumn("score", F.lit(0.5))
+    frames = {"ents": ents, "gaz": gaz, "cands": cands, "scored": scored}
+    for name, df in frames.items():
+        df.coalesce(1).write.parquet(str(tmp_path / name))
+    return {name: spark.read.parquet(str(tmp_path / name)) for name in frames}
+
+
+def test_scoring_python_runs_over_shuffle_partitions(spark, tmp_path):
+    """04_scored reads its pair table once, into ONE ArrowEvalPython (both
+    Python signals fused, no embedding side-joins on <=>), fed by an
+    explicit-count hash exchange on surface that AQE does not coalesce (the
+    executed plan keeps shuffle.partitions partitions). Over
+    a one-file checkpoint a plain exchange coalesced to one partition and
+    the Python UDF ran as one task."""
+    import re
+
+    from e2e_el_spark.pipeline import PipelineConfig, score_candidates
+
+    t = _python_stage_inputs(spark, tmp_path)
+    out = score_candidates(t["cands"], t["ents"], PipelineConfig(), t["gaz"])
+    out.collect()
+    plan = _plan(out).split("== Initial Plan ==")[0]
+    sp = spark.conf.get("spark.sql.shuffle.partitions")
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert "<=>" not in plan, plan
+    assert re.search(
+        r"hashpartitioning\(surface#\d+, %s\), REPARTITION_BY_NUM" % sp, plan
+    ), plan
+
+
+def test_rerank_python_runs_over_shuffle_partitions(spark, tmp_path):
+    """04b_rerank's cross-scorer MapInPandas sits directly above the same
+    explicit-count hash exchange on surface."""
+    import re
+
+    from e2e_el_spark.pipeline import PipelineConfig, rerank_candidates
+
+    t = _python_stage_inputs(spark, tmp_path)
+    out = rerank_candidates(t["scored"], t["ents"], PipelineConfig(rerank_topk=3))
+    out.collect()
+    plan = _plan(out).split("== Initial Plan ==")[0]
+    sp = spark.conf.get("spark.sql.shuffle.partitions")
+    below = plan.split("MapInPandas", 1)[1]
+    first_exchange = next(line for line in below.splitlines() if "Exchange" in line)
+    assert re.search(
+        r"hashpartitioning\(surface#\d+, %s\), REPARTITION_BY_NUM" % sp,
+        first_exchange,
+    ), plan

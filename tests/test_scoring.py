@@ -1,14 +1,70 @@
 """Scoring UDFs: Jaro-Winkler vs known values, hashed embeddings, combined
 score, and the no-per-row-Python policy (SURVEY.md §7.4)."""
 
+import hypothesis.strategies as st
 import numpy as np
 import pytest
+from hypothesis import given, settings
 from pyspark.sql import functions as F
 
 from e2e_el_spark.operators.scoring import (
     hash_embed_numpy,
     jaro_winkler,
     score_pairs,
+)
+
+
+def _jaro_winkler_loop(s1: str, s2: str, prefix_scale: float = 0.1) -> float:
+    """Oracle: the textbook Jaro-Winkler, its match scan a Python loop over
+    each character's window of s2."""
+    if s1 == s2:
+        return 1.0
+    len1, len2 = len(s1), len(s2)
+    if len1 == 0 or len2 == 0:
+        return 0.0
+    window = max(len1, len2) // 2 - 1
+    if window < 0:
+        window = 0
+    match1 = [False] * len1
+    match2 = [False] * len2
+    matches = 0
+    for i, c in enumerate(s1):
+        lo = max(0, i - window)
+        hi = min(len2, i + window + 1)
+        for j in range(lo, hi):
+            if not match2[j] and s2[j] == c:
+                match1[i] = True
+                match2[j] = True
+                matches += 1
+                break
+    if matches == 0:
+        return 0.0
+    t = 0.0
+    k = 0
+    for i in range(len1):
+        if match1[i]:
+            while not match2[k]:
+                k += 1
+            if s1[i] != s2[k]:
+                t += 0.5
+            k += 1
+    jaro = (matches / len1 + matches / len2 + (matches - t) / matches) / 3.0
+    prefix = 0
+    for a, b in zip(s1, s2):
+        if a == b and prefix < 4:
+            prefix += 1
+        else:
+            break
+    return jaro + prefix * prefix_scale * (1.0 - jaro)
+
+
+# small alphabets force repeated characters (the match-scan's skip-already-
+# matched path); the others mix scripts: Cyrillic, Greek, CJK, emoji
+_JW_TEXT = st.one_of(
+    st.text(alphabet="ab", max_size=12),
+    st.text(alphabet="abc de", max_size=24),
+    st.text(alphabet="aбвгαβγ中文字😀👍 ", max_size=24),
+    st.text(max_size=16),
 )
 
 
@@ -31,6 +87,42 @@ def test_jaro_winkler_known_values(a, b, expected):
 def test_jaro_winkler_symmetric():
     for a, b in [("amber anchor", "amber anchr"), ("x", "xyz"), ("spark", "spork")]:
         assert jaro_winkler(a, b) == pytest.approx(jaro_winkler(b, a))
+
+
+@settings(max_examples=400, deadline=None)
+@given(_JW_TEXT, _JW_TEXT)
+def test_jaro_winkler_equals_textbook_loop(a, b):
+    """Bit-identical, not approximately equal: the str.find match scan must
+    pick the same matches and run the same float expressions."""
+    assert jaro_winkler(a, b) == _jaro_winkler_loop(a, b)
+    assert jaro_winkler(b, a) == _jaro_winkler_loop(b, a)
+    assert jaro_winkler(a, a + b) == _jaro_winkler_loop(a, a + b)
+
+
+def test_pair_signals_equal_per_row_signals(spark):
+    """The fused UDF's (jw, emb_dot) equal per-row jaro_winkler and the dot
+    of float32 hash_embed_numpy rows, None texts scoring as ''. Texts repeat
+    across rows, so the batch's distinct-string embedding is exercised."""
+    texts_a = ["amber anchor labs", "amber anchor labs", None, "nimbus", "Амбер",
+               "αβγ labs", "", "中文字", "amber anchor labs"]
+    texts_b = ["amber anchor lab", "zzz corp", "beta", None, "амбер",
+               "αβγ lab", "", "中文", "amber anchor labs"]
+    rows = [(str(i), x, y) for i, (x, y) in enumerate(zip(texts_a, texts_b))]
+    pairs = spark.createDataFrame(rows, "pid string, text_a string, text_b string")
+    got = {
+        r.pid: (r.jw, r.emb_dot)
+        for r in score_pairs(pairs.repartition(3), tfidf_col=None).collect()
+    }
+    a = [x or "" for x in texts_a]
+    b = [y or "" for y in texts_b]
+    ea = hash_embed_numpy(a).astype(np.float32)
+    eb = hash_embed_numpy(b).astype(np.float32)
+    dots = np.einsum("ij,ij->i", ea, eb)
+    want = {
+        str(i): (jaro_winkler(x, y), float(d))
+        for i, (x, y, d) in enumerate(zip(a, b, dots))
+    }
+    assert got == want
 
 
 def test_hash_embed_properties():
@@ -123,8 +215,8 @@ def test_rerank_cross_deterministic_and_custom_scorer(spark):
 
 
 def test_score_pairs_keeps_null_text_rows(spark):
-    """The embed-per-distinct-string join must not silently drop rows whose
-    text is NULL (eqNullSafe join; embed_udf maps None to the ''-vector)."""
+    """Rows whose text is NULL must not be dropped (pair_signals_udf scores
+    None as '')."""
     from e2e_el_spark.operators.scoring import score_pairs
 
     pairs = spark.createDataFrame(

@@ -220,7 +220,7 @@ def test_stream_links_parity_with_batch_backfill(spark, tmp_path):
     docs = extract_documents(pages)
     mentions = detect_mentions(docs, gaz, cfg.max_mention_tokens)
     cands = candidate_pairs(mentions, ents, cfg, kb=kb_frames(ents, cfg))
-    scored = score_candidates(cands, mentions, ents, cfg, gaz)
+    scored = score_candidates(cands, ents, cfg, gaz)
     want = sorted(
         (r.mention_id, r.entity_id, round(r.score, 9))
         for r in mention_links(link_top1(scored, cfg.link_threshold), mentions).collect()
