@@ -33,12 +33,6 @@ def unique_metric_name(prefix: str) -> str:
     return f"{prefix}#{next(_metric_counter)}"
 
 
-def normalize_text(col: Column | str) -> Column:
-    """Lowercase + collapse whitespace (P1, `/root/reference/candidate_selection.py:106-110`)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(F.lower(F.trim(c)), r"\s+", " ")
-
-
 def remove_stopwords_expr(text_col: str, stopwords: list[str] | None = None) -> str:
     """SQL expr: whitespace-tokenize, drop stopwords, re-join with spaces.
 

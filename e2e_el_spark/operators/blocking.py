@@ -14,7 +14,8 @@ Representation is *sparse-relational*: a vector is rows (id, gram, weight) —
 never a padded dense matrix (the reference's 100000-wide numpy rows are a
 single-node artifact). The cosine is a join on the gram key + hash
 aggregation: exactly the shuffle Catalyst handles well, and the hot-gram skew
-site where we salt (SURVEY.md §4 custom work #1).
+site (SURVEY.md §4 custom work #1) that ``tfidf_vectors``' ``min_weight``
+prune guards.
 
 MinHash here is built-ins only: k independent xxhash64 seeds, min() per key —
 no UDF, fully codegen'd.
@@ -43,31 +44,6 @@ def token_prefix_key(text_col: str, k: int = 4):
 
 def with_block_key(df: DataFrame, text_col: str = "text", k: int = 4) -> DataFrame:
     return df.withColumn("block_key", token_prefix_key(text_col, k))
-
-
-def salt_block_key(
-    df: DataFrame, key_col: str = "block_key", id_col: str = "mention_id",
-    max_block_size: int = 1000, salt_buckets: int = 16,
-) -> DataFrame:
-    """Explicit skew salting (SURVEY.md §4 custom work #1).
-
-    Keys whose frequency exceeds ``max_block_size`` (measured by a
-    key-frequency sketch aggregated engine-side) get a deterministic salt
-    ``pmod(xxhash64(id), S)`` appended, splitting the hot block into S
-    sub-blocks. AQE's skew-join splitting alone does not bound the *pair
-    explosion* of a self-join — salting does.
-    """
-    freq = df.groupBy(key_col).agg(F.count("*").alias("_key_freq"))
-    out = df.join(F.broadcast(freq), key_col, "left")
-    salted = F.when(
-        F.col("_key_freq") > max_block_size,
-        F.concat_ws(
-            "#",
-            F.col(key_col),
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt_buckets)).cast("string"),
-        ),
-    ).otherwise(F.col(key_col))
-    return out.withColumn(key_col, salted).drop("_key_freq")
 
 
 # ---------------------------------------------------------------------------

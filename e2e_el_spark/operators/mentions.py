@@ -6,11 +6,11 @@ span enumeration (`/root/reference/modeling_E2E_exhaustive.py:61-133`,
 engine's detector is a **dictionary/gazetteer matcher expressed as DataFrame
 transforms**: tokenize with character offsets (window cumulative sums), build
 token n-gram span candidates with ``lead()`` windows, equi-join against the
-broadcast alias gazetteer (C6: exact surface-form lookup,
+alias gazetteer (C6: exact surface-form lookup,
 `/root/reference/mention_candidates_AIDA.py:14-31`), then drop spans strictly
 contained in a longer match. Zero Python in the loop — every step is
-codegen'd Columns; the skew-heavy step (the gazetteer join) broadcasts the
-small side.
+codegen'd Columns; Spark's size rule broadcasts the gazetteer while it is
+small.
 
 Span invariant preserved: ``substr(text, start_index+1, end_index-start_index)
 == text`` of the mention (`/root/reference/utils_E2E_exhaustive.py:92-94`).
@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 _UTF8_CHUNK_LIMIT = 2**31 - 1
 
 #: distinct-alias limit of the fused detector's driver-side gazetteer
-#: collect (``PipelineConfig.fused_max_aliases`` defaults to it)
+#: collect (``detect_mentions(fused_max_aliases=)`` defaults to it)
 FUSED_MAX_ALIASES = 2_000_000
 
 logger = logging.getLogger(__name__)
@@ -728,10 +728,12 @@ def detect_mentions(
       fallback and builds the window form instead.
     - ``"window"`` (the default; streaming's path, since it needs no
       per-micro-batch driver collect): lead()-window spans joined to the
-      broadcast gazetteer. ``anchor_prune`` (default on) gates span
-      materialization on the :func:`alias_anchor_dim` necessary conditions
-      — first token starts some alias, span width in that alias set —
-      before the span text is ever built or probed; off, it is the
+      gazetteer, broadcast or shuffled by Spark's size rule (no hint: past
+      ``fused_max_aliases`` a forced broadcast would gather the very table
+      the fallback exists not to gather). ``anchor_prune`` (default on)
+      gates span materialization on the :func:`alias_anchor_dim` necessary
+      conditions — first token starts some alias, span width in that alias
+      set — before the span text is ever built or probed; off, it is the
       exhaustive :func:`candidate_spans` reference.
     """
     if mode not in ("fused", "window"):
@@ -770,7 +772,7 @@ def detect_mentions(
             F.lower(F.col("alias")).alias("_alias_norm")
         ).agg(F.min("entity_id").alias("gazetteer_entity_id"))
         matches = spans.join(
-            F.broadcast(gaz), F.lower(spans["text"]) == gaz["_alias_norm"], "inner"
+            gaz, F.lower(spans["text"]) == gaz["_alias_norm"], "inner"
         ).drop("_alias_norm")
 
     # prune spans contained in a longer match of the same doc — a single

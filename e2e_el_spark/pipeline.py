@@ -3,9 +3,12 @@
     pages → EXTRACT → documents → MENTIONS → BLOCK → PAIRS → LINKS → CLUSTER
 
 Each stage is a checkpointed table (``lineage.StageRunner``) so a killed run
-resumes mid-pipeline. The KB (entities/gazetteer) is a broadcast dimension at
-every join site (the reference's loop-invariant "embed the KB once" hoist,
-`/root/reference/run_DualEncoder.py:306-322`, becomes ``F.broadcast``).
+resumes mid-pipeline. The KB (entities/gazetteer) is a dimension at every join
+site; Spark's own size rule (optimizer estimate against
+``spark.sql.autoBroadcastJoinThreshold``, re-decided by AQE at runtime) picks
+broadcast or shuffle for every KB-proportional join, so a small KB still ships
+once per executor (the reference's loop-invariant "embed the KB once" hoist in
+its dual-encoder runner) and a large one shuffles.
 
 Link semantics mirror the reference: per-mention argmax candidate above a
 threshold (`/root/reference/run_E2E_exhaustive.py:536-544,570-575` — sigmoid-γ
@@ -34,7 +37,7 @@ from e2e_el_spark.operators.blocking import (
     tfidf_vectors,
     token_prefix_key,
 )
-from e2e_el_spark.operators.mentions import FUSED_MAX_ALIASES, detect_mentions
+from e2e_el_spark.operators.mentions import detect_mentions
 from e2e_el_spark.operators.scoring import score_pairs
 from e2e_el_spark.operators.segmentation import segment_documents
 
@@ -51,20 +54,6 @@ class PipelineConfig:
     lsh_rows_per_band: int = 2
     link_threshold: float = 0.55
     max_mention_tokens: int = 4
-    # --- KB-size-aware plan decisions (round-5: the 5k-entity bench KB is
-    # NOT the realistic 10^5-10^6-entity dictionary scale; these thresholds
-    # switch plans instead of silently betting memory) ------------------
-    # Above this entity count the KB frames (entity TF-IDF vectors, block
-    # keys, alias names) lose their F.broadcast hints: a 10^6-entity KB's
-    # vector frame is tens of millions of rows, and a forced broadcast of
-    # that is a driver+executor memory bet. Without the hint the joins
-    # shuffle (AQE still picks broadcast when the actual size allows).
-    broadcast_kb_max_entities: int = 200_000
-    # Above this DISTINCT-alias count mention detection falls back from the
-    # fused matcher (plan-time driver-side gazetteer collect,
-    # mentions._match_mentions_arrow) to the distributed window-join form;
-    # the fallback is logged (mentions.detect_mentions).
-    fused_max_aliases: int = FUSED_MAX_ALIASES
     # prune near-zero tf·idf entries before the gram join (see
     # blocking.tfidf_vectors — the 100 TB hot-gram guard); None = exact
     tfidf_min_weight: float | None = 0.05
@@ -357,10 +346,17 @@ def _shuffle_partitions(df: DataFrame) -> int:
     return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
 
+def _broadcastable(df: DataFrame) -> bool:
+    """Spark's own broadcast rule: the optimizer's size estimate of ``df``
+    is within ``spark.sql.autoBroadcastJoinThreshold`` (-1: never)."""
+    qe = df._jdf.queryExecution()
+    size = qe.optimizedPlan().stats().sizeInBytes()
+    return 0 <= size <= qe.sparkSession().sessionState().conf().autoBroadcastJoinThreshold()
+
+
 def candidate_pairs(
     mentions: DataFrame, entities: DataFrame, cfg: PipelineConfig,
     kb: tuple[DataFrame, DataFrame, DataFrame] | None = None,
-    n_entities: int | None = None,
 ) -> DataFrame:
     """BLOCK + PAIRS at SURFACE level: (surface, entity_id, tfidf_cos).
 
@@ -378,10 +374,10 @@ def candidate_pairs(
     before the final per-surface top-2k cut (see the ``prescore_*`` config
     rationale — the single-phase exact rescore was 52% of the stage wall at
     a 100k-entity KB).
-    The entity side of every block join is broadcast while the KB is the
-    small dimension (SURVEY.md §1.3) — past
-    ``cfg.broadcast_kb_max_entities`` the KB-proportional frames drop the
-    hint and shuffle instead (see the ``kb_small`` note in the body).
+    The KB-proportional sides (entity blocks, entity vectors) carry no
+    broadcast hint: Spark's size rule broadcasts them while the KB is the
+    small dimension (SURVEY.md §1.3) and shuffles them past it. Only the
+    vocabulary-bounded frames (rare grams, distinct gram hashes) are hinted.
     ``kb`` takes precomputed
     (vocab, entity_vectors, entity_blocks) — see ``build_kb_artifacts`` —
     so the per-run plan touches only surface-side work; None builds them
@@ -402,13 +398,6 @@ def candidate_pairs(
         .cache()
     )
     vocab, ev, eb = kb if kb is not None else kb_frames(entities, cfg)
-    # ``n_entities`` drives the broadcast decision on the KB-PROPORTIONAL
-    # frames (entity vectors, entity blocks). Vocabulary-bounded frames
-    # (rare grams, distinct gram hashes — capped at cfg.vocab_size) stay
-    # broadcast at ANY KB size. None (size unknown: streaming/legacy
-    # callers) keeps the historical broadcast-the-KB behavior.
-    kb_small = n_entities is None or n_entities <= cfg.broadcast_kb_max_entities
-    _kb_side = F.broadcast if kb_small else (lambda df: df)
     sv = tfidf_vectors(
         surfaces, "surface", "surface", vocab, cfg.ngram_max, cfg.compat_ngrams,
         min_weight=cfg.tfidf_min_weight,
@@ -428,7 +417,7 @@ def candidate_pairs(
     sb = mention_block_keys(
         surfaces.select(F.col("surface").alias("mention_id"), F.col("surface").alias("text")), cfg
     ).select(F.col("mention_id").alias("surface"), "block_key")
-    blocked = sb.join(_kb_side(eb), "block_key").select("surface", "entity_id")
+    blocked = sb.join(eb, "block_key").select("surface", "entity_id")
 
     # ``cands`` has exactly ONE consumer (the phase-1 left-join chain) since
     # the ranking window moved onto the agg output — no persist needed.
@@ -446,8 +435,8 @@ def candidate_pairs(
     # in-row dot degenerates to O(|grams|²) string compares per pair.)
     # Surface grams that appear in NO entity vector contribute 0 to every
     # dot — a broadcast semi-join drops them map-side BEFORE any wide
-    # cands⋈sv intermediate exists; the ev side itself broadcasts while the
-    # KB is small, so the only shuffles left are the partial-agg groupBys.
+    # cands⋈sv intermediate exists; while Spark broadcasts the ev side, the
+    # only shuffles left are the partial-agg groupBys.
     evh = ev.select("entity_id", F.xxhash64("gram").alias("_gh"), F.col("weight").alias("_ew"))
     svh = sv.select("surface", F.xxhash64("gram").alias("_gh"), "weight")
     sv_r = svh.join(F.broadcast(evh.select("_gh").distinct()), "_gh", "left_semi")
@@ -473,19 +462,19 @@ def candidate_pairs(
         .filter(F.col("_tw") <= cfg.prescore_grams)
         .drop("_tw")
     )
-    # On the shuffled-KB path the entity-vector frame is KB-proportional
-    # (77M rows at 10^6 entities — BENCH/SCALING_EVIDENCE.md R5-f, where
-    # 03_pairs was 81% of the job wall) while the set of grams that can
-    # EVER participate in a join is vocab-bounded (<= cfg.vocab_size 8-byte
-    # hashes): phase 1 only probes grams in some surface's top-
-    # prescore_grams set, phase 2 only grams present in a surface vector at
-    # all. Two broadcast semi-joins drop every other entity row map-side
-    # BEFORE evh enters the wide shuffles. The win compounds because common
-    # (low-IDF) grams are precisely the ones with the LARGEST posting lists
-    # and the ones a top-by-weight cut excludes from sv_top. On the
-    # broadcast path evh ships whole either way — prune nothing, keep the
-    # plan-tested broadcast shape unchanged.
-    if kb_small:
+    # When Spark would shuffle evh (its size estimate is past the broadcast
+    # threshold), the entity-vector frame is KB-proportional (77M rows at
+    # 10^6 entities — BENCH/SCALING_EVIDENCE.md R5-f, where 03_pairs was 81%
+    # of the job wall) while the set of grams that can EVER participate in
+    # a join is vocab-bounded (<= cfg.vocab_size 8-byte hashes): phase 1
+    # only probes grams in some surface's top-prescore_grams set, phase 2
+    # only grams present in a surface vector at all. Two broadcast
+    # semi-joins drop every other entity row map-side BEFORE evh enters the
+    # wide shuffles. The win compounds because common (low-IDF) grams are
+    # precisely the ones with the LARGEST posting lists and the ones a
+    # top-by-weight cut excludes from sv_top. A broadcast evh ships whole
+    # either way: prune nothing (the prunes cost jobs and tasks there).
+    if _broadcastable(evh):
         evh_p1 = evh_p2 = evh
     else:
         sv_top = sv_top.persist()  # consumed by the prune AND the join chain
@@ -500,7 +489,7 @@ def candidate_pairs(
     # grams match no entity row keeps null _ew. Both sum to null → 0.0.
     pre = (
         cands.join(sv_top, "surface", "left")
-        .join(_kb_side(evh_p1), ["entity_id", "_gh"], "left")
+        .join(evh_p1, ["entity_id", "_gh"], "left")
         .groupBy("surface", "entity_id")
         .agg(F.coalesce(
             F.sum(F.col("weight") * F.col("_ew")), F.lit(0.0)
@@ -519,7 +508,7 @@ def candidate_pairs(
     # |cands| × grams-per-surface.
     rescored = (
         survivors.join(sv_r, "surface")
-        .join(_kb_side(evh_p2), ["entity_id", "_gh"])
+        .join(evh_p2, ["entity_id", "_gh"])
         .groupBy("surface", "entity_id")
         .agg(F.sum(F.col("weight") * F.col("_ew")).alias("tfidf_cos"))
     )
@@ -539,12 +528,11 @@ def candidate_pairs(
 def score_candidates(
     cands: DataFrame, entities: DataFrame, cfg: PipelineConfig,
     gazetteer: DataFrame | None = None,
-    n_entities: int | None = None,
 ) -> DataFrame:
     """Vectorized scoring UDFs per (surface, entity) pair + weighted combine.
 
     The surface is compared against EVERY known alias of the candidate
-    entity (broadcast gazetteer) and the per-entity max is kept — an exact
+    entity (gazetteer join) and the per-entity max is kept — an exact
     alias hit scores jw = emb_dot = 1 even when the canonical name differs
     (the reference's candidate dictionaries are alias-keyed the same way,
     `/root/reference/mention_candidates_AIDA.py:14-31`). Falls back to
@@ -559,10 +547,6 @@ def score_candidates(
         names = gazetteer.select("entity_id", F.col("alias").alias("text_b"))
     else:
         names = entities.select("entity_id", F.col("name").alias("text_b"))
-    # alias table is KB-proportional: broadcast only while the KB is small
-    # (see candidate_pairs) — past the threshold the equi-join shuffles
-    if n_entities is None or n_entities <= cfg.broadcast_kb_max_entities:
-        names = F.broadcast(names)
     pairs = cands.join(names, "entity_id").repartition(
         _shuffle_partitions(cands), "surface"
     )
@@ -627,7 +611,6 @@ def surface_context_windows(
 def rerank_candidates(
     scored: DataFrame, entities: DataFrame, cfg: PipelineConfig,
     context: DataFrame | None = None,
-    n_entities: int | None = None,
 ) -> DataFrame:
     """L3 stage: cross-encode the top-N candidates per surface against the
     candidate's canonical entity text and blend the scores
@@ -654,8 +637,6 @@ def rerank_candidates(
     else:
         text_a = "surface"
     cand_names = entities.select("entity_id", F.col("name").alias("_cand_text"))
-    if n_entities is None or n_entities <= cfg.broadcast_kb_max_entities:
-        cand_names = F.broadcast(cand_names)
     # one cross-scorer task per shuffle partition, not one per checkpoint
     # file (see score_candidates)
     pairs = top.join(cand_names, "entity_id").repartition(
@@ -746,10 +727,8 @@ def run_pipeline(
     cfg = cfg or PipelineConfig()
     runner = StageRunner(spark, workdir, fingerprint=cfg.fingerprint())
     # one KB hash job per run (skipped when the caller passes the cached
-    # fingerprint of a frozen KB) — it also yields the entity COUNT that
-    # drives every KB-size plan decision below
+    # fingerprint of a frozen KB)
     kb_fp = kb_fingerprint or kb_content_fingerprint(entities)
-    n_entities = int(kb_fp.split(":", 1)[0])
 
     if cfg.langs is not None:
         pages = pages.filter(F.col("lang").isin(*cfg.langs))
@@ -764,10 +743,7 @@ def run_pipeline(
             # segment ids
             segs = segment_documents(documents, cfg.segment_budget_chars)
             docs = segs.select(F.col("segment_id").alias("document_id"), "text")
-        m = detect_mentions(
-            docs, gazetteer, cfg.max_mention_tokens, mode="fused",
-            fused_max_aliases=cfg.fused_max_aliases,
-        )
+        m = detect_mentions(docs, gazetteer, cfg.max_mention_tokens, mode="fused")
         if cfg.segment_budget_chars is None:
             return m
         back = segs.select(
@@ -794,11 +770,11 @@ def run_pipeline(
     )
     cands = runner.run(
         "03_pairs",
-        lambda: candidate_pairs(mentions, entities, cfg, kb=kb, n_entities=n_entities),
+        lambda: candidate_pairs(mentions, entities, cfg, kb=kb),
     )
     scored = runner.run(
         "04_scored",
-        lambda: score_candidates(cands, entities, cfg, gazetteer, n_entities=n_entities),
+        lambda: score_candidates(cands, entities, cfg, gazetteer),
     )
     if cfg.rerank_topk is not None:
         ctx = (
@@ -808,9 +784,7 @@ def run_pipeline(
         )
         scored = runner.run(
             "04b_rerank",
-            lambda: rerank_candidates(
-                scored, entities, cfg, context=ctx, n_entities=n_entities
-            ),
+            lambda: rerank_candidates(scored, entities, cfg, context=ctx),
         )
     links = runner.run(
         "05_links",

@@ -17,8 +17,9 @@ BASELINE.json ``input_hint`` pages table:
 on the generated ``html``, so the byte-identical invariant holds by
 construction and is *verified* (not assumed) by tests.
 
-Entity frequency is Zipf-skewed so hot blocking keys exist — the salting
-path (SURVEY.md §4 custom work #1) is exercised by real skew, not mocked.
+Entity frequency is Zipf-skewed so hot blocking keys exist — the per-block
+caps and AQE skew handling (SURVEY.md §4 custom work #1) are exercised by real
+skew, not mocked.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Blocking: n-gram quirk parity, TF-IDF semantics vs a numpy oracle,
-MinHash/LSH behavior, salting (SURVEY.md §2.10, §2.4 A2-A5, §2.5 T1)."""
+MinHash/LSH behavior (SURVEY.md §2.10, §2.4 A2-A5, §2.5 T1)."""
 
 import math
 
@@ -11,7 +11,6 @@ from e2e_el_spark.operators.blocking import (
     cosine_topk,
     lsh_band_keys,
     minhash_signatures,
-    salt_block_key,
     same_block_pairs,
     tfidf_candidates,
     tfidf_vectors,
@@ -143,17 +142,6 @@ def test_minhash_deterministic(spark):
     s1 = minhash_signatures(df, "id", "text").collect()[0].sig
     s2 = minhash_signatures(df, "id", "text").collect()[0].sig
     assert s1 == s2
-
-
-def test_salting_splits_hot_keys(spark):
-    rows = [(f"m{i}", "hot") for i in range(100)] + [(f"c{i}", "cold") for i in range(5)]
-    df = spark.createDataFrame(rows, "mention_id string, block_key string")
-    salted = salt_block_key(df, max_block_size=50, salt_buckets=4)
-    keys = [r.block_key for r in salted.collect()]
-    hot_keys = {k for k in keys if k.startswith("hot#")}
-    assert 1 < len(hot_keys) <= 4          # hot key split into salted buckets
-    assert "cold" in keys                  # cold key untouched
-    assert "hot" not in keys
 
 
 def test_same_block_pairs_cap_is_not_silent(spark):

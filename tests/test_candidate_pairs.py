@@ -21,6 +21,7 @@ from e2e_el_spark.pipeline import (
 )
 from e2e_el_spark.operators.blocking import tfidf_vectors
 from e2e_el_spark.synth import entities_df
+from tests.plan_inspect import broadcast_threshold, evh_pruned
 
 N_ENT = 60
 
@@ -59,9 +60,7 @@ def _exact_cosines(frames, cfg, surfaces):
 
 def test_scores_are_exact_tfidf_cosine(spark, kb, surfaces_as_mentions):
     ents, cfg, frames = kb
-    out = candidate_pairs(
-        surfaces_as_mentions, ents, cfg, kb=frames, n_entities=N_ENT
-    ).collect()
+    out = candidate_pairs(surfaces_as_mentions, ents, cfg, kb=frames).collect()
     assert out, "no candidate pairs produced"
     s_vecs, e_vecs = _exact_cosines(frames, cfg, surfaces_as_mentions)
     for row in out:
@@ -74,9 +73,7 @@ def test_scores_are_exact_tfidf_cosine(spark, kb, surfaces_as_mentions):
 def test_prescore_cut_bounds_and_keeps_exact_match(spark, kb, surfaces_as_mentions):
     ents, cfg, frames = kb
     tight = replace(cfg, prescore_keep=4, tfidf_topk=2)
-    rows = candidate_pairs(
-        surfaces_as_mentions, ents, tight, kb=frames, n_entities=N_ENT
-    ).collect()
+    rows = candidate_pairs(surfaces_as_mentions, ents, tight, kb=frames).collect()
     per_surface: dict[str, list] = {}
     for r in rows:
         per_surface.setdefault(r.surface, []).append(r)
@@ -102,9 +99,7 @@ def test_huge_prescore_keep_equals_exhaustive_rescore(spark, kb, surfaces_as_men
     wide = replace(cfg, prescore_keep=10**6, prescore_grams=3)
     out = {
         (r.surface, r.entity_id): r.tfidf_cos
-        for r in candidate_pairs(
-            surfaces_as_mentions, ents, wide, kb=frames, n_entities=N_ENT
-        ).collect()
+        for r in candidate_pairs(surfaces_as_mentions, ents, wide, kb=frames).collect()
     }
     s_vecs, e_vecs = _exact_cosines(frames, cfg, surfaces_as_mentions)
     for surface, svec in s_vecs.items():
@@ -175,24 +170,28 @@ def test_gen_posting_cap_drops_lowest_weight_posting(spark):
     assert full == {("S", "E1"), ("S", "E2"), ("S", "E3"), ("S", "E4")}
 
 
-def test_shuffled_kb_path_equals_broadcast_path(spark, kb, surfaces_as_mentions):
-    """R5-g: forcing the shuffled-KB plan (n_entities past the broadcast
-    threshold ⇒ evh prune semi-joins + no KB-proportional broadcast hints)
-    must yield exactly the broadcast-path pairs AND scores — the prunes only
-    drop entity-vector rows whose gram can never appear on the probe side."""
+def test_shuffled_kb_path_equals_broadcast_path(spark, kb, surfaces_as_mentions, tmp_path):
+    """R5-g: the shuffled-KB plan (evh past the broadcast threshold ⇒ evh
+    prune semi-joins) must yield exactly the broadcast-path pairs AND
+    scores — the prunes only drop entity-vector rows whose gram can never
+    appear on the probe side. The KB frames are read back from parquet, as
+    ``build_kb_artifacts`` serves them: an unmaterialized cache carries its
+    plan's (far larger) size estimate, which would prune on both sides."""
     ents, cfg, frames = kb
-    small = {
-        (r.surface, r.entity_id): r.tfidf_cos
-        for r in candidate_pairs(
-            surfaces_as_mentions, ents, cfg, kb=frames, n_entities=N_ENT
-        ).collect()
-    }
-    big = {
-        (r.surface, r.entity_id): r.tfidf_cos
-        for r in candidate_pairs(
-            surfaces_as_mentions, ents, cfg, kb=frames, n_entities=10**9
-        ).collect()
-    }
+    stored = []
+    for name, df in zip(("vocab", "ev", "eb"), frames):
+        df.write.parquet(str(tmp_path / name))
+        stored.append(spark.read.parquet(str(tmp_path / name)))
+
+    def run():
+        out = candidate_pairs(surfaces_as_mentions, ents, cfg, kb=tuple(stored))
+        return out, {(r.surface, r.entity_id): r.tfidf_cos for r in out.collect()}
+
+    plan_small, small = run()
+    with broadcast_threshold(spark, "-1"):
+        plan_big, big = run()
+    assert not evh_pruned(plan_small)
+    assert evh_pruned(plan_big)
     assert set(small) == set(big)
     for k, v in small.items():
         assert big[k] == pytest.approx(v, abs=1e-12), k
@@ -205,7 +204,7 @@ def test_surfaces_keep_shuffle_parallelism(spark, kb, surfaces_as_mentions):
     compact bytes the coalesced cache was one partition and every explode
     downstream of it ran as a single task."""
     ents, cfg, frames = kb
-    out = candidate_pairs(surfaces_as_mentions, ents, cfg, kb=frames, n_entities=N_ENT)
+    out = candidate_pairs(surfaces_as_mentions, ents, cfg, kb=frames)
     out.collect()
     plan = out._jdf.queryExecution().executedPlan().toString()
     sp = spark.conf.get("spark.sql.shuffle.partitions")

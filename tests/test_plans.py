@@ -6,14 +6,11 @@ from pyspark.sql import functions as F
 from e2e_el_spark.extract import extract_documents
 from e2e_el_spark.operators.mentions import detect_mentions
 from e2e_el_spark.synth import aliases_df
+from tests.plan_inspect import broadcast_hinted_columns, broadcast_threshold, evh_pruned
 
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-def _optimized(df) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
 
 
 def test_filter_pushdown_to_parquet(spark, tmp_path):
@@ -142,70 +139,76 @@ def test_aggregation_uses_whole_stage_codegen_and_partial_agg(spark, tmp_path):
     assert "codegen id" in buf.getvalue() or "WholeStageCodegen" in buf.getvalue(), buf.getvalue()
 
 
-def test_kb_broadcast_hint_dropped_past_threshold(spark):
-    """Round-5: above cfg.broadcast_kb_max_entities the KB-proportional
-    frames (entity vectors, entity blocks, alias names) must lose their
-    forced broadcast hints — a 10^6-entity KB through F.broadcast is a
-    silent memory bet. The hint (not the runtime strategy, which AQE may
-    still pick from actual tiny test sizes) is the assertable plan fact."""
-    from e2e_el_spark.pipeline import PipelineConfig, candidate_pairs, score_candidates
+def test_kb_proportional_joins_carry_no_broadcast_hint(spark):
+    """Spark's size rule alone picks broadcast or shuffle for the
+    KB-proportional sides (entity blocks, entity vectors, alias and name
+    tables): a hint there would force a 10^6-entity KB into one
+    in-memory copy per executor. In candidate_pairs, score_candidates and
+    rerank_candidates the only hinted frames are vocabulary-bounded: the
+    rare grams, the vocabulary and distinct gram hashes. The threshold is
+    forced to -1 so the plan also holds the evh prunes and their hints."""
+    from e2e_el_spark.pipeline import (
+        PipelineConfig, candidate_pairs, rerank_candidates, score_candidates,
+    )
     from e2e_el_spark.synth import aliases_df, entities_df
 
-    cfg = PipelineConfig()
+    cfg = PipelineConfig(rerank_topk=3)
     ents = entities_df(spark, 30, seed=5)
     gaz = aliases_df(spark, 30, seed=5)
     mentions = gaz.select(
         F.col("alias").alias("mention_id"), F.col("alias").alias("text")
     )
-
-    def hint_count(df):
-        return _optimized(df).count("strategy=broadcast")
-
-    def hint_lines(df):
-        return [
-            line.strip() for line in _optimized(df).splitlines()
-            if "strategy=broadcast" in line
-        ]
-
-    small = candidate_pairs(mentions, ents, cfg, n_entities=30)
-    big = candidate_pairs(mentions, ents, cfg, n_entities=10**9)
-    # In the small plan the KB-proportional entity-vector frame is broadcast
-    # into the rescore joins (Inner/LeftOuter hints). In the big plan those
-    # must be gone: the ONLY surviving broadcast hints are the vocab-bounded
-    # gram-hash sides of LeftSemi prune joins (<= cfg.vocab_size 8-byte
-    # hashes each — the R5-g evh prunes and the sv_r known-gram filter).
-    assert any("LeftSemi" not in line for line in hint_lines(small)), (
-        hint_lines(small)
-    )
-    big_hints = hint_lines(big)
-    assert big_hints, "vocab-bounded prune broadcasts must survive"
-    assert all("Join LeftSemi" in line for line in big_hints), big_hints
-
-    cands = small.limit(5)
-    s_small = score_candidates(cands, ents, cfg, gaz, n_entities=30)
-    s_big = score_candidates(cands, ents, cfg, gaz, n_entities=10**9)
-    assert hint_count(s_big) < hint_count(s_small)
+    vocab_bounded = {
+        frozenset({"gram", "df"}), frozenset({"gram", "idf"}), frozenset({"_gh"}),
+    }
+    with broadcast_threshold(spark, "-1"):
+        cands = candidate_pairs(mentions, ents, cfg)
+        scored = score_candidates(cands.limit(5), ents, cfg, gaz)
+        reranked = rerank_candidates(scored, ents, cfg)
+    assert evh_pruned(cands)
+    assert frozenset({"_gh"}) in broadcast_hinted_columns(cands)
+    for df in (cands, scored, reranked):
+        hinted = broadcast_hinted_columns(df)
+        assert hinted <= vocab_bounded, hinted - vocab_bounded
 
 
-def test_kb_scale_plan_decisions_output_invariant(spark, tmp_path, caplog):
-    """Forcing the large-KB plan paths (shuffle KB joins + window-mode
-    detection fallback) on a small input must give bit-identical clusters
-    to the default broadcast/fused paths — plan decisions are performance
-    only."""
+def test_kb_scale_plan_decisions_output_invariant(spark, tmp_path, caplog, monkeypatch):
+    """Forcing the large-KB plan paths (no broadcast joins, so the evh
+    prune fires, plus the window-mode detection fallback) on a small input
+    must give bit-identical clusters to the default paths — plan decisions
+    are performance only."""
+    import functools
     import logging
 
-    from e2e_el_spark.pipeline import PipelineConfig, run_pipeline
+    from e2e_el_spark import pipeline
+    from e2e_el_spark.pipeline import run_pipeline
     from e2e_el_spark.synth import aliases_df, entities_df, pages_df
 
     pages = pages_df(spark, 60, n_entities=30, seed=11, partitions=4)
     ents = entities_df(spark, 30, seed=11)
     gaz = aliases_df(spark, 30, seed=11)
     base = run_pipeline(spark, pages, ents, gaz, str(tmp_path / "a"))
-    big_kb_cfg = PipelineConfig(broadcast_kb_max_entities=0, fused_max_aliases=0)
-    with caplog.at_level(logging.WARNING, logger="e2e_el_spark.operators.mentions"):
-        alt = run_pipeline(spark, pages, ents, gaz, str(tmp_path / "b"), big_kb_cfg)
+
+    real_candidate_pairs = pipeline.candidate_pairs
+    pairs_plans = []
+
+    def recording_candidate_pairs(*args, **kwargs):
+        pairs_plans.append(real_candidate_pairs(*args, **kwargs))
+        return pairs_plans[-1]
+
+    monkeypatch.setattr(pipeline, "candidate_pairs", recording_candidate_pairs)
+    monkeypatch.setattr(
+        pipeline, "detect_mentions",
+        functools.partial(pipeline.detect_mentions, fused_max_aliases=0),
+    )
+    with broadcast_threshold(spark, "-1"), caplog.at_level(
+        logging.WARNING, logger="e2e_el_spark.operators.mentions"
+    ):
+        alt = run_pipeline(spark, pages, ents, gaz, str(tmp_path / "b"))
     # the window fallback really fired (else this compares fused to fused)
     assert any("fused_max_aliases=0" in r.getMessage() for r in caplog.records)
+    # ... and 03_pairs took the pruned branch
+    assert len(pairs_plans) == 1 and evh_pruned(pairs_plans[0])
 
     def key(df):
         return sorted((r.mention_id, r.cluster_id) for r in df.collect())
