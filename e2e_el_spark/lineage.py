@@ -4,9 +4,8 @@ The reference's resumability is file-existence probing around torch caches
 (`/root/reference/run_E2E_exhaustive.py:672-710`) plus skip-trained-steps on
 restart (:156-168). This engine formalizes that as a stage protocol:
 
-  * each stage writes its output table to ``{workdir}/{stage}/data`` (parquet
-    here; format="iceberg" drops in unchanged when the runtime has the jars —
-    gated by ``_HAS_ICEBERG``),
+  * each stage writes its output table to ``{workdir}/{stage}/data`` as
+    parquet,
   * then appends per-partition counters to ``{workdir}/_lineage`` —
     (stage, partition_id, rows_out, wall_ms, ts),
   * then atomically writes a ``_STAGE_COMPLETE`` marker.
@@ -29,7 +28,6 @@ from pyspark.sql import functions as F
 
 logger = logging.getLogger(__name__)
 
-_HAS_ICEBERG = False  # iceberg-spark-runtime jar not in this image; parquet fallback
 MARKER = "_STAGE_COMPLETE"
 
 

@@ -229,6 +229,31 @@ def default_cross_scorer():
     return score
 
 
+def cross_scores(
+    pairs: DataFrame, text_a: str, text_b: str, scorer_factory=None
+) -> DataFrame:
+    """``pairs`` plus ``cross_score``: the cross-encoder's score of
+    (``text_a``, ``text_b``) per row, in mapInPandas ITERATOR form —
+    ``scorer_factory()`` runs once per partition (the model-load site;
+    per-batch loading would reload BERT thousands of times), then scores
+    whole Arrow batches."""
+    from collections.abc import Iterator
+
+    factory = scorer_factory or default_cross_scorer
+    out_schema = T.StructType(
+        list(pairs.schema.fields) + [T.StructField("cross_score", T.DoubleType())]
+    )
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        scorer = factory()  # once per partition == once per executor slot
+        for pdf in batches:
+            pdf = pdf.copy()
+            pdf["cross_score"] = scorer(pdf[text_a], pdf[text_b])
+            yield pdf
+
+    return pairs.mapInPandas(gen, out_schema)
+
+
 def rerank_cross(
     pairs: DataFrame,
     id_col: str = "mention_id",
@@ -248,30 +273,13 @@ def rerank_cross(
     exactly the reference's pair construction, minus the WordPiece ids (F3
     out of scope; the scorer sees the raw strings).
 
-    mapInPandas ITERATOR form: ``scorer_factory()`` runs once per partition
-    (the model-load site — per-batch loading would reload BERT thousands of
-    times), then scores whole Arrow batches. Output adds ``cross_score`` and
+    Scores come from ``cross_scores``. Output adds ``cross_score`` and
     ``cross_rank`` (row_number per mention, ties broken by candidate id) and
     keeps only cross_rank ≤ k. Per-mention candidate lists are small (top-k
     from the retrieval stage), so the rank window shuffles only k rows per
     mention.
     """
-    from collections.abc import Iterator
-
-    factory = scorer_factory or default_cross_scorer
-    out_schema = T.StructType(
-        list(pairs.schema.fields) + [T.StructField("cross_score", T.DoubleType())]
-    )
-    a, b = text_a, text_b
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        scorer = factory()  # once per partition == once per executor slot
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["cross_score"] = scorer(pdf[a], pdf[b])
-            yield pdf
-
-    scored = pairs.mapInPandas(gen, out_schema)
+    scored = cross_scores(pairs, text_a, text_b, scorer_factory)
     w = Window.partitionBy(id_col).orderBy(F.desc("cross_score"), F.asc(cand_col))
     return (
         scored.withColumn("cross_rank", F.row_number().over(w))

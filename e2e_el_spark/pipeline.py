@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -38,74 +38,87 @@ from e2e_el_spark.operators.blocking import (
     token_prefix_key,
 )
 from e2e_el_spark.operators.mentions import detect_mentions
-from e2e_el_spark.operators.scoring import score_pairs
+from e2e_el_spark.operators.scoring import DEFAULT_WEIGHTS, cross_scores, score_pairs
 from e2e_el_spark.operators.segmentation import segment_documents
+
+
+# Engine constants: engine code, not configuration. Resume stays safe
+# without them in PipelineConfig, because the stage fingerprint
+# (``PipelineConfig.fingerprint``) covers every value a caller can change
+# plus ``__version__``; like any other engine edit, changing one of these
+# needs a version bump (or a fresh workdir) to invalidate old checkpoints.
+TFIDF_TOPK = 10
+VOCAB_SIZE = 100_000
+NGRAM_MAX = 5
+COMPAT_NGRAMS = True
+PREFIX_LEN = 4
+LSH_HASHES = 32
+LSH_BANDS = 16
+LSH_ROWS_PER_BAND = 2
+MAX_MENTION_TOKENS = 4
+# prune near-zero tf·idf entries before the gram join (see
+# blocking.tfidf_vectors — the 100 TB hot-gram guard)
+TFIDF_MIN_WEIGHT = 0.05
+# candidate GENERATION uses only grams whose document frequency is below
+# this fraction of the corpus (inverted-index common-term pruning) —
+# ubiquitous grams still count in the exact rescore, they just don't
+# enumerate pairs
+MAX_GEN_DF_RATIO = 0.02
+# ...AND an ABSOLUTE df cap on candidate-GENERATING grams. The ratio
+# alone scales the "rare" threshold with the KB (0.02·N = df ≤ 2,000 at
+# a 100k-entity KB), so posting lists — and the Σ df_s·df_e pair
+# enumeration — grow super-linearly with the dictionary: measured 65×
+# 03_pairs wall for a 20× KB (round-5 KB-axis campaign, BENCH/
+# SCALING_EVIDENCE.md). Capping df absolutely bounds every posting
+# list independent of KB size; common grams still feed the exact
+# rescore, they just never enumerate. 500 leaves the ≤25k-entity
+# behavior exactly unchanged (ratio threshold < cap there).
+MAX_GEN_DF_ABS = 500
+# prefix filtering: only each vector's GEN_PREFIX_LEN RAREST grams
+# enumerate candidates (a true near-match must share one of them)
+GEN_PREFIX_LEN = 6
+# per-surface budget for inverted-index GENERATED candidates, ranked by
+# partial dot over the shared rare prefix grams before the exact
+# rescore. Without it the generation join's output — and therefore the
+# rescore's input — grows with the KB (measured cands/surface 116→434
+# for a 20× KB). 100 ≈ 3× the un-bounded per-surface volume at the 5k
+# bench KB, so small-KB behavior is effectively unchanged.
+GEN_TOPK = 100
+# per-RARE-GRAM entity posting-list cap in candidate generation (weight
+# desc, entity_id asc). The generation join's output is
+# Σ_gram |surface posting|·|entity posting|; the df cap alone leaves a
+# heavy tail of postings near the cap, profiled at 45M join rows → a
+# 75s partial-dot agg at 20k pages × 100k entities (R5-c).
+MAX_GEN_POSTING = 64
+# --- two-phase exact rescore (R5-c). Phase 1 scores EVERY candidate by
+# a partial dot over the surface's PRESCORE_GRAMS HEAVIEST tf·idf grams
+# (they carry the cosine mass); only the per-surface top PRESCORE_KEEP
+# survive to the exact rescore. The exact-rescore join streams
+# |cands| × grams-per-surface rows — profiled at 1.96B rows / 346s for
+# 118k surfaces × 100k entities, 52% of the whole pairs stage — while
+# phase 1 costs |cands| × PRESCORE_GRAMS and phase 2 only
+# PRESCORE_KEEP × grams-per-surface: ~4× fewer value rows end-to-end.
+# Final output is still the EXACT tf·idf cosine of the survivors;
+# ranking error is confined to candidates outside the partial-dot
+# top-PRESCORE_KEEP (gated by the campaign pairwise-F1 check).
+# PRESCORE_KEEP must be ≥ 2·TFIDF_TOPK (the final per-surface cut).
+PRESCORE_GRAMS = 8
+PRESCORE_KEEP = 30
+# token-prefix blocks join at most this many entities per key (ordered
+# by entity_id — deterministic); the cap is the mention-entity analogue
+# of same_block_pairs' max_block_size
+MAX_ENTITIES_PER_BLOCK = 20
+# P8/P9 document context windows (± this many chars, [Ms]/[Me] markers)
+# as the cross-encoder's text_a — the reference's actual pair input
+# (utils_FullTransformer.py:395-470).
+RERANK_CONTEXT_BUDGET = 100
 
 
 @dataclass
 class PipelineConfig:
-    tfidf_topk: int = 10
-    vocab_size: int = 100_000
-    ngram_max: int = 5
-    compat_ngrams: bool = True
-    prefix_len: int = 4
-    lsh_hashes: int = 32
-    lsh_bands: int = 16
-    lsh_rows_per_band: int = 2
+    """The values a caller sets; everything else is an engine constant."""
+
     link_threshold: float = 0.55
-    max_mention_tokens: int = 4
-    # prune near-zero tf·idf entries before the gram join (see
-    # blocking.tfidf_vectors — the 100 TB hot-gram guard); None = exact
-    tfidf_min_weight: float | None = 0.05
-    # candidate GENERATION uses only grams whose document frequency is below
-    # this fraction of the corpus (inverted-index common-term pruning) —
-    # ubiquitous grams still count in the exact rescore, they just don't
-    # enumerate pairs
-    max_gen_df_ratio: float = 0.02
-    # ...AND an ABSOLUTE df cap on candidate-GENERATING grams. The ratio
-    # alone scales the "rare" threshold with the KB (0.02·N = df ≤ 2,000 at
-    # a 100k-entity KB), so posting lists — and the Σ df_s·df_e pair
-    # enumeration — grow super-linearly with the dictionary: measured 65×
-    # 03_pairs wall for a 20× KB (round-5 KB-axis campaign, BENCH/
-    # SCALING_EVIDENCE.md). Capping df absolutely bounds every posting
-    # list independent of KB size; common grams still feed the exact
-    # rescore, they just never enumerate. 500 leaves the ≤25k-entity
-    # behavior exactly unchanged (ratio threshold < cap there).
-    max_gen_df_abs: int = 500
-    # prefix filtering: only each vector's gen_prefix_len RAREST grams
-    # enumerate candidates (a true near-match must share one of them)
-    gen_prefix_len: int = 6
-    # per-surface budget for inverted-index GENERATED candidates, ranked by
-    # partial dot over the shared rare prefix grams before the exact
-    # rescore. Without it the generation join's output — and therefore the
-    # rescore's input — grows with the KB (measured cands/surface 116→434
-    # for a 20× KB). 100 ≈ 3× the un-bounded per-surface volume at the 5k
-    # bench KB, so small-KB behavior is effectively unchanged.
-    gen_topk: int = 100
-    # per-RARE-GRAM entity posting-list cap in candidate generation (weight
-    # desc, entity_id asc). The generation join's output is
-    # Σ_gram |surface posting|·|entity posting|; the df cap alone leaves a
-    # heavy tail of postings near the cap, profiled at 45M join rows → a
-    # 75s partial-dot agg at 20k pages × 100k entities (R5-c). None = off.
-    max_gen_posting: int = 64
-    # --- two-phase exact rescore (R5-c). Phase 1 scores EVERY candidate by
-    # a partial dot over the surface's prescore_grams HEAVIEST tf·idf grams
-    # (they carry the cosine mass); only the per-surface top prescore_keep
-    # survive to the exact rescore. The exact-rescore join streams
-    # |cands| × grams-per-surface rows — profiled at 1.96B rows / 346s for
-    # 118k surfaces × 100k entities, 52% of the whole pairs stage — while
-    # phase 1 costs |cands| × prescore_grams and phase 2 only
-    # prescore_keep × grams-per-surface: ~4× fewer value rows end-to-end.
-    # Final output is still the EXACT tf·idf cosine of the survivors;
-    # ranking error is confined to candidates outside the partial-dot
-    # top-prescore_keep (gated by the campaign pairwise-F1 check).
-    # prescore_keep must be ≥ 2·tfidf_topk (the final per-surface cut).
-    prescore_grams: int = 8
-    prescore_keep: int = 30
-    # token-prefix blocks join at most this many entities per key (ordered
-    # by entity_id — deterministic); the cap is the mention-entity analogue
-    # of same_block_pairs' max_block_size
-    max_entities_per_block: int = 20
     # restrict to these page languages (None = all). On a partitioned
     # Iceberg/parquet pages table this predicate prunes partitions at the
     # scan (SURVEY.md §4 "rewrites Catalyst gives us for free")
@@ -118,17 +131,10 @@ class PipelineConfig:
     # None disables.
     segment_budget_chars: int | None = 2000
     # L3: cross-encoder rerank of the top-N candidates per surface after
-    # score_candidates (modeling_FullTransformer.py:62-101). None disables;
-    # when set, the blended score is 0.7·retrieval + 0.3·cross.
+    # score_candidates (modeling_FullTransformer.py:62-101), fed document
+    # context windows. None disables; when set, the blended score is
+    # 0.7·retrieval + 0.3·cross.
     rerank_topk: int | None = None
-    # P8/P9 document context windows (± this many chars, [Ms]/[Me] markers)
-    # as the cross-encoder's text_a — the reference's actual pair input
-    # (utils_FullTransformer.py:395-470). None degrades text_a to the bare
-    # surface string. Only meaningful when rerank_topk is set.
-    rerank_context_budget: int | None = 100
-    weights: dict = field(
-        default_factory=lambda: {"jw": 0.35, "tfidf_cos": 0.3, "emb_dot": 0.35}
-    )
 
     def fingerprint(self) -> str:
         """Stable hash of every knob AND the engine version — the
@@ -141,27 +147,14 @@ class PipelineConfig:
         return hashlib.sha256(f"{__version__}|{blob}".encode()).hexdigest()[:16]
 
 
-def mention_block_keys(mentions: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """(mention_id, block_key): token-prefix key ∪ MinHash-LSH band keys."""
-    prefix = mentions.select(
-        "mention_id", token_prefix_key("text", cfg.prefix_len).alias("block_key")
-    )
-    sigs = minhash_signatures(mentions, "mention_id", "text", cfg.lsh_hashes)
-    bands = lsh_band_keys(sigs, "mention_id", cfg.lsh_bands, cfg.lsh_rows_per_band)
-    return prefix.unionByName(bands)
+def block_keys(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id_col, block_key): token-prefix key ∪ MinHash-LSH band keys."""
+    prefix = df.select(id_col, token_prefix_key(text_col, PREFIX_LEN).alias("block_key"))
+    sigs = minhash_signatures(df, id_col, text_col, LSH_HASHES)
+    return prefix.unionByName(lsh_band_keys(sigs, id_col, LSH_BANDS, LSH_ROWS_PER_BAND))
 
 
-def entity_block_keys(entities: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """(entity_id, block_key) over canonical names — same key functions."""
-    prefix = entities.select(
-        "entity_id", token_prefix_key("name", cfg.prefix_len).alias("block_key")
-    )
-    sigs = minhash_signatures(entities, "entity_id", "name", cfg.lsh_hashes)
-    bands = lsh_band_keys(sigs, "entity_id", cfg.lsh_bands, cfg.lsh_rows_per_band)
-    return prefix.unionByName(bands)
-
-
-def _kb_vocab(entities: DataFrame, cfg: PipelineConfig, n_entities: int) -> DataFrame:
+def _kb_vocab(entities: DataFrame, n_entities: int) -> DataFrame:
     """TF-IDF vocabulary over the KB ALONE: (gram, df, idf, is_rare).
 
     The vocabulary/IDF corpus is the entity-name side only — NOT entity
@@ -177,50 +170,49 @@ def _kb_vocab(entities: DataFrame, cfg: PipelineConfig, n_entities: int) -> Data
     (and hence absolute cosines) shifts — the pairwise F1 gate holds.
 
     ``is_rare`` pre-marks grams eligible to ENUMERATE candidates
-    (df ≤ max(2, min(max_gen_df_ratio · n_entities, max_gen_df_abs))) so
-    downstream needs no
-    corpus count job.
+    (df ≤ max(2, min(MAX_GEN_DF_RATIO · n_entities, MAX_GEN_DF_ABS))) so
+    downstream needs no corpus count job.
     """
     vocab = build_tfidf_vocab(
         entities.select(F.col("entity_id").alias("cid"), F.col("name").alias("ctext")),
-        "cid", "ctext", cfg.ngram_max, cfg.vocab_size, cfg.compat_ngrams,
+        "cid", "ctext", NGRAM_MAX, VOCAB_SIZE, COMPAT_NGRAMS,
         n_docs=n_entities,
     )
-    thr = max(2.0, min(cfg.max_gen_df_ratio * n_entities, cfg.max_gen_df_abs))
+    thr = max(2.0, min(MAX_GEN_DF_RATIO * n_entities, MAX_GEN_DF_ABS))
     return vocab.withColumn("is_rare", F.col("df") <= F.lit(thr))
 
 
-def _kb_blocks(entities: DataFrame, cfg: PipelineConfig) -> DataFrame:
+def _kb_blocks(entities: DataFrame) -> DataFrame:
     """(block_key, entity_id) with the per-block entity cap applied."""
     bw = Window.partitionBy("block_key").orderBy("entity_id")
     return (
-        entity_block_keys(entities, cfg)
+        block_keys(entities, "entity_id", "name")
         .withColumn("_rn", F.row_number().over(bw))
         # surface the cap (not silent): truncated-row count rides along as an
         # observed metric on the job that consumes this frame
         .observe(
             unique_metric_name("entity_block_cap"),
-            F.sum((F.col("_rn") > cfg.max_entities_per_block).cast("long")).alias("truncated_rows"),
+            F.sum((F.col("_rn") > MAX_ENTITIES_PER_BLOCK).cast("long")).alias("truncated_rows"),
             F.count(F.lit(1)).alias("input_rows"),
         )
-        .filter(F.col("_rn") <= cfg.max_entities_per_block)
+        .filter(F.col("_rn") <= MAX_ENTITIES_PER_BLOCK)
         .drop("_rn")
     )
 
 
 def kb_frames(
-    entities: DataFrame, cfg: PipelineConfig, n_entities: int | None = None
+    entities: DataFrame, n_entities: int | None = None
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Lazy (vocab, entity_vectors, entity_blocks) — the corpus-invariant KB
     side of the pairs stage. ``build_kb_artifacts`` is the checkpointed form."""
     if n_entities is None:
         n_entities = entities.count()
-    vocab = _kb_vocab(entities, cfg, n_entities).cache()
+    vocab = _kb_vocab(entities, n_entities).cache()
     ev = tfidf_vectors(
-        entities, "entity_id", "name", vocab, cfg.ngram_max, cfg.compat_ngrams,
-        min_weight=cfg.tfidf_min_weight,
+        entities, "entity_id", "name", vocab, NGRAM_MAX, COMPAT_NGRAMS,
+        min_weight=TFIDF_MIN_WEIGHT,
     ).cache()
-    return vocab, ev, _kb_blocks(entities, cfg)
+    return vocab, ev, _kb_blocks(entities)
 
 
 def kb_content_fingerprint(entities: DataFrame) -> str:
@@ -257,15 +249,15 @@ def build_kb_artifacts(
     n_entities = int(kb_fp.split(":", 1)[0])
     fp = f"{cfg.fingerprint()}|kb:{kb_fp}"
     runner = StageRunner(spark, kb_workdir, fingerprint=fp)
-    vocab = runner.run("kb_vocab", lambda: _kb_vocab(entities, cfg, n_entities))
+    vocab = runner.run("kb_vocab", lambda: _kb_vocab(entities, n_entities))
     ev = runner.run(
         "kb_vectors",
         lambda: tfidf_vectors(
-            entities, "entity_id", "name", vocab, cfg.ngram_max, cfg.compat_ngrams,
-            min_weight=cfg.tfidf_min_weight,
+            entities, "entity_id", "name", vocab, NGRAM_MAX, COMPAT_NGRAMS,
+            min_weight=TFIDF_MIN_WEIGHT,
         ),
     )
-    eb = runner.run("kb_blocks", lambda: _kb_blocks(entities, cfg))
+    eb = runner.run("kb_blocks", lambda: _kb_blocks(entities))
     return vocab, ev, eb
 
 
@@ -355,8 +347,7 @@ def _broadcastable(df: DataFrame) -> bool:
 
 
 def candidate_pairs(
-    mentions: DataFrame, entities: DataFrame, cfg: PipelineConfig,
-    kb: tuple[DataFrame, DataFrame, DataFrame] | None = None,
+    mentions: DataFrame, kb: tuple[DataFrame, DataFrame, DataFrame]
 ) -> DataFrame:
     """BLOCK + PAIRS at SURFACE level: (surface, entity_id, tfidf_cos).
 
@@ -370,18 +361,17 @@ def candidate_pairs(
     Candidates = (token-prefix blocks ∪ LSH-band blocks ∪ rare-gram inverted
     index with prefix filtering), then a two-phase rescore: a cheap partial
     dot over each surface's heaviest grams ranks every candidate, and only
-    the per-surface top ``prescore_keep`` get their EXACT TF-IDF cosine
-    before the final per-surface top-2k cut (see the ``prescore_*`` config
+    the per-surface top ``PRESCORE_KEEP`` get their EXACT TF-IDF cosine
+    before the final per-surface top-2k cut (see the ``PRESCORE_*``
     rationale — the single-phase exact rescore was 52% of the stage wall at
     a 100k-entity KB).
     The KB-proportional sides (entity blocks, entity vectors) carry no
     broadcast hint: Spark's size rule broadcasts them while the KB is the
     small dimension (SURVEY.md §1.3) and shuffles them past it. Only the
     vocabulary-bounded frames (rare grams, distinct gram hashes) are hinted.
-    ``kb`` takes precomputed
-    (vocab, entity_vectors, entity_blocks) — see ``build_kb_artifacts`` —
-    so the per-run plan touches only surface-side work; None builds them
-    inline (one count job over the KB).
+    ``kb`` is the precomputed (vocab, entity_vectors, entity_blocks) —
+    ``build_kb_artifacts`` or ``kb_frames`` — so the per-run plan touches
+    only surface-side work.
     """
     # Surfaces are byte-tiny (distinct strings) but every consumer explodes
     # them 10-100× (n-grams, MinHash shingles). AQE may coalesce cached
@@ -397,26 +387,23 @@ def candidate_pairs(
         .repartition(_shuffle_partitions(mentions), "surface")
         .cache()
     )
-    vocab, ev, eb = kb if kb is not None else kb_frames(entities, cfg)
+    vocab, ev, eb = kb
     sv = tfidf_vectors(
-        surfaces, "surface", "surface", vocab, cfg.ngram_max, cfg.compat_ngrams,
-        min_weight=cfg.tfidf_min_weight,
+        surfaces, "surface", "surface", vocab, NGRAM_MAX, COMPAT_NGRAMS,
+        min_weight=TFIDF_MIN_WEIGHT,
     ).cache()
 
     # --- candidate GENERATION: inverted index over RARE grams only.
-    # A gram in >max_gen_df_ratio of the KB enumerates O(df²) pairs —
+    # A gram in >MAX_GEN_DF_RATIO of the KB enumerates O(df²) pairs —
     # at 10^8 surfaces one common word would emit 10^12 candidates. Rare
     # grams bound every posting list; common grams still contribute to the
     # exact rescore below, they just never enumerate pairs.
     rare = vocab.filter(F.col("is_rare")).select("gram", "df")
     gen = generated_candidates(
-        sv, ev, rare, cfg.gen_prefix_len, cfg.gen_topk,
-        max_posting=cfg.max_gen_posting,
+        sv, ev, rare, GEN_PREFIX_LEN, GEN_TOPK, max_posting=MAX_GEN_POSTING,
     )
 
-    sb = mention_block_keys(
-        surfaces.select(F.col("surface").alias("mention_id"), F.col("surface").alias("text")), cfg
-    ).select(F.col("mention_id").alias("surface"), "block_key")
+    sb = block_keys(surfaces, "surface", "surface")
     blocked = sb.join(eb, "block_key").select("surface", "entity_id")
 
     # ``cands`` has exactly ONE consumer (the phase-1 left-join chain) since
@@ -424,7 +411,7 @@ def candidate_pairs(
     # ``survivors`` below stays persisted: it feeds phase 2 AND its back-join.
     cands = blocked.unionByName(gen).dropDuplicates(["surface", "entity_id"])
 
-    # --- two-phase exact rescore (R5-c; rationale on the config fields).
+    # --- two-phase exact rescore (R5-c; rationale on PRESCORE_*).
     # Vectors join on xxhash64(gram): an 8-byte long through the widest
     # intermediates instead of a 1-5-char string (smaller shuffle rows,
     # cheaper hash/compare). A 64-bit collision between two grams of the
@@ -441,7 +428,7 @@ def candidate_pairs(
     svh = sv.select("surface", F.xxhash64("gram").alias("_gh"), "weight")
     sv_r = svh.join(F.broadcast(evh.select("_gh").distinct()), "_gh", "left_semi")
 
-    # phase 1: partial dot over each surface's heaviest prescore_grams
+    # phase 1: partial dot over each surface's heaviest PRESCORE_GRAMS
     # grams ranks ALL candidates cheaply. LEFT joins carry EVERY candidate
     # through the agg (zero-overlap candidates sum to a coalesced 0.0, so
     # none silently drops — same (0, entity_id) tie-break the old exact
@@ -450,24 +437,24 @@ def candidate_pairs(
     # string key) was 105s of the 357s stage wall at 20k pages × 100k
     # entities (BENCH/SCALING_EVIDENCE.md R5-c) for zero information — the
     # agg can emit the zero rows itself.
-    if cfg.prescore_keep < cfg.tfidf_topk * 2:
+    if PRESCORE_KEEP < TFIDF_TOPK * 2:
         raise ValueError(
-            f"prescore_keep={cfg.prescore_keep} must be >= 2*tfidf_topk="
-            f"{cfg.tfidf_topk * 2}: the phase-1 cut would starve the final "
+            f"PRESCORE_KEEP={PRESCORE_KEEP} must be >= 2*TFIDF_TOPK="
+            f"{TFIDF_TOPK * 2}: the phase-1 cut would starve the final "
             "per-surface top-2k"
         )
     tw = Window.partitionBy("surface").orderBy(F.desc("weight"), F.asc("_gh"))
     sv_top = (
         sv_r.withColumn("_tw", F.row_number().over(tw))
-        .filter(F.col("_tw") <= cfg.prescore_grams)
+        .filter(F.col("_tw") <= PRESCORE_GRAMS)
         .drop("_tw")
     )
     # When Spark would shuffle evh (its size estimate is past the broadcast
     # threshold), the entity-vector frame is KB-proportional (77M rows at
     # 10^6 entities — BENCH/SCALING_EVIDENCE.md R5-f, where 03_pairs was 81%
     # of the job wall) while the set of grams that can EVER participate in
-    # a join is vocab-bounded (<= cfg.vocab_size 8-byte hashes): phase 1
-    # only probes grams in some surface's top-prescore_grams set, phase 2
+    # a join is vocab-bounded (<= VOCAB_SIZE 8-byte hashes): phase 1
+    # only probes grams in some surface's top-PRESCORE_GRAMS set, phase 2
     # only grams present in a surface vector at all. Two broadcast
     # semi-joins drop every other entity row map-side BEFORE evh enters the
     # wide shuffles. The win compounds because common (low-IDF) grams are
@@ -498,13 +485,13 @@ def candidate_pairs(
     kw = Window.partitionBy("surface").orderBy(F.desc("_pscore"), F.asc("entity_id"))
     survivors = (
         pre.withColumn("_pk", F.row_number().over(kw))
-        .filter(F.col("_pk") <= cfg.prescore_keep)
+        .filter(F.col("_pk") <= PRESCORE_KEEP)
         .select("surface", "entity_id")
         .persist()
     )
 
-    # phase 2: EXACT tf·idf cosine, but only for the prescore_keep
-    # survivors — prescore_keep × grams-per-surface value rows instead of
+    # phase 2: EXACT tf·idf cosine, but only for the PRESCORE_KEEP
+    # survivors — PRESCORE_KEEP × grams-per-surface value rows instead of
     # |cands| × grams-per-surface.
     rescored = (
         survivors.join(sv_r, "surface")
@@ -520,38 +507,31 @@ def candidate_pairs(
     w = Window.partitionBy("surface").orderBy(F.desc("tfidf_cos"), F.asc("entity_id"))
     return (
         out.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= cfg.tfidf_topk * 2)
+        .filter(F.col("_rk") <= TFIDF_TOPK * 2)
         .drop("_rk")
     )
 
 
-def score_candidates(
-    cands: DataFrame, entities: DataFrame, cfg: PipelineConfig,
-    gazetteer: DataFrame | None = None,
-) -> DataFrame:
+def score_candidates(cands: DataFrame, gazetteer: DataFrame) -> DataFrame:
     """Vectorized scoring UDFs per (surface, entity) pair + weighted combine.
 
     The surface is compared against EVERY known alias of the candidate
     entity (gazetteer join) and the per-entity max is kept — an exact
     alias hit scores jw = emb_dot = 1 even when the canonical name differs
     (the reference's candidate dictionaries are alias-keyed the same way,
-    `/root/reference/mention_candidates_AIDA.py:14-31`). Falls back to
-    canonical names when no gazetteer is supplied.
+    its ``mention_candidates_AIDA.py:14-31``).
 
     The pairs reach the Python UDF through an explicit-count repartition
     (as ``surfaces`` in ``candidate_pairs``): AQE would coalesce a plain
     exchange of the one-file ``cands`` to one task. Pairs are KB-bounded
     (surfaces <= distinct aliases), so that count fits any corpus size.
     """
-    if gazetteer is not None:
-        names = gazetteer.select("entity_id", F.col("alias").alias("text_b"))
-    else:
-        names = entities.select("entity_id", F.col("name").alias("text_b"))
+    names = gazetteer.select("entity_id", F.col("alias").alias("text_b"))
     pairs = cands.join(names, "entity_id").repartition(
         _shuffle_partitions(cands), "surface"
     )
-    scored = score_pairs(pairs, "surface", "text_b", "tfidf_cos", cfg.weights)
-    w = dict(cfg.weights)
+    scored = score_pairs(pairs, "surface", "text_b", "tfidf_cos")
+    w = DEFAULT_WEIGHTS
     return (
         scored.groupBy("surface", "entity_id")
         .agg(
@@ -571,7 +551,7 @@ def score_candidates(
 
 
 def surface_context_windows(
-    mentions: DataFrame, documents: DataFrame, budget: int = 100
+    mentions: DataFrame, documents: DataFrame, budget: int = RERANK_CONTEXT_BUDGET
 ) -> DataFrame:
     """One deterministic representative P8/P9 context window per surface:
     (surface, context) — the reference's actual cross-encoder ``text_a``
@@ -609,47 +589,38 @@ def surface_context_windows(
 
 
 def rerank_candidates(
-    scored: DataFrame, entities: DataFrame, cfg: PipelineConfig,
-    context: DataFrame | None = None,
+    scored: DataFrame, entities: DataFrame, context: DataFrame, topk: int
 ) -> DataFrame:
-    """L3 stage: cross-encode the top-N candidates per surface against the
-    candidate's canonical entity text and blend the scores
+    """L3 stage: cross-encode the top-``topk`` candidates per surface against
+    the candidate's canonical entity text and blend the scores
     (`/root/reference/modeling_FullTransformer.py:62-101` applied to the
     retrieval top-k, `utils_FullTransformer.py:395-470` pair construction).
 
-    ``context`` (surface, context — see ``surface_context_windows``) swaps
-    the cross-encoder's ``text_a`` from the bare surface string to the
-    reference's marked document window; None keeps the surface (the
-    surface-level degenerate window)."""
-    from e2e_el_spark.operators.scoring import rerank_cross
-
+    ``context`` (surface, context — see ``surface_context_windows``) is the
+    cross-encoder's ``text_a``, the reference's marked document window; a
+    surface without a window falls back to its bare string. The top-k window
+    already leaves at most ``topk`` rows per surface, so the cross scores
+    are blended without a second rank."""
     w = Window.partitionBy("surface").orderBy(F.desc("score"), F.asc("entity_id"))
     top = (
         scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= cfg.rerank_topk)
+        .filter(F.col("_rk") <= topk)
         .drop("_rk")
+        .join(context, "surface", "left")
+        .withColumn("_ctx", F.coalesce(F.col("context"), F.col("surface")))
+        .drop("context")
     )
-    if context is not None:
-        top = top.join(context, "surface", "left").withColumn(
-            "_ctx", F.coalesce(F.col("context"), F.col("surface"))
-        ).drop("context")
-        text_a = "_ctx"
-    else:
-        text_a = "surface"
     cand_names = entities.select("entity_id", F.col("name").alias("_cand_text"))
     # one cross-scorer task per shuffle partition, not one per checkpoint
     # file (see score_candidates)
     pairs = top.join(cand_names, "entity_id").repartition(
         _shuffle_partitions(scored), "surface"
     )
-    rr = rerank_cross(
-        pairs, id_col="surface", cand_col="entity_id",
-        text_a=text_a, text_b="_cand_text", k=cfg.rerank_topk,
+    return (
+        cross_scores(pairs, "_ctx", "_cand_text")
+        .withColumn("score", F.col("score") * 0.7 + F.col("cross_score") * 0.3)
+        .drop("_cand_text", "_ctx")
     )
-    out = rr.withColumn(
-        "score", F.col("score") * 0.7 + F.col("cross_score") * 0.3
-    ).drop("_cand_text", "cross_rank")
-    return out.drop("_ctx") if context is not None else out
 
 
 def link_top1(scored: DataFrame, threshold: float) -> DataFrame:
@@ -743,7 +714,7 @@ def run_pipeline(
             # segment ids
             segs = segment_documents(documents, cfg.segment_budget_chars)
             docs = segs.select(F.col("segment_id").alias("document_id"), "text")
-        m = detect_mentions(docs, gazetteer, cfg.max_mention_tokens, mode="fused")
+        m = detect_mentions(docs, gazetteer, MAX_MENTION_TOKENS, mode="fused")
         if cfg.segment_budget_chars is None:
             return m
         back = segs.select(
@@ -770,21 +741,17 @@ def run_pipeline(
     )
     cands = runner.run(
         "03_pairs",
-        lambda: candidate_pairs(mentions, entities, cfg, kb=kb),
+        lambda: candidate_pairs(mentions, kb),
     )
     scored = runner.run(
         "04_scored",
-        lambda: score_candidates(cands, entities, cfg, gazetteer),
+        lambda: score_candidates(cands, gazetteer),
     )
     if cfg.rerank_topk is not None:
-        ctx = (
-            surface_context_windows(mentions, documents, cfg.rerank_context_budget)
-            if cfg.rerank_context_budget is not None
-            else None
-        )
+        ctx = surface_context_windows(mentions, documents)
         scored = runner.run(
             "04b_rerank",
-            lambda: rerank_candidates(scored, entities, cfg, context=ctx),
+            lambda: rerank_candidates(scored, entities, ctx, cfg.rerank_topk),
         )
     links = runner.run(
         "05_links",
@@ -800,13 +767,15 @@ def evaluate_pipeline(
 
     Blocking key for the labeled-pair oracle = the token-prefix key of the
     gold surface (the pairs a single blocking bucket would compare).
+    ``cfg`` is unused: the key length is the engine's ``PREFIX_LEN``. It
+    stays so existing ``evaluate_pipeline(clusters, gold, cfg)`` callers
+    keep working.
     """
-    cfg = cfg or PipelineConfig()
     blocked = gold_mentions.select(
         "mention_id",
         "label_candidate_id",
         "document_id", "start_index", "end_index",
-        token_prefix_key("text", cfg.prefix_len).alias("block_key"),
+        token_prefix_key("text", PREFIX_LEN).alias("block_key"),
     )
     # gold mention ids differ from detected mention ids; re-key detected
     # clusters by (document_id, start, end) → join to gold mention ids

@@ -93,6 +93,7 @@ def make_links_processor(
     from e2e_el_spark.extract import extract_documents
     from e2e_el_spark.operators.mentions import detect_mentions
     from e2e_el_spark.pipeline import (
+        MAX_MENTION_TOKENS,
         PipelineConfig,
         candidate_pairs,
         kb_frames,
@@ -102,7 +103,7 @@ def make_links_processor(
     )
 
     cfg = cfg or PipelineConfig()
-    kb_art = kb if kb is not None else kb_frames(entities, cfg)
+    kb_art = kb if kb is not None else kb_frames(entities)
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         docs = extract_documents(batch_df)
@@ -110,9 +111,9 @@ def make_links_processor(
         # the fused matcher collects the gazetteer at plan construction,
         # i.e. once per MICRO-BATCH here — same rationale as
         # stream_mentions_to.
-        mentions = detect_mentions(docs, gazetteer, cfg.max_mention_tokens)
-        cands = candidate_pairs(mentions, entities, cfg, kb=kb_art)
-        scored = score_candidates(cands, entities, cfg, gazetteer)
+        mentions = detect_mentions(docs, gazetteer, MAX_MENTION_TOKENS)
+        cands = candidate_pairs(mentions, kb_art)
+        scored = score_candidates(cands, gazetteer)
         links = mention_links(link_top1(scored, cfg.link_threshold), mentions)
         if epoch_idempotent:
             links.write.mode("overwrite").parquet(f"{out_path}/_epoch={epoch_id}")

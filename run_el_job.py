@@ -55,11 +55,18 @@ def main() -> None:
 
     spark = get_spark(app_name="el_job")
     if args.synthetic:
-        from e2e_el_spark.synth import aliases_df, entities_df, pages_df
+        from e2e_el_spark.synth import aliases_df, entities_df, pages_df, via_parquet
 
+        # the KB tables go through parquet so Spark plans their joins from
+        # real sizes (see via_parquet)
+        inputs = f"{args.workdir}/_inputs"
         pages = pages_df(spark, args.synthetic, n_entities=args.n_entities, seed=args.seed)
-        entities = entities_df(spark, args.n_entities, seed=args.seed)
-        gazetteer = aliases_df(spark, args.n_entities, seed=args.seed)
+        entities = via_parquet(
+            entities_df(spark, args.n_entities, seed=args.seed), f"{inputs}/entities"
+        )
+        gazetteer = via_parquet(
+            aliases_df(spark, args.n_entities, seed=args.seed), f"{inputs}/aliases"
+        )
     else:
         if not (args.pages and args.entities):
             ap.error("--pages and --entities required without --synthetic")

@@ -8,17 +8,12 @@ scores the downstream link threshold sees.
 """
 
 import re
-from dataclasses import replace
 
 import pytest
 from pyspark.sql import functions as F
 
-from e2e_el_spark.pipeline import (
-    PipelineConfig,
-    candidate_pairs,
-    generated_candidates,
-    kb_frames,
-)
+from e2e_el_spark import pipeline
+from e2e_el_spark.pipeline import candidate_pairs, generated_candidates, kb_frames
 from e2e_el_spark.operators.blocking import tfidf_vectors
 from e2e_el_spark.synth import entities_df
 from tests.plan_inspect import broadcast_threshold, evh_pruned
@@ -29,26 +24,30 @@ N_ENT = 60
 @pytest.fixture(scope="module")
 def kb(spark):
     ents = entities_df(spark, N_ENT, seed=3).cache()
-    cfg = PipelineConfig()
-    frames = kb_frames(ents, cfg, n_entities=N_ENT)
-    return ents, cfg, frames
+    frames = kb_frames(ents, n_entities=N_ENT)
+    return ents, frames
 
 
 @pytest.fixture(scope="module")
 def surfaces_as_mentions(spark, kb):
     # surfaces == entity names: every surface has an exact-match candidate
-    ents, _, _ = kb
+    ents, _ = kb
     return ents.select(F.col("name").alias("text")).cache()
 
 
-def _exact_cosines(frames, cfg, surfaces):
+def _surface_vectors(vocab, surfaces):
+    """Surface tf-idf vectors as the stage builds them."""
+    return tfidf_vectors(
+        surfaces.select(F.col("text").alias("surface")).distinct(),
+        "surface", "surface", vocab, pipeline.NGRAM_MAX, pipeline.COMPAT_NGRAMS,
+        min_weight=pipeline.TFIDF_MIN_WEIGHT,
+    )
+
+
+def _exact_cosines(frames, surfaces):
     """Brute-force dict dot of the same normalized vectors the stage uses."""
     vocab, ev, _ = frames
-    sv = tfidf_vectors(
-        surfaces.select(F.col("text").alias("surface")).distinct(),
-        "surface", "surface", vocab, cfg.ngram_max, cfg.compat_ngrams,
-        min_weight=cfg.tfidf_min_weight,
-    )
+    sv = _surface_vectors(vocab, surfaces)
     s_vecs: dict[str, dict[str, float]] = {}
     for r in sv.collect():
         s_vecs.setdefault(r.surface, {})[r.gram] = r.weight
@@ -59,10 +58,10 @@ def _exact_cosines(frames, cfg, surfaces):
 
 
 def test_scores_are_exact_tfidf_cosine(spark, kb, surfaces_as_mentions):
-    ents, cfg, frames = kb
-    out = candidate_pairs(surfaces_as_mentions, ents, cfg, kb=frames).collect()
+    _, frames = kb
+    out = candidate_pairs(surfaces_as_mentions, frames).collect()
     assert out, "no candidate pairs produced"
-    s_vecs, e_vecs = _exact_cosines(frames, cfg, surfaces_as_mentions)
+    s_vecs, e_vecs = _exact_cosines(frames, surfaces_as_mentions)
     for row in out:
         sv, evv = s_vecs.get(row.surface, {}), e_vecs.get(row.entity_id, {})
         want = sum(w * evv[g] for g, w in sv.items() if g in evv)
@@ -70,14 +69,17 @@ def test_scores_are_exact_tfidf_cosine(spark, kb, surfaces_as_mentions):
             row.surface, row.entity_id)
 
 
-def test_prescore_cut_bounds_and_keeps_exact_match(spark, kb, surfaces_as_mentions):
-    ents, cfg, frames = kb
-    tight = replace(cfg, prescore_keep=4, tfidf_topk=2)
-    rows = candidate_pairs(surfaces_as_mentions, ents, tight, kb=frames).collect()
+def test_prescore_cut_bounds_and_keeps_exact_match(
+    spark, kb, surfaces_as_mentions, monkeypatch
+):
+    ents, frames = kb
+    monkeypatch.setattr(pipeline, "PRESCORE_KEEP", 4)
+    monkeypatch.setattr(pipeline, "TFIDF_TOPK", 2)
+    rows = candidate_pairs(surfaces_as_mentions, frames).collect()
     per_surface: dict[str, list] = {}
     for r in rows:
         per_surface.setdefault(r.surface, []).append(r)
-    cap = min(tight.prescore_keep, tight.tfidf_topk * 2)
+    cap = min(pipeline.PRESCORE_KEEP, pipeline.TFIDF_TOPK * 2)
     names = {r.name: r.entity_id for r in ents.collect()}
     for surface, cands in per_surface.items():
         assert len(cands) <= cap
@@ -90,18 +92,21 @@ def test_prescore_cut_bounds_and_keeps_exact_match(spark, kb, surfaces_as_mentio
     assert set(per_surface) == set(names), "a surface lost ALL candidates"
 
 
-def test_huge_prescore_keep_equals_exhaustive_rescore(spark, kb, surfaces_as_mentions):
-    """prescore_keep ≥ |candidates| ⇒ survivors == all candidates, so the
+def test_huge_prescore_keep_equals_exhaustive_rescore(
+    spark, kb, surfaces_as_mentions, monkeypatch
+):
+    """PRESCORE_KEEP ≥ |candidates| ⇒ survivors == all candidates, so the
     two-phase path degenerates to the r4 single-phase exact rescore; the
-    output must then be the exact top-(2·tfidf_topk) regardless of
-    prescore_grams."""
-    ents, cfg, frames = kb
-    wide = replace(cfg, prescore_keep=10**6, prescore_grams=3)
+    output must then be the exact top-(2·TFIDF_TOPK) regardless of
+    PRESCORE_GRAMS."""
+    _, frames = kb
+    monkeypatch.setattr(pipeline, "PRESCORE_KEEP", 10**6)
+    monkeypatch.setattr(pipeline, "PRESCORE_GRAMS", 3)
     out = {
         (r.surface, r.entity_id): r.tfidf_cos
-        for r in candidate_pairs(surfaces_as_mentions, ents, wide, kb=frames).collect()
+        for r in candidate_pairs(surfaces_as_mentions, frames).collect()
     }
-    s_vecs, e_vecs = _exact_cosines(frames, cfg, surfaces_as_mentions)
+    s_vecs, e_vecs = _exact_cosines(frames, surfaces_as_mentions)
     for surface, svec in s_vecs.items():
         scored = sorted(
             (
@@ -119,13 +124,9 @@ def test_huge_prescore_keep_equals_exhaustive_rescore(spark, kb, surfaces_as_men
 
 
 def test_gen_posting_cap_is_subset_of_uncapped(spark, kb, surfaces_as_mentions):
-    ents, cfg, frames = kb
+    _, frames = kb
     vocab, ev, _ = frames
-    sv = tfidf_vectors(
-        surfaces_as_mentions.select(F.col("text").alias("surface")).distinct(),
-        "surface", "surface", vocab, cfg.ngram_max, cfg.compat_ngrams,
-        min_weight=cfg.tfidf_min_weight,
-    )
+    sv = _surface_vectors(vocab, surfaces_as_mentions)
     rare = vocab.filter(F.col("is_rare")).select("gram", "df")
     # gen_topk huge ⇒ output is exactly the pairs sharing ≥1 rare prefix
     # gram, so a per-gram posting cap can only SHRINK the set (at this tiny
@@ -133,13 +134,13 @@ def test_gen_posting_cap_is_subset_of_uncapped(spark, kb, surfaces_as_mentions):
     full = {
         (r.surface, r.entity_id)
         for r in generated_candidates(
-            sv, ev, rare, cfg.gen_prefix_len, 10**6, max_posting=None
+            sv, ev, rare, pipeline.GEN_PREFIX_LEN, 10**6, max_posting=None
         ).collect()
     }
     capped = {
         (r.surface, r.entity_id)
         for r in generated_candidates(
-            sv, ev, rare, cfg.gen_prefix_len, 10**6, max_posting=2
+            sv, ev, rare, pipeline.GEN_PREFIX_LEN, 10**6, max_posting=2
         ).collect()
     }
     assert capped, "posting cap removed every generated candidate"
@@ -149,8 +150,8 @@ def test_gen_posting_cap_is_subset_of_uncapped(spark, kb, surfaces_as_mentions):
 def test_gen_posting_cap_drops_lowest_weight_posting(spark):
     """Handcrafted frames: one rare gram with a 3-entity posting list and
     max_posting=2 must drop exactly the lowest-weight (E3) posting — the
-    deterministic weight-desc, entity_id-asc order from the config
-    rationale (pipeline.py max_gen_posting)."""
+    deterministic weight-desc, entity_id-asc order from the constant's
+    rationale (pipeline.py MAX_GEN_POSTING)."""
     sv = spark.createDataFrame(
         [("S", "g1", 1.0), ("S", "g2", 0.5)], ["surface", "gram", "weight"])
     ev = spark.createDataFrame(
@@ -177,14 +178,14 @@ def test_shuffled_kb_path_equals_broadcast_path(spark, kb, surfaces_as_mentions,
     appear on the probe side. The KB frames are read back from parquet, as
     ``build_kb_artifacts`` serves them: an unmaterialized cache carries its
     plan's (far larger) size estimate, which would prune on both sides."""
-    ents, cfg, frames = kb
+    _, frames = kb
     stored = []
     for name, df in zip(("vocab", "ev", "eb"), frames):
         df.write.parquet(str(tmp_path / name))
         stored.append(spark.read.parquet(str(tmp_path / name)))
 
     def run():
-        out = candidate_pairs(surfaces_as_mentions, ents, cfg, kb=tuple(stored))
+        out = candidate_pairs(surfaces_as_mentions, tuple(stored))
         return out, {(r.surface, r.entity_id): r.tfidf_cos for r in out.collect()}
 
     plan_small, small = run()
@@ -203,8 +204,8 @@ def test_surfaces_keep_shuffle_parallelism(spark, kb, surfaces_as_mentions):
     by an explicit-count repartition, which AQE never coalesces; sized by its
     compact bytes the coalesced cache was one partition and every explode
     downstream of it ran as a single task."""
-    ents, cfg, frames = kb
-    out = candidate_pairs(surfaces_as_mentions, ents, cfg, kb=frames)
+    _, frames = kb
+    out = candidate_pairs(surfaces_as_mentions, frames)
     out.collect()
     plan = out._jdf.queryExecution().executedPlan().toString()
     sp = spark.conf.get("spark.sql.shuffle.partitions")

@@ -6,6 +6,8 @@ import os
 import subprocess
 import sys
 
+import pytest
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -34,3 +36,36 @@ def test_cli_real_parquet_inputs(spark, tmp_path):
     assert 0 < out["clusters"] <= out["mentions_clustered"]
     # stage checkpoints exist under the workdir (resumable layout)
     assert os.path.exists(str(tmp_path / "wd" / "06_clusters" / "_STAGE_COMPLETE"))
+
+
+def test_synthetic_kb_inputs_are_parquet_scans(spark, tmp_path, monkeypatch):
+    """``--synthetic`` feeds run_pipeline KB tables read back from parquet
+    under ``{workdir}/_inputs``: a generator frame is estimated at 8 bytes
+    per input-range row, so Spark's size rule would plan the KB joins from
+    a figure far below the real table."""
+    from e2e_el_spark import pipeline, session
+
+    import run_el_job
+
+    captured = {}
+
+    def fake_run_pipeline(spark_, pages, entities, gazetteer, workdir, cfg, **kw):
+        captured.update(entities=entities, gazetteer=gazetteer)
+        raise RuntimeError("captured")
+
+    monkeypatch.setattr(pipeline, "run_pipeline", fake_run_pipeline)
+    monkeypatch.setattr(session, "get_spark", lambda **kw: spark)
+    workdir = str(tmp_path / "wd")
+    monkeypatch.setattr(sys, "argv", [
+        "run_el_job.py", "--synthetic", "10", "--n-entities", "20",
+        "--workdir", workdir,
+    ])
+    with pytest.raises(RuntimeError, match="captured"):
+        run_el_job.main()
+    for name in ("entities", "gazetteer"):
+        plan = captured[name]._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.startswith("Relation ") and " parquet" in plan, (name, plan)
+        assert all(
+            f.startswith(f"file://{workdir}/_inputs/") or f.startswith(f"file:{workdir}/_inputs/")
+            for f in captured[name].inputFiles()
+        ), captured[name].inputFiles()

@@ -183,3 +183,15 @@ def test_kb_fingerprint_param_resumes_with_zero_jobs(spark, corpus, tmp_path):
         sc.setJobGroup(None, None)
     assert n_jobs == 0, n_jobs
     assert vocab.count() > 0 and ev.count() > 0  # artifacts readable
+
+
+def test_config_holds_only_caller_set_values():
+    """PipelineConfig carries the values a caller sets; every other tuning
+    value is an engine constant in pipeline.py."""
+    import dataclasses
+
+    from e2e_el_spark.pipeline import PipelineConfig
+
+    assert [f.name for f in dataclasses.fields(PipelineConfig)] == [
+        "link_threshold", "langs", "segment_budget_chars", "rerank_topk",
+    ]

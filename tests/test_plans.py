@@ -102,11 +102,12 @@ def test_vocab_topk_is_distributed(spark):
     assert "SinglePartition" not in plan, plan
 
 
-def test_candidate_rescore_broadcasts_kb_vectors(spark):
+def test_candidate_rescore_broadcasts_kb_vectors(spark, monkeypatch):
     """The exact-rescore join's entity-vector side (the KB dimension) must
     be a BroadcastHashJoin — a sort-merge join there would shuffle the wide
     cands × grams intermediate on (entity_id, gram)."""
-    from e2e_el_spark.pipeline import PipelineConfig, candidate_pairs
+    from e2e_el_spark import pipeline
+    from e2e_el_spark.pipeline import candidate_pairs, kb_frames
     from e2e_el_spark.synth import aliases_df, entities_df
 
     ents = entities_df(spark, 30, seed=5)
@@ -114,7 +115,8 @@ def test_candidate_rescore_broadcasts_kb_vectors(spark):
         F.concat_ws("#", "entity_id", "alias").alias("mention_id"),
         F.col("alias").alias("text"),
     )
-    out = candidate_pairs(mentions, ents, PipelineConfig(vocab_size=500))
+    monkeypatch.setattr(pipeline, "VOCAB_SIZE", 500)
+    out = candidate_pairs(mentions, kb_frames(ents))
     plan = _plan(out)
     assert "BroadcastHashJoin" in plan, plan
 
@@ -148,23 +150,23 @@ def test_kb_proportional_joins_carry_no_broadcast_hint(spark):
     rare grams, the vocabulary and distinct gram hashes. The threshold is
     forced to -1 so the plan also holds the evh prunes and their hints."""
     from e2e_el_spark.pipeline import (
-        PipelineConfig, candidate_pairs, rerank_candidates, score_candidates,
+        candidate_pairs, kb_frames, rerank_candidates, score_candidates,
     )
     from e2e_el_spark.synth import aliases_df, entities_df
 
-    cfg = PipelineConfig(rerank_topk=3)
     ents = entities_df(spark, 30, seed=5)
     gaz = aliases_df(spark, 30, seed=5)
     mentions = gaz.select(
         F.col("alias").alias("mention_id"), F.col("alias").alias("text")
     )
+    ctx = _marked_contexts(mentions.select(F.col("text").alias("surface")))
     vocab_bounded = {
         frozenset({"gram", "df"}), frozenset({"gram", "idf"}), frozenset({"_gh"}),
     }
     with broadcast_threshold(spark, "-1"):
-        cands = candidate_pairs(mentions, ents, cfg)
-        scored = score_candidates(cands.limit(5), ents, cfg, gaz)
-        reranked = rerank_candidates(scored, ents, cfg)
+        cands = candidate_pairs(mentions, kb_frames(ents))
+        scored = score_candidates(cands.limit(5), gaz)
+        reranked = rerank_candidates(scored, ents, ctx, 3)
     assert evh_pruned(cands)
     assert frozenset({"_gh"}) in broadcast_hinted_columns(cands)
     for df in (cands, scored, reranked):
@@ -270,9 +272,18 @@ def test_clusters_from_links_plan_is_one_join_chain(spark, tmp_path):
     assert len(re.findall(r"\bExchange ", plan)) <= 3, plan
 
 
+def _marked_contexts(surfaces):
+    """(surface, context): one [Ms]/[Me]-marked window per distinct surface,
+    the shape of ``surface_context_windows``."""
+    return surfaces.distinct().select(
+        "surface",
+        F.concat(F.lit("see [Ms] "), "surface", F.lit(" [Me] here")).alias("context"),
+    )
+
+
 def _python_stage_inputs(spark, tmp_path):
     """Parquet-backed (one file each, like the stage checkpoints) candidate
-    pairs, scored pairs, entities and gazetteer."""
+    pairs, scored pairs, context windows, entities and gazetteer."""
     from e2e_el_spark.synth import entities_df
 
     ents = entities_df(spark, 12, seed=4)
@@ -281,7 +292,10 @@ def _python_stage_inputs(spark, tmp_path):
         F.col("alias").alias("surface"), "entity_id", F.lit(0.5).alias("tfidf_cos")
     )
     scored = cands.withColumn("score", F.lit(0.5))
-    frames = {"ents": ents, "gaz": gaz, "cands": cands, "scored": scored}
+    ctx = _marked_contexts(cands.select("surface"))
+    frames = {
+        "ents": ents, "gaz": gaz, "cands": cands, "scored": scored, "ctx": ctx,
+    }
     for name, df in frames.items():
         df.coalesce(1).write.parquet(str(tmp_path / name))
     return {name: spark.read.parquet(str(tmp_path / name)) for name in frames}
@@ -296,10 +310,10 @@ def test_scoring_python_runs_over_shuffle_partitions(spark, tmp_path):
     the Python UDF ran as one task."""
     import re
 
-    from e2e_el_spark.pipeline import PipelineConfig, score_candidates
+    from e2e_el_spark.pipeline import score_candidates
 
     t = _python_stage_inputs(spark, tmp_path)
-    out = score_candidates(t["cands"], t["ents"], PipelineConfig(), t["gaz"])
+    out = score_candidates(t["cands"], t["gaz"])
     out.collect()
     plan = _plan(out).split("== Initial Plan ==")[0]
     sp = spark.conf.get("spark.sql.shuffle.partitions")
@@ -315,10 +329,10 @@ def test_rerank_python_runs_over_shuffle_partitions(spark, tmp_path):
     explicit-count hash exchange on surface."""
     import re
 
-    from e2e_el_spark.pipeline import PipelineConfig, rerank_candidates
+    from e2e_el_spark.pipeline import rerank_candidates
 
     t = _python_stage_inputs(spark, tmp_path)
-    out = rerank_candidates(t["scored"], t["ents"], PipelineConfig(rerank_topk=3))
+    out = rerank_candidates(t["scored"], t["ents"], t["ctx"], 3)
     out.collect()
     plan = _plan(out).split("== Initial Plan ==")[0]
     sp = spark.conf.get("spark.sql.shuffle.partitions")
@@ -328,3 +342,22 @@ def test_rerank_python_runs_over_shuffle_partitions(spark, tmp_path):
         r"hashpartitioning\(surface#\d+, %s\), REPARTITION_BY_NUM" % sp,
         first_exchange,
     ), plan
+
+
+def test_rerank_ranks_once_with_no_shuffle_above_the_scorer(spark, tmp_path):
+    """04b_rerank's top-k window already leaves at most k rows per surface,
+    so the cross scores are blended as they come out of the MapInPandas:
+    the executed plan has the one top-k Window and no Exchange above the
+    scorer (a second per-surface rank there re-shuffled every row and
+    dropped none)."""
+    import re
+
+    from e2e_el_spark.pipeline import rerank_candidates
+
+    t = _python_stage_inputs(spark, tmp_path)
+    out = rerank_candidates(t["scored"], t["ents"], t["ctx"], 3)
+    out.collect()
+    plan = _plan(out).split("== Initial Plan ==")[0]
+    assert len(re.findall(r"\bWindow\b", plan)) == 1, plan
+    above = plan.split("MapInPandas", 1)[0]
+    assert "Exchange" not in above, plan

@@ -187,8 +187,8 @@ def test_stream_links_parity_with_batch_backfill(spark, tmp_path):
     from e2e_el_spark.extract import extract_documents
     from e2e_el_spark.operators.mentions import detect_mentions
     from e2e_el_spark.pipeline import (
-        PipelineConfig, candidate_pairs, kb_frames, link_top1, mention_links,
-        score_candidates,
+        MAX_MENTION_TOKENS, PipelineConfig, candidate_pairs, kb_frames, link_top1,
+        mention_links, score_candidates,
     )
     from e2e_el_spark.streaming import stream_links_to, stream_pages
     from e2e_el_spark.synth import aliases_df, entities_df, pages_df
@@ -218,9 +218,9 @@ def test_stream_links_parity_with_batch_backfill(spark, tmp_path):
         for r in spark.read.parquet(out).collect()
     )
     docs = extract_documents(pages)
-    mentions = detect_mentions(docs, gaz, cfg.max_mention_tokens)
-    cands = candidate_pairs(mentions, ents, cfg, kb=kb_frames(ents, cfg))
-    scored = score_candidates(cands, ents, cfg, gaz)
+    mentions = detect_mentions(docs, gaz, MAX_MENTION_TOKENS)
+    cands = candidate_pairs(mentions, kb_frames(ents))
+    scored = score_candidates(cands, gaz)
     want = sorted(
         (r.mention_id, r.entity_id, round(r.score, 9))
         for r in mention_links(link_top1(scored, cfg.link_threshold), mentions).collect()
