@@ -177,15 +177,3 @@ def rebase_mentions(
         F.col("start_index").alias("orig_start_index"),
     )
 
-
-def segment_corpus(
-    documents: DataFrame,
-    mentions: DataFrame,
-    budget: int = 2000,
-    id_col: str = "document_id",
-    text_col: str = "text",
-    separators: tuple[str, ...] = DEFAULT_SEPARATORS,
-) -> tuple[DataFrame, DataFrame]:
-    """The generic W1 operator: (segments, rebased_mentions)."""
-    segments = segment_documents(documents, budget, id_col, text_col, separators)
-    return segments, rebase_mentions(mentions, segments)

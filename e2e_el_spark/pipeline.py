@@ -39,7 +39,8 @@ from e2e_el_spark.operators.blocking import (
 )
 from e2e_el_spark.operators.mentions import detect_mentions
 from e2e_el_spark.operators.scoring import DEFAULT_WEIGHTS, cross_scores, score_pairs
-from e2e_el_spark.operators.segmentation import segment_documents
+# unused here; kept importable because perfbench/spans.py wraps it by name
+from e2e_el_spark.operators.segmentation import segment_documents  # noqa: F401
 
 
 # Engine constants: engine code, not configuration. Resume stays safe
@@ -123,13 +124,6 @@ class PipelineConfig:
     # Iceberg/parquet pages table this predicate prunes partitions at the
     # scan (SURVEY.md §4 "rewrites Catalyst gives us for free")
     langs: tuple[str, ...] | None = None
-    # W1: split documents into ≤ this many chars by greedy sentence packing
-    # before mention detection (CollectiveEL_data_formatter.py:83-186 — any
-    # real web corpus has pages far past the model budget). Mentions are
-    # detected per segment and translated back to corpus coordinates, so
-    # downstream stages and evaluation are segmentation-transparent.
-    # None disables.
-    segment_budget_chars: int | None = 2000
     # L3: cross-encoder rerank of the top-N candidates per surface after
     # score_candidates (modeling_FullTransformer.py:62-101), fed document
     # context windows. None disables; when set, the blended score is
@@ -705,36 +699,10 @@ def run_pipeline(
         pages = pages.filter(F.col("lang").isin(*cfg.langs))
     documents = runner.run("01_extract", lambda: extract_documents(pages))
 
-    def _mentions() -> DataFrame:
-        docs = documents
-        if cfg.segment_budget_chars is not None:
-            # W1: detect on budget-bounded segments, then translate spans
-            # back to corpus coordinates so the rest of the pipeline (and the
-            # evaluation join on (document_id, start, end)) never sees
-            # segment ids
-            segs = segment_documents(documents, cfg.segment_budget_chars)
-            docs = segs.select(F.col("segment_id").alias("document_id"), "text")
-        m = detect_mentions(docs, gazetteer, MAX_MENTION_TOKENS, mode="fused")
-        if cfg.segment_budget_chars is None:
-            return m
-        back = segs.select(
-            F.col("segment_id"), F.col("document_id").alias("_orig"), "seg_start"
-        )
-        start = (F.col("start_index") + F.col("seg_start")).cast("int")
-        end = (F.col("end_index") + F.col("seg_start")).cast("int")
-        return m.join(back, m["document_id"] == back["segment_id"]).select(
-            F.concat_ws(
-                "", F.col("_orig"), F.lit("#"),
-                start.cast("string"), F.lit("-"), end.cast("string"),
-            ).alias("mention_id"),
-            F.col("_orig").alias("document_id"),
-            start.alias("start_index"),
-            end.alias("end_index"),
-            "text",
-            "gazetteer_entity_id",
-        )
-
-    mentions = runner.run("02_mentions", _mentions)
+    mentions = runner.run(
+        "02_mentions",
+        lambda: detect_mentions(documents, gazetteer, MAX_MENTION_TOKENS, mode="fused"),
+    )
     kb = build_kb_artifacts(
         spark, entities, cfg, kb_workdir or os.path.join(workdir, "_kb"),
         kb_fingerprint=kb_fp,

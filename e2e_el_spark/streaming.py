@@ -107,10 +107,10 @@ def make_links_processor(
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         docs = extract_documents(batch_df)
-        # default (window-form) detection, not run_pipeline's fused form:
-        # the fused matcher collects the gazetteer at plan construction,
-        # i.e. once per MICRO-BATCH here — same rationale as
-        # stream_mentions_to.
+        # default (window-form) detection on whole documents, not
+        # run_pipeline's fused form: the fused matcher collects the
+        # gazetteer at plan construction, i.e. once per MICRO-BATCH here —
+        # same rationale as stream_mentions_to.
         mentions = detect_mentions(docs, gazetteer, MAX_MENTION_TOKENS)
         cands = candidate_pairs(mentions, kb_art)
         scored = score_candidates(cands, gazetteer)
@@ -137,14 +137,16 @@ def stream_links_to(
     micro-batch (the incremental form of the whole linking pipeline, not just
     mention detection).
 
-    Per-micro-batch links are IDENTICAL to a batch backfill over the union of
-    the batches: every per-mention signal is a pure function of (surface, KB)
-    — the KB-only vocabulary (``pipeline._kb_vocab``) removed the last
-    corpus-level dependency (corpus IDF), so scoring cannot see batch
-    composition. foreachBatch reuses the unchanged batch operators; pass
-    precomputed ``kb`` artifacts (``pipeline.build_kb_artifacts``) so each
-    micro-batch plan starts from the parquet artifacts instead of re-deriving
-    the KB side per epoch.
+    Per-micro-batch links are IDENTICAL to ``run_pipeline``'s ``05_links``
+    over the union of the batches: both detect mentions on the same whole
+    documents (the batch side in the fused form, this side in the window
+    form; the two are equivalence-tested), and every per-mention signal is
+    a pure function of (surface, KB) — the KB-only vocabulary
+    (``pipeline._kb_vocab``) removed the last corpus-level dependency
+    (corpus IDF), so scoring cannot see batch composition. foreachBatch
+    reuses the unchanged batch operators; pass precomputed ``kb`` artifacts
+    (``pipeline.build_kb_artifacts``) so each micro-batch plan starts from
+    the parquet artifacts instead of re-deriving the KB side per epoch.
 
     Delivery: the default append sink is AT-LEAST-ONCE — a retried epoch
     double-appends its links (same caveat as ``stream_mentions_to``).

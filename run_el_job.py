@@ -34,10 +34,6 @@ def main() -> None:
     ap.add_argument("--langs", default=None, help="comma-separated language filter, e.g. en,de")
     ap.add_argument("--link-threshold", type=float, default=0.55)
     ap.add_argument(
-        "--segment-budget", type=int, default=2000,
-        help="W1: split docs into <=N-char segments before mention detection; 0 disables",
-    )
-    ap.add_argument(
         "--rerank-topk", type=int, default=0,
         help="L3: cross-encoder rerank of the top-K candidates per surface; 0 disables",
     )
@@ -81,7 +77,6 @@ def main() -> None:
     cfg = PipelineConfig(
         link_threshold=args.link_threshold,
         langs=tuple(args.langs.split(",")) if args.langs else None,
-        segment_budget_chars=args.segment_budget or None,
         rerank_topk=args.rerank_topk or None,
     )
     clusters = run_pipeline(

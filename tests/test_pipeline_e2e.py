@@ -77,21 +77,6 @@ def test_config_change_invalidates_checkpoints(spark, corpus, tmp_path, caplog):
     assert n_strict > n_loose
 
 
-def test_segmentation_transparent_to_clusters(spark, corpus, tmp_path):
-    """W1 wiring: a tiny segment budget forces real multi-segment docs, yet
-    cluster output stays in corpus coordinates and F1 holds."""
-    from e2e_el_spark.pipeline import PipelineConfig
-
-    clusters = run_pipeline(
-        spark, corpus["pages"], corpus["entities"], corpus["gazetteer"],
-        str(tmp_path / "seg"), PipelineConfig(segment_budget_chars=200),
-    )
-    m = evaluate_pipeline(clusters, corpus["gold"])
-    assert m["f1"] >= 0.99, m
-    # mention ids are corpus-coordinate content hashes, not segment ids
-    assert all("#" in r.mention_id for r in clusters.limit(20).collect())
-
-
 def test_rerank_stage_preserves_f1(spark, corpus, tmp_path):
     """L3 on: cross-encoder rerank of the top-5 per surface must keep the F1
     gate (VERDICT round-1 task 6: unchanged-or-better with rerank on)."""
@@ -193,5 +178,5 @@ def test_config_holds_only_caller_set_values():
     from e2e_el_spark.pipeline import PipelineConfig
 
     assert [f.name for f in dataclasses.fields(PipelineConfig)] == [
-        "link_threshold", "langs", "segment_budget_chars", "rerank_topk",
+        "link_threshold", "langs", "rerank_topk",
     ]

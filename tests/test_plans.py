@@ -1,6 +1,7 @@
 """Physical-plan assertions: the optimizations SURVEY.md §4 promises must be
 visible in explain() output — pushdown, pruning, broadcast, codegen."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from e2e_el_spark.extract import extract_documents
@@ -62,6 +63,40 @@ def test_fused_detector_plan_has_no_pre_scan_exchange(spark):
     assert "Generate" not in plan, plan
     below_scan = plan.split("MapInPandas")[-1]
     assert "Exchange" not in below_scan, plan
+
+
+def test_pipeline_mentions_stage_is_one_python_scan(spark, tmp_path, monkeypatch):
+    """run_pipeline's 02_mentions frame is the fused detector over the
+    01_extract documents: one MapInPandas and no join (no segmenter pass,
+    no join back to corpus coordinates)."""
+    from e2e_el_spark.lineage import StageRunner
+    from e2e_el_spark.pipeline import run_pipeline
+    from e2e_el_spark.synth import entities_df, pages_df
+
+    class Captured(Exception):
+        pass
+
+    frames = {}
+    run = StageRunner.run
+
+    def capture(self, stage, fn, force=False):
+        if stage != "02_mentions":
+            return run(self, stage, fn, force)
+        run(self, stage, lambda: frames.setdefault(stage, fn()), force)
+        raise Captured
+
+    monkeypatch.setattr(StageRunner, "run", capture)
+    with pytest.raises(Captured):
+        run_pipeline(
+            spark, pages_df(spark, 20, n_entities=15, seed=5, partitions=2),
+            entities_df(spark, 15, seed=5), aliases_df(spark, 15, seed=5),
+            str(tmp_path / "work"),
+        )
+    mentions = frames["02_mentions"]
+    assert mentions.collect()
+    plan = _plan(mentions).split("== Initial Plan ==")[0]
+    assert plan.count("MapInPandas") == 1, plan
+    assert "Join" not in plan, plan
 
 
 def test_anchor_pruned_window_form_gates_explode_on_anchor_join(spark):

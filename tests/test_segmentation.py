@@ -8,7 +8,6 @@ from e2e_el_spark.operators.mentions import detect_mentions
 from e2e_el_spark.operators.segmentation import (
     _pack_segments,
     rebase_mentions,
-    segment_corpus,
     segment_documents,
 )
 
@@ -53,7 +52,8 @@ def test_rebase_slice_invariant(spark):
         "entity_id string, alias string",
     )
     mentions = detect_mentions(docs, gaz)
-    segments, rebased = segment_corpus(docs, mentions, budget=40)
+    segments = segment_documents(docs, budget=40)
+    rebased = rebase_mentions(mentions, segments)
     seg_text = {r.segment_id: r.text for r in segments.collect()}
     rows = rebased.collect()
     assert len(rows) == mentions.count()  # nothing straddles ('. ' never in an alias)

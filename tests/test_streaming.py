@@ -177,19 +177,46 @@ def test_stream_dedup_composite_key_survives_forced_collision(spark, tmp_path):
     assert len(rows) == 2  # the true duplicate (doc 3 or 1) was dropped
 
 
+def _st_louis_page_and_kb(spark, pages, ents, gaz):
+    """One more page whose paragraph is longer than 2,000 chars, and a KB
+    entity "St. Louis" that the page mentions where greedy '. '-packing at
+    2,000 chars would cut the alias in two (``St. `` | ``Louis today``)."""
+    from e2e_el_spark.extract import extract_text
+    from e2e_el_spark.operators.segmentation import _pack_segments
+
+    para = (
+        "Traders met again to review the weekly figures. " * 40
+        + "The report on the market in St. "
+        + "Louis today drew a crowd of buyers and sellers from across the region. " * 2
+    )
+    html = f"<html><head><title>Market report</title></head><body><p>{para}</p></body></html>"
+    text = extract_text(html)
+    assert len(para) > 2000 and "St. Louis" in text
+    assert not any("St. Louis" in s for s in _pack_segments(text, 2000, (". ", "\n")))
+    page = spark.createDataFrame(
+        [("https://example.org/page/99999", None, html.encode(), text, "en")],
+        pages.schema,
+    )
+    eid = "E999999"
+    return (
+        pages.unionByName(page),
+        ents.unionByName(spark.createDataFrame([(eid, "PLACE", "St. Louis")], ents.schema)),
+        gaz.unionByName(spark.createDataFrame([(eid, "St. Louis", 2)], gaz.schema)),
+        eid,
+    )
+
+
 def test_stream_links_parity_with_batch_backfill(spark, tmp_path):
     """Full incremental score+link via foreachBatch over a 2-micro-batch
-    stream == the batch backfill over the union, byte-for-byte: every signal
-    is a pure function of (surface, KB) since the KB-only vocabulary removed
-    corpus-level IDF (pipeline._kb_vocab docstring)."""
+    stream == run_pipeline's own 05_links table over the same pages,
+    byte-for-byte: both detect on whole documents, and every signal is a
+    pure function of (surface, KB) since the KB-only vocabulary removed
+    corpus-level IDF (pipeline._kb_vocab docstring). One page holds an
+    alias containing '. ' in a paragraph past 2,000 chars, which a
+    sentence-packing segmenter would split."""
     import os
 
-    from e2e_el_spark.extract import extract_documents
-    from e2e_el_spark.operators.mentions import detect_mentions
-    from e2e_el_spark.pipeline import (
-        MAX_MENTION_TOKENS, PipelineConfig, candidate_pairs, kb_frames, link_top1,
-        mention_links, score_candidates,
-    )
+    from e2e_el_spark.pipeline import PipelineConfig, run_pipeline
     from e2e_el_spark.streaming import stream_links_to, stream_pages
     from e2e_el_spark.synth import aliases_df, entities_df, pages_df
 
@@ -198,9 +225,12 @@ def test_stream_links_parity_with_batch_backfill(spark, tmp_path):
     ckpt = str(tmp_path / "pl_ckpt")
     os.makedirs(src)
     cfg = PipelineConfig()
-    ents = entities_df(spark, 30, seed=3)
-    gaz = aliases_df(spark, 30, seed=3)
-    pages = pages_df(spark, 30, n_entities=30, seed=3, partitions=2)
+    pages, ents, gaz, st_louis = _st_louis_page_and_kb(
+        spark,
+        pages_df(spark, 30, n_entities=30, seed=3, partitions=2),
+        entities_df(spark, 30, seed=3),
+        aliases_df(spark, 30, seed=3),
+    )
 
     # two waves → two checkpointed availableNow passes (two micro-batch epochs)
     wave1 = pages.filter(F.col("url") < "https://example.org/page/00015")
@@ -217,15 +247,14 @@ def test_stream_links_parity_with_batch_backfill(spark, tmp_path):
         (r.mention_id, r.entity_id, round(r.score, 9))
         for r in spark.read.parquet(out).collect()
     )
-    docs = extract_documents(pages)
-    mentions = detect_mentions(docs, gaz, MAX_MENTION_TOKENS)
-    cands = candidate_pairs(mentions, kb_frames(ents))
-    scored = score_candidates(cands, gaz)
+    work = str(tmp_path / "batch")
+    run_pipeline(spark, pages, ents, gaz, work, cfg)
     want = sorted(
         (r.mention_id, r.entity_id, round(r.score, 9))
-        for r in mention_links(link_top1(scored, cfg.link_threshold), mentions).collect()
+        for r in spark.read.parquet(os.path.join(work, "05_links", "data")).collect()
     )
-    assert len(got) > 0 and got == want
+    assert any(e == st_louis for _, e, _ in got), got
+    assert got == want
 
 
 def test_stream_links_epoch_idempotent_retry(spark, tmp_path):
