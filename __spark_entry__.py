@@ -21,6 +21,7 @@ from e2e_el_spark.functions import (
     STOPWORDS,
     char_ngrams_expr,
     mention_window_expr,
+    normalize_entity_id_expr,
 )
 from e2e_el_spark.operators import blocking as B
 from e2e_el_spark.operators import dedup as D
@@ -28,7 +29,6 @@ from e2e_el_spark.operators import similarity as S
 from e2e_el_spark.operators import textstats as TS
 from e2e_el_spark.operators.clustering import connected_components
 from e2e_el_spark.partitioning import fan_out
-from e2e_el_spark.sources.corpus_formats import normalize_entity_ids
 
 # ---------------------------------------------------------------------------
 # helpers
@@ -203,8 +203,7 @@ def q09_nations_without_customers(spark, sf_dir):
 def q10_first_wins_dedupe(spark, sf_dir):
     """U3/S1 first-occurrence-wins dedupe (candidate_selection.py:33-37):
     min key per duplicate name."""
-    p = _t(spark, sf_dir, "part")
-    return p.groupBy("p_name").agg(F.min("p_partkey").alias("p_partkey"))
+    return D.exact_dedup(_t(spark, sf_dir, "part"), "p_partkey", "p_name").select("p_name", "p_partkey")
 
 
 def q11_event_type_idf(spark, sf_dir):
@@ -390,9 +389,11 @@ def q23_brute_force_ann(spark, sf_dir):
     return out.select("query_id", "vec_id", F.round("score", 6).alias("score"), "rank")
 
 
-def q24_knn_label_ranking(spark, sf_dir):
-    """A6 ranking metrics (P@1 / MAP / R@10, run_DualEncoder.py:332-418):
-    rank of the first same-label neighbor among top-scored corpus vectors."""
+def _label_knn_scored(spark, sf_dir):
+    """Label-kNN candidate lists for q24/q38: each of the first 50 vectors
+    queries the rest by cosine; a candidate is gold when its label equals
+    the query's. (mention_id, entity_id, score, is_gold) — the
+    ``metrics.gold_ranks`` input."""
     from e2e_el_spark.functions import dot_expr
     from e2e_el_spark.operators.similarity import _NORM_EXPR
 
@@ -400,29 +401,31 @@ def q24_knn_label_ranking(spark, sf_dir):
     # r6: norms hoisted out of the 50×1950 pair loop (bit-identical to
     # cosine_expr — same fold, same operand order) + corpus fan_out
     q = e.filter(F.col("vec_id") < 50).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qv"), F.col("label").alias("qlabel"),
+        F.col("vec_id").alias("mention_id"), F.col("embedding").alias("_qv"), F.col("label").alias("qlabel"),
         F.expr(_NORM_EXPR.format(v="embedding")).alias("_qn"),
     )
     c = fan_out(e.filter(F.col("vec_id") >= 50), "vec_id").select(
-        F.col("vec_id").alias("cand_id"), F.col("embedding").alias("_cv"), F.col("label").alias("clabel"),
+        F.col("vec_id").alias("entity_id"), F.col("embedding").alias("_cv"), F.col("label").alias("clabel"),
         F.expr(_NORM_EXPR.format(v="embedding")).alias("_cn"),
     )
-    scored = c.crossJoin(F.broadcast(q)).withColumn(
-        "score", dot_expr("_qv", "_cv") / (F.col("_qn") * F.col("_cn"))
+    return c.crossJoin(F.broadcast(q)).select(
+        "mention_id", "entity_id",
+        (dot_expr("_qv", "_cv") / (F.col("_qn") * F.col("_cn"))).alias("score"),
+        (F.col("clabel") == F.col("qlabel")).alias("is_gold"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("cand_id"))
-    ranked = scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= 100)
-    gold = (
-        ranked.filter(F.col("clabel") == F.col("qlabel"))
-        .groupBy("query_id")
-        .agg(F.min("rank").alias("gold_rank"))
-    )
-    base = q.select("query_id").join(gold, "query_id", "left")
-    return base.agg(
-        F.round(F.avg(F.when(F.col("gold_rank") == 1, 1.0).otherwise(0.0)), 6).alias("p_at_1"),
-        F.round(F.avg(F.coalesce(1.0 / F.col("gold_rank"), F.lit(0.0))), 6).alias("map_score"),
-        F.round(F.avg(F.when(F.col("gold_rank") <= 10, 1.0).otherwise(0.0)), 6).alias("recall_at_10"),
-        F.count("*").alias("n_queries"),
+
+
+def q24_knn_label_ranking(spark, sf_dir):
+    """A6 ranking metrics (P@1 / MAP / R@10, run_DualEncoder.py:332-418):
+    rank of the first same-label neighbor among top-scored corpus vectors."""
+    from e2e_el_spark.metrics import ranking_metrics
+
+    m = ranking_metrics(_label_knn_scored(spark, sf_dir), k=10)
+    return m.select(
+        F.round("p_at_1", 6).alias("p_at_1"),
+        F.round("map", 6).alias("map_score"),
+        F.round("recall_at_10", 6).alias("recall_at_10"),
+        F.col("n_mentions").alias("n_queries"),
     )
 
 
@@ -472,7 +475,7 @@ def q27_entity_id_normalize(spark, sf_dir):
         "n_nationkey",
         F.concat(F.lit("UMLS:C"), F.col("n_nationkey").cast("string"), F.lit("+ALT"), F.col("n_name")).alias("entity_id"),
     )
-    return normalize_entity_ids(raw, "entity_id")
+    return raw.withColumn("entity_id", normalize_entity_id_expr("entity_id"))
 
 
 def q28_stopword_filter(spark, sf_dir):
@@ -575,18 +578,23 @@ def q33_media_features(spark, sf_dir):
 
 def q34_el_clusters(spark, sf_dir):
     """flagship ER pipeline on deterministic synthetic pages (the engine's
-    own corpus — iterative CC + pandas-UDF scoring → rows-only). Lazy frame
-    over a stable checkpoint dir; no driver collect round-trip."""
+    own corpus — pandas-UDF scoring + closed-form clusters → rows-only).
+    The KB tables go through parquet under the workdir, so Spark plans their
+    joins from real sizes (``synth.via_parquet``). Lazy frame over a stable
+    checkpoint dir; no collect round-trip."""
     import os
     import tempfile
 
     from e2e_el_spark.pipeline import run_pipeline
-    from e2e_el_spark.synth import aliases_df, entities_df, pages_df
+    from e2e_el_spark.synth import aliases_df, entities_df, pages_df, via_parquet
 
     workdir = os.path.join(tempfile.gettempdir(), "el_q34_work")
     pages = pages_df(spark, 200, n_entities=80, seed=42, partitions=8)
     return run_pipeline(
-        spark, pages, entities_df(spark, 80, seed=42), aliases_df(spark, 80, seed=42), workdir
+        spark, pages,
+        via_parquet(entities_df(spark, 80, seed=42), f"{workdir}/_inputs/entities"),
+        via_parquet(aliases_df(spark, 80, seed=42), f"{workdir}/_inputs/aliases"),
+        workdir,
     )
 
 
@@ -608,27 +616,20 @@ def q35_bm25_topk(spark, sf_dir):
 def q36_span_prf(spark, sf_dir):
     """A7/A9 span-overlap precision/recall counters over derived spans
     (pred = linenumber-1 windows, gold = linenumber-2 windows)."""
+    from e2e_el_spark.metrics import span_overlap_prf
+
     li = _t(spark, sf_dir, "lineitem")
-    pred = li.filter(F.col("l_linenumber") == 1).select(
-        F.col("l_orderkey").alias("document_id"),
-        F.col("l_quantity").alias("ps"), (F.col("l_quantity") + 10).alias("pe"),
-    ).dropDuplicates()
-    gold = li.filter(F.col("l_linenumber") == 2).select(
-        F.col("l_orderkey").alias("document_id"),
-        F.col("l_quantity").alias("gs"), (F.col("l_quantity") + 10).alias("ge"),
-    ).dropDuplicates()
-    overlap = (F.col("gs") <= F.col("pe")) & (F.col("ps") <= F.col("ge"))
-    tp_p = pred.join(gold, "document_id").filter(overlap).select("document_id", "ps", "pe").dropDuplicates()
-    tp_g = gold.join(pred, "document_id").filter(overlap).select("document_id", "gs", "ge").dropDuplicates()
-    return (
-        pred.agg(F.count("*").alias("n_pred")).crossJoin(gold.agg(F.count("*").alias("n_gold")))
-        .crossJoin(tp_p.agg(F.count("*").alias("tp_pred")))
-        .crossJoin(tp_g.agg(F.count("*").alias("tp_gold")))
-        .select(
-            "n_pred", "n_gold", "tp_pred", "tp_gold",
-            F.round(F.col("tp_pred") / F.col("n_pred"), 6).alias("precision"),
-            F.round(F.col("tp_gold") / F.col("n_gold"), 6).alias("recall"),
+
+    def spans(line):
+        return li.filter(F.col("l_linenumber") == line).select(
+            F.col("l_orderkey").alias("document_id"),
+            F.col("l_quantity").alias("start_index"), (F.col("l_quantity") + 10).alias("end_index"),
         )
+
+    return span_overlap_prf(spans(1), spans(2)).select(
+        "n_pred", "n_gold", "tp_pred", "tp_gold",
+        F.round(F.col("tp_pred") / F.col("n_pred"), 6).alias("precision"),
+        F.round(F.col("tp_gold") / F.col("n_gold"), 6).alias("recall"),
     )
 
 
@@ -651,31 +652,11 @@ def q37_random_negatives(spark, sf_dir):
 
 def q38_gold_rank_histogram(spark, sf_dir):
     """A8 position-of-positive histogram over the label-kNN ranking of q24."""
-    from e2e_el_spark.functions import dot_expr
-    from e2e_el_spark.operators.similarity import _NORM_EXPR
+    from e2e_el_spark.metrics import gold_ranks
 
-    e = _t(spark, sf_dir, "embeddings")
-    # r6: norms hoisted out of the pair loop + corpus fan_out (same
-    # bit-identical rewrite as q24)
-    q = e.filter(F.col("vec_id") < 50).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qv"), F.col("label").alias("qlabel"),
-        F.expr(_NORM_EXPR.format(v="embedding")).alias("_qn"),
+    return gold_ranks(_label_knn_scored(spark, sf_dir)).groupBy("gold_rank").agg(
+        F.count("*").alias("n")
     )
-    c = fan_out(e.filter(F.col("vec_id") >= 50), "vec_id").select(
-        F.col("vec_id").alias("cand_id"), F.col("embedding").alias("_cv"), F.col("label").alias("clabel"),
-        F.expr(_NORM_EXPR.format(v="embedding")).alias("_cn"),
-    )
-    scored = c.crossJoin(F.broadcast(q)).withColumn(
-        "score", dot_expr("_qv", "_cv") / (F.col("_qn") * F.col("_cn"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("cand_id"))
-    ranked = scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= 100)
-    gold = (
-        ranked.filter(F.col("clabel") == F.col("qlabel"))
-        .groupBy("query_id")
-        .agg(F.min("rank").alias("gold_rank"))
-    )
-    return gold.groupBy("gold_rank").agg(F.count("*").alias("n"))
 
 
 def q39_greedy_segmentation(spark, sf_dir):

@@ -141,16 +141,10 @@ def mention_window_expr(
     return F.concat(prefix, F.lit(f"{ms} "), mention, F.lit(f" {me}"), suffix)
 
 
-def mean_pool_span_expr(embs: str, start: str, length: str, dim: int) -> Column:
-    """Mean-pool a slice of an ARRAY<ARRAY<DOUBLE>> token-embedding column
-    over a token span (F8/L2: `/root/reference/modeling_E2E_exhaustive.py:138-145`,
-    `/root/reference/modeling_el.py:114-118`) — pure fold, JVM-side:
-    elementwise sum via zip_with then divide by span length. ``start`` is
-    1-based for slice(); ``length`` = span token count."""
-    zero = f"transform(sequence(1, {dim}), x -> CAST(0 AS DOUBLE))"
-    return F.expr(
-        f"transform("
-        f"aggregate(slice({embs}, {start}, {length}), {zero}, "
-        f"(acc, v) -> zip_with(acc, v, (a, b) -> a + CAST(b AS DOUBLE))), "
-        f"x -> x / CAST({length} AS DOUBLE))"
-    )
+def normalize_entity_id_expr(id_col: str) -> Column:
+    """Id normalization (P5): keep the first id of a composite gold id
+    split on + or |, then strip a UMLS:/MESH:/OMIM: prefix
+    (reference `candidate_selection_ncbi.py:31-34,62-67`,
+    `utils_FullTransformer.py:334-338`)."""
+    first = F.split(F.col(id_col), r"[+|]").getItem(0)
+    return F.regexp_replace(first, r"^(UMLS:|MESH:|OMIM:)", "")

@@ -3,8 +3,11 @@
 * pairwise precision/recall/F1 over labeled same-blocking-key pairs — the
   BASELINE.json acceptance metric (≥ 0.99). The engine analogue of the
   reference's span TP/FP/FN counters (`/root/reference/run_E2E_exhaustive.py:449-518`).
-* ranking metrics P@1 / MAP / Recall@k over scored candidate lists —
-  (`/root/reference/run_DualEncoder.py:332-418`).
+* ranking metrics P@1 / MAP / Recall@k and the gold-rank histogram over
+  scored candidate lists (reference `run_DualEncoder.py:332-418`); queries
+  q24 and q38 of ``__spark_entry__``.
+* span-overlap P/R counts (reference `run_E2E_exhaustive.py:449-518`);
+  query q36.
 """
 
 from __future__ import annotations
@@ -78,26 +81,40 @@ def pairwise_f1(labeled_pairs: DataFrame, clusters: DataFrame) -> dict:
     }
 
 
-def ranking_metrics(scored: DataFrame, k: int = 10) -> DataFrame:
-    """P@1, MAP (mean 1/rank-of-gold), Recall@k over scored candidates.
+# how deep each candidate ranking is searched for its gold candidate
+GOLD_RANK_DEPTH = 100
 
-    scored: (mention_id, entity_id, score, label_candidate_id). Mirrors
-    `/root/reference/run_DualEncoder.py:332-418` (normalized denominators:
-    mentions whose gold never appears count rank = +inf → contribute 0).
+
+def gold_ranks(scored: DataFrame) -> DataFrame:
+    """(mention_id, gold_rank): where each mention's gold candidate ranks —
+    the input of the A6 ranking metrics and the A8 position-of-positive
+    histogram (reference `run_DualEncoder.py:332-418`,
+    `utils_E2E_exhaustive.py:432-439,605-606`).
+
+    scored: (mention_id, entity_id, score, is_gold). Candidates rank per
+    mention by score desc, entity_id asc (``row_number``: ties never share a
+    rank); the gold rank is the minimum rank of an ``is_gold`` row among the
+    top ``GOLD_RANK_DEPTH``. A mention with no gold row there has no output
+    row.
     """
     w = Window.partitionBy("mention_id").orderBy(F.desc("score"), F.asc("entity_id"))
-    ranked = scored.withColumn("rank", F.row_number().over(w))
-    gold_rank = (
-        ranked.filter(F.col("entity_id") == F.col("label_candidate_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= GOLD_RANK_DEPTH)
+        .filter(F.col("is_gold"))
         .groupBy("mention_id")
         .agg(F.min("rank").alias("gold_rank"))
     )
-    base = scored.select("mention_id").distinct().join(gold_rank, "mention_id", "left")
+
+
+def ranking_metrics(scored: DataFrame, k: int = 10) -> DataFrame:
+    """P@1, MAP (mean 1/rank-of-gold), Recall@k over scored candidates — one
+    row. scored: as for :func:`gold_ranks`. Mentions whose gold is not
+    ranked count rank = +inf and contribute 0 (normalized denominators)."""
+    base = scored.select("mention_id").distinct().join(gold_ranks(scored), "mention_id", "left")
     return base.agg(
         F.avg(F.when(F.col("gold_rank") == 1, 1.0).otherwise(0.0)).alias("p_at_1"),
-        F.avg(
-            F.when(F.col("gold_rank").isNotNull(), 1.0 / F.col("gold_rank")).otherwise(0.0)
-        ).alias("map"),
+        F.avg(F.coalesce(1.0 / F.col("gold_rank"), F.lit(0.0))).alias("map"),
         F.avg(
             F.when(F.col("gold_rank") <= k, 1.0).otherwise(0.0)
         ).alias(f"recall_at_{k}"),
@@ -105,20 +122,20 @@ def ranking_metrics(scored: DataFrame, k: int = 10) -> DataFrame:
     )
 
 
-def span_overlap_prf(pred: DataFrame, gold: DataFrame) -> dict:
-    """Span-overlap precision/recall/F1 (A7/A9 + J8,
-    `/root/reference/run_E2E_exhaustive.py:449-518`): a predicted span is a
-    TP if it overlaps some gold span of the same document
-    (g_s <= p_e and p_s <= g_e — the reference's clipped-overlap rule);
-    unmatched gold = FN, extraneous pred = FP. Both inputs:
-    (document_id, start_index, end_index).
+def span_overlap_prf(pred: DataFrame, gold: DataFrame) -> DataFrame:
+    """Span-overlap counts (A7/A9 + J8,
+    reference `run_E2E_exhaustive.py:449-518`) as a one-row frame
+    (n_pred, n_gold, tp_pred, tp_gold): a predicted span is a TP if it
+    overlaps some gold span of the same document (g_s <= p_e and
+    p_s <= g_e — the reference's clipped-overlap rule), and a gold span is
+    found if some predicted span overlaps it. Precision = tp_pred / n_pred,
+    recall = tp_gold / n_gold. Both inputs: (document_id, start_index,
+    end_index); duplicate spans count once.
 
-    One Spark job (crossJoin-of-aggs shape): each side left-joins the other
+    One action (crossJoin-of-aggs shape): each side left-joins the other
     on the overlap predicate, a per-span any-match flag is aggregated, and
-    the two 1-row count frames crossJoin into a single collect — the
-    previous form fired 4 separate count() jobs, each re-evaluating the
-    join subtrees (pure serial floor when this helper ran inside the e2e
-    gate).
+    the two 1-row count frames crossJoin — not four count() jobs, each
+    re-evaluating the join subtrees.
     """
     p = pred.select(
         F.col("document_id"), F.col("start_index").alias("ps"), F.col("end_index").alias("pe")
@@ -129,47 +146,19 @@ def span_overlap_prf(pred: DataFrame, gold: DataFrame) -> dict:
     ).dropDuplicates()
     overlap = (F.col("gs") <= F.col("pe")) & (F.col("ps") <= F.col("ge"))
 
-    p_counts = (
-        p.join(g, (F.col("document_id") == F.col("_gdoc")) & overlap, "left")
-        .groupBy("document_id", "ps", "pe")
-        .agg(F.max(F.col("gs").isNotNull()).alias("_m"))
-        .agg(
-            F.count(F.lit(1)).alias("n_pred"),
-            F.sum(F.col("_m").cast("long")).alias("tp_p"),
+    def counts(side, other, key, probe, n_name, tp_name):
+        return (
+            side.join(other, (F.col("document_id") == F.col("_gdoc")) & overlap, "left")
+            .groupBy(*key)
+            .agg(F.max(F.col(probe).isNotNull()).alias("_m"))
+            .agg(
+                F.count(F.lit(1)).alias(n_name),
+                F.coalesce(F.sum(F.col("_m").cast("long")), F.lit(0)).alias(tp_name),
+            )
         )
-    )
-    g_counts = (
-        g.join(p, (F.col("document_id") == F.col("_gdoc")) & overlap, "left")
-        .groupBy("_gdoc", "gs", "ge")
-        .agg(F.max(F.col("ps").isNotNull()).alias("_m"))
-        .agg(
-            F.count(F.lit(1)).alias("n_gold"),
-            F.sum(F.col("_m").cast("long")).alias("tp_g"),
-        )
-    )
-    row = p_counts.crossJoin(g_counts).collect()[0]
-    n_pred, n_gold = row["n_pred"] or 0, row["n_gold"] or 0
-    tp_p, tp_g = row["tp_p"] or 0, row["tp_g"] or 0
-    precision = tp_p / n_pred if n_pred else 1.0
-    recall = tp_g / n_gold if n_gold else 1.0
-    f1 = 2 * precision * recall / (precision + recall) if precision + recall else 0.0
-    return {
-        "n_pred": n_pred, "n_gold": n_gold, "fp": n_pred - tp_p, "fn": n_gold - tp_g,
-        "precision": precision, "recall": recall, "f1": f1,
-    }
 
-
-def gold_rank_histogram(scored: DataFrame) -> DataFrame:
-    """A8 position-of-positive histogram
-    (`/root/reference/utils_E2E_exhaustive.py:432-439,605-606`): at which
-    rank does the gold candidate appear. scored:
-    (mention_id, entity_id, score, label_candidate_id)."""
-    w = Window.partitionBy("mention_id").orderBy(F.desc("score"), F.asc("entity_id"))
-    ranked = scored.withColumn("rank", F.row_number().over(w))
-    return (
-        ranked.filter(F.col("entity_id") == F.col("label_candidate_id"))
-        .groupBy("rank")
-        .agg(F.count("*").alias("n"))
+    return counts(p, g, ["document_id", "ps", "pe"], "gs", "n_pred", "tp_pred").crossJoin(
+        counts(g, p, ["_gdoc", "gs", "ge"], "ps", "n_gold", "tp_gold")
     )
 
 

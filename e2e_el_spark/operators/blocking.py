@@ -1,21 +1,20 @@
 """Candidate blocking (SURVEY.md §2.10) — token-prefix keys, char-n-gram
-TF-IDF cosine top-k (C1), and MinHash LSH band blocking, all as DataFrame
+TF-IDF vectors (C1), and MinHash LSH band blocking, all as DataFrame
 transforms.
 
-The TF-IDF path replicates the semantics of the reference's
-`candidate_selection.py` end-to-end (`/root/reference/candidate_selection.py:102-216`):
-lowercased corpus = entity names ∪ mention surfaces, stopword filter before
-n-gramming, char n-grams n=1..5 with the reference's loop quirk
-(compat=True drops the first-position and tail grams), top-100k vocabulary by
-frequency, idf = log(N/df) with **no smoothing** (:161), tf·idf vectors
-L2-normalized, cosine via sparse dot, top-k candidates per mention.
+The TF-IDF functions replicate the semantics of the reference's
+`candidate_selection.py` (:102-216):
+lowercased text, stopword filter before n-gramming, char n-grams n=1..5
+with the reference's loop quirk (compat=True drops the first-position and
+tail grams), top-100k vocabulary by frequency, idf = log(N/df) with **no
+smoothing** (:161), tf·idf vectors L2-normalized.
 
 Representation is *sparse-relational*: a vector is rows (id, gram, weight) —
 never a padded dense matrix (the reference's 100000-wide numpy rows are a
-single-node artifact). The cosine is a join on the gram key + hash
-aggregation: exactly the shuffle Catalyst handles well, and the hot-gram skew
-site (SURVEY.md §4 custom work #1) that ``tfidf_vectors``' ``min_weight``
-prune guards.
+single-node artifact). A cosine is then a join on the gram key + hash
+aggregation (``pipeline.candidate_pairs``): exactly the shuffle Catalyst
+handles well, and the hot-gram skew site (SURVEY.md §4 custom work #1) that
+``tfidf_vectors``' ``min_weight`` prune guards.
 
 MinHash here is built-ins only: k independent xxhash64 seeds, min() per key —
 no UDF, fully codegen'd.
@@ -23,14 +22,10 @@ no UDF, fully codegen'd.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from e2e_el_spark.functions import (
-    STOPWORDS,
-    remove_stopwords_expr,
-    unique_metric_name,
-)
+from e2e_el_spark.functions import remove_stopwords_expr, unique_metric_name
 
 # ---------------------------------------------------------------------------
 # token-prefix blocking key (north star: "token-prefix blocking keys")
@@ -168,69 +163,6 @@ def tfidf_vectors(
     if min_weight is not None:
         out = out.filter(F.col("weight") >= min_weight)
     return out
-
-
-def sparse_pair_scores(
-    query_vecs: DataFrame, query_id: str,
-    cand_vecs: DataFrame, cand_id: str,
-) -> DataFrame:
-    """All gram-sharing pair cosines: join on gram + hash-agg dot products.
-
-    Both inputs are L2-normalized sparse rows, so sum(w_q · w_c) IS the
-    cosine. One shuffle on the gram key with map-side partial aggregation;
-    very frequent grams are naturally damped because low-idf grams carry
-    near-zero weight. Pairs sharing no vocabulary gram have cosine 0 and are
-    simply absent.
-    """
-    q = query_vecs.select(F.col(query_id).alias("_qid"), "gram", F.col("weight").alias("_qw"))
-    c = cand_vecs.select(F.col(cand_id).alias("_cid"), "gram", F.col("weight").alias("_cw"))
-    return (
-        q.join(c, "gram")
-        .groupBy("_qid", "_cid")
-        .agg(F.sum(F.col("_qw") * F.col("_cw")).alias("tfidf_cos"))
-        .select(
-            F.col("_qid").alias(query_id),
-            F.col("_cid").alias(cand_id),
-            "tfidf_cos",
-        )
-    )
-
-
-def cosine_topk(
-    query_vecs: DataFrame, query_id: str,
-    cand_vecs: DataFrame, cand_id: str,
-    k: int = 10,
-) -> DataFrame:
-    """Sparse cosine top-k per query: the pair scores + a window rank ≤ k
-    (T1: `/root/reference/candidate_selection.py:197-211`)."""
-    scores = sparse_pair_scores(query_vecs, query_id, cand_vecs, cand_id)
-    w = Window.partitionBy(query_id).orderBy(F.desc("tfidf_cos"), F.asc(cand_id))
-    return (
-        scores.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, cand_id, "tfidf_cos", "rank")
-    )
-
-
-def tfidf_candidates(
-    mentions: DataFrame, entities: DataFrame, k: int = 10,
-    n_max: int = 5, vocab_size: int = 100_000, compat: bool = True,
-    stopwords: list[str] | None = None,
-) -> DataFrame:
-    """End-to-end C1: mentions(mention_id, text) × entities(entity_id, name)
-    → (mention_id, entity_id, tfidf_cos, rank≤k).
-
-    Corpus for the vocabulary = entity names ∪ mention surfaces, both
-    lowercased (`/root/reference/candidate_selection.py:102-111`).
-    """
-    sw = STOPWORDS if stopwords is None else stopwords
-    corpus = entities.select(F.col("entity_id").alias("cid"), F.col("name").alias("ctext")).unionByName(
-        mentions.select(F.col("mention_id").alias("cid"), F.col("text").alias("ctext"))
-    )
-    vocab = build_tfidf_vocab(corpus, "cid", "ctext", n_max, vocab_size, compat, sw)
-    ev = tfidf_vectors(entities, "entity_id", "name", vocab, n_max, compat, False, sw)
-    mv = tfidf_vectors(mentions, "mention_id", "text", vocab, n_max, compat, False, sw)
-    return cosine_topk(mv, "mention_id", ev, "entity_id", k)
 
 
 # ---------------------------------------------------------------------------

@@ -1,5 +1,5 @@
 """Candidate-generation extras (SURVEY.md §2.10): BM25 scoring (C2),
-seeded random negatives (C3/J6), whole-KB candidates (C7).
+seeded random negatives (C3/J6).
 
 The reference consumes BM25 candidates from a precomputed file
 (`/root/reference/data/MM_full_CUI/candidate_entities_BM25.txt`; generator
@@ -100,15 +100,4 @@ def random_negatives(
         paired.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= k)
         .select(F.col("_mid").alias(id_col), F.col("_eid").alias(entity_col))
-    )
-
-
-def all_candidates(mentions: DataFrame, entities: DataFrame,
-                   id_col: str = "mention_id", entity_col: str = "entity_id") -> DataFrame:
-    """C7: whole KB as the candidate set — crossJoin(broadcast(KB)), the
-    relational form of `use_all_candidates`
-    (`/root/reference/utils_E2E_exhaustive.py:469-471`). Test-scale only;
-    at web scale the blocked paths replace this."""
-    return mentions.select(id_col).crossJoin(
-        F.broadcast(entities.select(entity_col))
     )

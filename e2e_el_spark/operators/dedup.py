@@ -39,36 +39,14 @@ def _text_group_key(text_col: str):
     ]
 
 
-def exact_duplicates(
-    df: DataFrame, id_col: str, text_col: str, key_fn=None
-) -> DataFrame:
-    """Groups of byte-identical texts: (id, group_size, keeper, is_duplicate).
-
-    One shuffle on (length, hash1, hash2) — never on the full text bytes.
-    ``key_fn(text_col) -> [Column aliased _len/_h1/_h2]`` is the injectable
-    key seam (forced-collision tests replace one hash with a constant to
-    prove the composite key keeps colliding-but-distinct texts apart).
-    """
-    h = df.select(F.col(id_col), *(key_fn or _text_group_key)(text_col))
-    keys = ["_len", "_h1", "_h2"]
-    w = Window.partitionBy(*keys)
-    wo = Window.partitionBy(*keys).orderBy(id_col)
-    return (
-        h.withColumn("group_size", F.count("*").over(w))
-        .withColumn("keeper", F.first(id_col).over(wo))
-        .select(
-            id_col,
-            "group_size",
-            "keeper",
-            (F.col(id_col) != F.col("keeper")).alias("is_duplicate"),
-        )
-    )
-
-
 def exact_dedup(df: DataFrame, id_col: str, text_col: str, key_fn=None) -> DataFrame:
     """Keep the min-id row per identical text (deterministic first-wins,
-    the distributed analogue of the reference's dict insert U3).
-    ``key_fn`` is the same injectable key seam as ``exact_duplicates``."""
+    the distributed analogue of the reference's dict insert U3; query
+    q10). One shuffle on (length, hash1, hash2) — never on the full
+    text bytes. ``key_fn(text_col) -> [Column aliased _len/_h1/_h2]`` is the
+    injectable key seam (a forced-collision test replaces one hash with a
+    constant to prove the composite key keeps colliding-but-distinct texts
+    apart)."""
     w = Window.partitionBy(*(key_fn or _text_group_key)(text_col)).orderBy(id_col)
     return (
         df.withColumn("_rn", F.row_number().over(w))

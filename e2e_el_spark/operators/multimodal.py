@@ -19,11 +19,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-MEDIA_SCHEMA = (
-    "media_id string, kind string, payload binary, mime string, width int, "
-    "height int, duration_ms int"
-)
-
 FEATURE_SCHEMA = (
     "media_id string, kind string, feat array<float>, n_bytes bigint, sha256 string"
 )
@@ -177,52 +172,6 @@ def extract_features(
             )
 
     return media.mapInPandas(run, FEATURE_SCHEMA)
-
-
-def _resize_nearest(img: np.ndarray, width: int, height: int) -> np.ndarray:
-    """Nearest-neighbor resample (pure numpy index arithmetic)."""
-    h, w = img.shape[:2]
-    ys = (np.arange(height) * (h / height)).astype(np.int64).clip(0, h - 1)
-    xs = (np.arange(width) * (w / width)).astype(np.int64).clip(0, w - 1)
-    return img[ys][:, xs]
-
-
-def _encode_ppm(img: np.ndarray) -> bytes:
-    """HxWx3 array → binary PPM bytes (the round-trippable raster sink)."""
-    h, w = img.shape[:2]
-    body = np.clip(img, 0, 255).astype(np.uint8).tobytes()
-    return f"P6\n{w} {h}\n255\n".encode() + body
-
-
-def resize_images(
-    media: DataFrame, width: int, height: int, fake: bool = False,
-) -> DataFrame:
-    """mapInPandas image resize: decode (REAL for PPM/PGM/BMP) →
-    nearest-neighbor resample → re-encode as binary PPM. Output schema ==
-    MEDIA_SCHEMA with payload/width/height/mime rewritten, so resize stages
-    compose with extract_features and each other. Batched per Arrow batch;
-    decode failures follow decode_image's fake/raise contract."""
-    from typing import Iterator as _Iterator
-
-    def run(batches: Iterable[pd.DataFrame]) -> _Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, widths, heights, mimes = [], [], [], []
-            for payload in pdf["payload"]:
-                b = bytes(payload) if payload is not None else b""
-                img = decode_image(b, fake=fake)
-                out = _resize_nearest(img, width, height)
-                payloads.append(_encode_ppm(out))
-                widths.append(width)
-                heights.append(height)
-                mimes.append("image/x-portable-pixmap")
-            res = pdf.copy()
-            res["payload"] = payloads
-            res["width"] = pd.Series(widths, index=pdf.index, dtype="int32")
-            res["height"] = pd.Series(heights, index=pdf.index, dtype="int32")
-            res["mime"] = mimes
-            yield res
-
-    return media.mapInPandas(run, media.schema)
 
 
 def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:

@@ -7,7 +7,8 @@ Three signals per the north star, combined as a weighted column expression
   * Jaro-Winkler surface similarity — not in the reference (its string
     similarity is char-n-gram TF-IDF cosine, C1); Spark's built-in
     ``levenshtein`` is available as a cross-check column.
-  * TF-IDF cosine — computed relationally in ``blocking.cosine_topk``.
+  * TF-IDF cosine — computed relationally in ``pipeline.candidate_pairs``
+    (a gram-key join over ``blocking.tfidf_vectors`` rows).
   * bi-encoder embedding dot product — the reference's dual-encoder score
     (`/root/reference/modeling_DualEncoder.py:44-66`,
     `/root/reference/modeling_E2E_exhaustive.py:147-173`); here a batched

@@ -109,7 +109,7 @@ def fingerprint(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame
 
     Fingerprints are HASHES, not equality proofs: a 64-bit match has a
     birthday-collision floor (~4·10⁹ docs). For dedup *decisions* use
-    dedup.exact_dedup/exact_duplicates, which group on (length, two
+    dedup.exact_dedup, which groups on (length, two
     independent hashes); fingerprints are for joins, sketches, and change
     detection where a collision is tolerable or re-verified downstream."""
     norm = F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")

@@ -26,10 +26,10 @@ transcription of the per-character reference loops:
   per-(vocab, worker) memo — Zipfian text makes the amortized cost one
   dict hit per word occurrence.
 
-Scale shape: pure ``mapInPandas`` / ``applyInPandas`` over documents —
-zero shuffle for plain tokenization; the marked-mention builder
-co-groups mentions with their document (one exchange of mention-sized
-rows). The vocab (KB-sized) rides a real ``SparkContext.broadcast``.
+Scale shape: `marked_mentions_tokenized` collects each document's spans
+with one groupBy, joins them to the document and tokenizes in one
+``mapInPandas`` (one exchange of mention-sized rows); query q48. The
+vocab (KB-sized) rides a real ``SparkContext.broadcast``.
 """
 
 from __future__ import annotations
@@ -186,71 +186,6 @@ def make_vocab(tokens: Iterable[str]) -> dict:
         if t not in v:
             v[t] = len(v)
     return v
-
-
-def wordpiece_tokens(
-    df: DataFrame,
-    vocab: Iterable[str] | dict,
-    text_col: str = "text",
-    lower: bool = True,
-    out_prefix: str = "wp",
-) -> DataFrame:
-    """Adds ``{out_prefix}_tokens: array<string>`` and
-    ``{out_prefix}_ids: array<int>`` (UNK id for out-of-vocab; UNK itself
-    must be in the vocab or its id is -1). Zero-shuffle mapInPandas; the
-    vocab is a SparkContext broadcast, not a per-task closure copy."""
-    from pyspark.sql import types as T
-
-    vd = vocab if isinstance(vocab, dict) else make_vocab(vocab)
-    sc = df.sparkSession.sparkContext
-    bc = sc.broadcast(vd)
-    cols = df.columns
-    schema = T.StructType(
-        list(df.schema.fields)
-        + [
-            T.StructField(f"{out_prefix}_tokens", T.ArrayType(T.StringType())),
-            T.StructField(f"{out_prefix}_ids", T.ArrayType(T.IntegerType())),
-        ]
-    )
-
-    def gen(batches):
-        v = bc.value
-        unk_id = v.get(UNK, -1)
-        memo: dict = {}
-        for pdf in batches:
-            toks = [bert_tokenize(t, v, lower, memo) for t in pdf[text_col]]
-            pdf = pdf.copy()
-            pdf[f"{out_prefix}_tokens"] = toks
-            pdf[f"{out_prefix}_ids"] = [
-                [v.get(p, unk_id) for p in ps] for ps in toks
-            ]
-            yield pdf
-
-    return df.select(*cols).mapInPandas(gen, schema)
-
-
-def pad_and_mask(
-    df: DataFrame,
-    ids_col: str = "token_ids",
-    max_len: int = 512,
-    pad_id: int = 0,
-) -> DataFrame:
-    """F12 padding/masking as pure column arithmetic: fixed-length
-    ``{ids_col}_padded`` (truncate-or-pad with ``pad_id``) and the matching
-     0/1 ``attention_mask`` (reference `utils_EL4QA.py` InputFeatures
-    input_ids/input_mask shape). No UDF — `slice`/`concat`/`array_repeat`
-    stay in codegen."""
-    ids = F.col(ids_col)
-    padded = F.slice(
-        F.concat(ids, F.array_repeat(F.lit(pad_id), max_len)), 1, max_len
-    )
-    mask = F.expr(
-        f"transform(sequence(1, {max_len}),"
-        f" i -> CASE WHEN i <= size({ids_col}) THEN 1 ELSE 0 END)"
-    )
-    return df.withColumn(f"{ids_col}_padded", padded).withColumn(
-        "attention_mask", mask
-    )
 
 
 def marked_mentions_tokenized(

@@ -152,8 +152,8 @@ def _kb_vocab(entities: DataFrame, n_entities: int) -> DataFrame:
     """TF-IDF vocabulary over the KB ALONE: (gram, df, idf, is_rare).
 
     The vocabulary/IDF corpus is the entity-name side only — NOT entity
-    names ∪ mention surfaces like the exact-parity path
-    (`blocking.tfidf_candidates`, `/root/reference/candidate_selection.py:102-111`).
+    names ∪ mention surfaces like the reference
+    (`candidate_selection.py:102-111`).
     Rationale: a KB-only vocabulary is **corpus-invariant**, so the whole
     KB side of the pairs stage (vocab, entity vectors, block keys) is a
     precomputable artifact instead of a per-run job over 10^8 surfaces —

@@ -1,5 +1,6 @@
-"""Logical-plan probes shared by the plan tests: broadcast hints, the
-entity-vector prune, and a scoped broadcast threshold."""
+"""Plan probes shared by the plan tests: broadcast hints, the
+entity-vector prune, physical node names, and a scoped broadcast
+threshold."""
 
 from contextlib import contextmanager
 
@@ -11,8 +12,31 @@ def _nodes(df):
     while stack:
         node = stack.pop()
         yield node
-        kids = node.children()
-        stack.extend(kids.apply(i) for i in range(kids.size()))
+        stack.extend(_children(node))
+
+
+def _children(node) -> list:
+    kids = node.children()
+    return [kids.apply(i) for i in range(kids.size())]
+
+
+def physical_nodes(df):
+    """Every node of ``df``'s physical plan, pre-order (a node before its
+    subtree)."""
+    return subtree(df._jdf.queryExecution().executedPlan())
+
+
+def subtree(node):
+    """``node`` and every physical node below it, pre-order. Under AQE the
+    not-yet-executed plan is the adaptive root's initial plan."""
+    stack = [node]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "AdaptiveSparkPlan":
+            stack.append(node.initialPlan())
+            continue
+        yield node
+        stack.extend(reversed(_children(node)))
 
 
 def _names(attrs) -> frozenset:

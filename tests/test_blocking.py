@@ -8,11 +8,9 @@ from pyspark.sql import functions as F
 from e2e_el_spark.functions import STOPWORDS, char_ngrams_expr
 from e2e_el_spark.operators.blocking import (
     build_tfidf_vocab,
-    cosine_topk,
     lsh_band_keys,
     minhash_signatures,
     same_block_pairs,
-    tfidf_candidates,
     tfidf_vectors,
     with_block_key,
 )
@@ -94,30 +92,20 @@ def test_tfidf_matches_numpy_oracle(spark):
     )
     ev = tfidf_vectors(edf, "entity_id", "name", sv)
     mv = tfidf_vectors(mdf, "mention_id", "text", sv)
-    got = {
-        (r.mention_id, r.entity_id): r.tfidf_cos
-        for r in cosine_topk(mv, "mention_id", ev, "entity_id", k=10).collect()
-    }
+    # the sparse cosine: gram-key join + sum of weight products
+    dots = (
+        mv.select("mention_id", "gram", F.col("weight").alias("_mw"))
+        .join(ev.select("entity_id", "gram", F.col("weight").alias("_ew")), "gram")
+        .groupBy("mention_id", "entity_id")
+        .agg(F.sum(F.col("_mw") * F.col("_ew")).alias("tfidf_cos"))
+    )
+    got = {(r.mention_id, r.entity_id): r.tfidf_cos for r in dots.collect()}
     for key, val in got.items():
         assert abs(val - want[key]) < 1e-9, (key, val, want[key])
     # absent pairs must have (near-)zero oracle cosine
     for key, val in want.items():
         if key not in got:
             assert abs(val) < 1e-9
-
-
-def test_tfidf_candidates_ranks_gold_first(spark):
-    edf = spark.createDataFrame(
-        [("e1", "amber anchor labs"), ("e2", "coral beacon works"), ("e3", "dusty cascade corp")],
-        "entity_id string, name string",
-    )
-    mdf = spark.createDataFrame(
-        [("m1", "amber anchor labs"), ("m2", "coral beacn works")],
-        "mention_id string, text string",
-    )
-    got = tfidf_candidates(mdf, edf, k=2).collect()
-    top = {r.mention_id: r.entity_id for r in got if r.rank == 1}
-    assert top == {"m1": "e1", "m2": "e2"}
 
 
 def test_minhash_similar_texts_share_band(spark):

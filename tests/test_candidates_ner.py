@@ -1,19 +1,13 @@
-"""BM25 (C2), random negatives (C3/J6), all-candidates (C7), CRF Viterbi
-(N3), mean-pool-span (F8/L2), span metrics (A7-A9), AIDA parse (S7),
-JSONL sources (S2-S4, S8-S9)."""
+"""BM25 (C2), random negatives (C3/J6), span metrics (A7-A9) and the
+gold-rank histogram (A8)."""
 
-import json
 import math
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from e2e_el_spark.functions import mean_pool_span_expr
-from e2e_el_spark.metrics import gold_rank_histogram, span_overlap_prf
-from e2e_el_spark.operators.candidates import all_candidates, bm25_scores, random_negatives
-from e2e_el_spark.operators.ner import crf_viterbi, viterbi_decode_np
-from e2e_el_spark.sources.corpus_formats import parse_aida
+from e2e_el_spark.metrics import gold_ranks, span_overlap_prf
+from e2e_el_spark.operators.candidates import bm25_scores, random_negatives
 
 
 def test_bm25_matches_formula(spark):
@@ -50,51 +44,6 @@ def test_random_negatives_seeded(spark):
     assert len(per["m2"]) == 3 and "E2" not in per["m2"]
 
 
-def test_all_candidates_cross(spark):
-    m = spark.createDataFrame([("m1",), ("m2",)], "mention_id string")
-    e = spark.createDataFrame([("E1",), ("E2",), ("E3",)], "entity_id string")
-    assert all_candidates(m, e).count() == 6
-
-
-def test_viterbi_numpy_known_path():
-    # 2 states; strong transition penalty forces smoothing over emissions
-    em = np.array([[1.0, 0.0], [0.9, 1.0], [1.0, 0.0]])
-    trans_stay = np.array([[0.5, -0.5], [-0.5, 0.5]])
-    assert viterbi_decode_np(em, trans_stay) == [0, 0, 0]
-    trans_free = np.zeros((2, 2))
-    assert viterbi_decode_np(em, trans_free) == [0, 1, 0]
-    assert viterbi_decode_np(np.zeros((0, 2)), trans_free) == []
-
-
-def test_crf_viterbi_spark(spark):
-    tags = ["O", "B", "I"]
-    # forbid I after O with a big negative transition
-    trans = np.array([
-        [0.0, 0.0, -10.0],
-        [0.0, 0.0, 0.0],
-        [0.0, 0.0, 0.0],
-    ])
-    rows = [
-        (1, 0, "New", 0.1, 1.0, 0.0),
-        (1, 1, "York", 0.2, 0.1, 1.0),
-        (1, 2, "is", 1.0, 0.0, 0.9),   # I-score high but O wins via transition? O=1.0 beats
-        (2, 0, "hello", 1.0, 0.0, 0.5),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, pos int, token string, e_O double, e_B double, e_I double")
-    got = {(r.doc_id, r.pos): r.tag for r in crf_viterbi(df, trans, tags).collect()}
-    assert got[(1, 0)] == "B" and got[(1, 1)] == "I"
-    assert got[(2, 0)] == "O"
-
-
-def test_mean_pool_span(spark):
-    df = spark.createDataFrame(
-        [([[1.0, 2.0], [3.0, 4.0], [5.0, 6.0]], 2, 2)],
-        "embs array<array<double>>, start int, length int",
-    )
-    got = df.select(mean_pool_span_expr("embs", "start", "length", 2).alias("m")).collect()[0].m
-    assert got == [4.0, 5.0]  # mean of rows 2..3
-
-
 def test_span_overlap_prf(spark):
     gold = spark.createDataFrame(
         [("d1", 0, 5), ("d1", 10, 15), ("d2", 0, 3)],
@@ -104,75 +53,34 @@ def test_span_overlap_prf(spark):
         [("d1", 3, 7), ("d1", 20, 25)],
         "document_id string, start_index int, end_index int",
     )
-    m = span_overlap_prf(pred, gold)
-    assert m["precision"] == pytest.approx(0.5)   # (3,7) overlaps (0,5); (20,25) FP
-    assert m["recall"] == pytest.approx(1 / 3)    # only (0,5) matched
-    assert m["fp"] == 1 and m["fn"] == 2
+    m = span_overlap_prf(pred, gold).collect()
+    assert len(m) == 1
+    # (3,7) overlaps (0,5); (20,25) is a FP; only gold (0,5) is found
+    assert m[0].asDict() == {"n_pred": 2, "n_gold": 3, "tp_pred": 1, "tp_gold": 1}
 
 
 def test_gold_rank_histogram(spark):
     scored = spark.createDataFrame(
-        [("m1", "E1", 0.9, "E1"), ("m1", "E2", 0.5, "E1"),
-         ("m2", "E1", 0.9, "E2"), ("m2", "E2", 0.5, "E2")],
-        "mention_id string, entity_id string, score double, label_candidate_id string",
+        [("m1", "E1", 0.9, True), ("m1", "E2", 0.5, False),
+         ("m2", "E1", 0.9, False), ("m2", "E2", 0.5, True),
+         ("m3", "E1", 0.5, True), ("m3", "E2", 0.5, True),     # tie: id breaks it
+         ("m4", "E1", 0.9, False)],                              # gold absent
+        "mention_id string, entity_id string, score double, is_gold boolean",
     )
-    got = {r.rank: r.n for r in gold_rank_histogram(scored).collect()}
-    assert got == {1: 1, 2: 1}
+    ranks = gold_ranks(scored)
+    assert {r.mention_id: r.gold_rank for r in ranks.collect()} == {"m1": 1, "m2": 2, "m3": 1}
+    hist = ranks.groupBy("gold_rank").agg(F.count("*").alias("n"))  # q38's histogram
+    assert {r.gold_rank: r.n for r in hist.collect()} == {1: 2, 2: 1}
 
 
-def test_parse_aida_reference_quirks(spark):
-    rows = [
-        "-DOCSTART- (1 EU)",
-        "EU\tB\tEU\tEuropean_Union\thttp://x\tE_EU",
-        "rejects",
-        "German\tB\tGerman\tGermany\thttp://y\tE_DE",
-        "call",
-        "",
-        "no mentions here",          # segment WITHOUT mentions: skipped,
-        "",                          # does not consume a segment number
-        "Peter\tB\tPeter Blackburn\tPeter_B\thttp://z\tE_PB",
-        "Blackburn\tI\tPeter Blackburn\tPeter_B\thttp://z\tE_PB",
-        "",
-        "-DOCSTART- (2 X)",
-        "Foo\tB\tFoo\tFoo\thttp://f\t--NME--",  # NME → plain word, no mention
-        "bar",
-        "",
-    ]
-    lines = spark.createDataFrame([(i + 1, s) for i, s in enumerate(rows)], "line_no int, value string")
-    docs, mentions = parse_aida(lines)
-    d = {r.document_id: r.text for r in docs.collect()}
-    assert d == {"1 EU_0": "EU rejects German call", "1 EU_1": "Peter Blackburn"}
-    ms = {r.mention_id: r for r in mentions.collect()}
-    assert set(ms) == {"1 EU_0_0", "1 EU_0_1", "1 EU_1_0"}
-    for m in ms.values():  # reference invariant utils_E2E_exhaustive.py:92-94
-        assert d[m.document_id][m.start_index:m.end_index] == m.text
-    assert ms["1 EU_1_0"].text == "Peter Blackburn"
+def test_gold_ranks_search_only_the_top_of_each_ranking(spark):
+    """A gold candidate ranked below GOLD_RANK_DEPTH counts as not found."""
+    from e2e_el_spark.metrics import GOLD_RANK_DEPTH
 
-
-def test_jsonl_sources_roundtrip(spark, tmp_path):
-    from e2e_el_spark.sources.jsonl import (
-        read_documents_jsonl,
-        read_mentions_collective_jsonl,
-        read_bm25_candidates,
-        write_documents_jsonl,
+    n = GOLD_RANK_DEPTH + 1
+    scored = spark.createDataFrame(
+        [("m1", f"E{i:04d}", float(n - i), i == n - 1) for i in range(n)]
+        + [("m2", f"E{i:04d}", float(n - i), i == n - 2) for i in range(n)],
+        "mention_id string, entity_id string, score double, is_gold boolean",
     )
-
-    docs = spark.createDataFrame([("d1", "hello"), ("d2", "world")], "document_id string, text string")
-    p = str(tmp_path / "docs")
-    write_documents_jsonl(docs, p)
-    back = read_documents_jsonl(spark, p)
-    assert sorted((r.document_id, r.text) for r in back.collect()) == [("d1", "hello"), ("d2", "world")]
-
-    # layout B: one json ARRAY per line (utils_E2E_exhaustive.py:42-56)
-    mpath = tmp_path / "mentions.json"
-    rec = [{"mention_id": "m1", "start_index": 0, "end_index": 5, "text": "hello",
-            "type": "N/A", "content_document_id": "d1", "label_candidate_id": "E1",
-            "tfidf_candidates": ["E1", "E2"]}]
-    mpath.write_text(json.dumps(rec) + "\n")
-    m = read_mentions_collective_jsonl(spark, str(mpath)).collect()
-    assert len(m) == 1 and m[0].mention_id == "m1" and m[0].tfidf_candidates == ["E1", "E2"]
-
-    bpath = tmp_path / "bm25.tsv"
-    bpath.write_text("E1\tC1,C2,C3\n")
-    b = read_bm25_candidates(spark, str(bpath)).collect()[0]
-    assert b.entity_id == "E1" and b.candidate_ids == ["C1", "C2", "C3"]
+    assert [(r.mention_id, r.gold_rank) for r in gold_ranks(scored).collect()] == [("m2", n - 1)]

@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 from e2e_el_spark.operators.dedup import (
     embedding_near_duplicates,
     exact_dedup,
-    exact_duplicates,
     minhash_near_duplicates,
     ngram_jaccard_pairs,
     simhash,
@@ -27,17 +26,22 @@ def docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_exact_duplicates(spark, docs):
-    got = {r.doc_id: r for r in exact_duplicates(docs, "doc_id", "text").collect()}
-    assert got[1].group_size == 2 and got[2].group_size == 2
-    assert got[1].keeper == 1 and got[2].keeper == 1
-    assert not got[1].is_duplicate and got[2].is_duplicate
-    assert got[3].group_size == 1
-
-
 def test_exact_dedup_keeps_min_id(spark, docs):
     kept = sorted(r.doc_id for r in exact_dedup(docs, "doc_id", "text").collect())
     assert kept == [1, 3, 4, 5]
+
+
+def test_exact_duplicates(spark):
+    """A three-way duplicate group keeps only its min id whatever the input
+    order, and the kept row's other columns pass through unchanged."""
+    df = spark.createDataFrame(
+        [(9, "a b", "x"), (4, "a b", "y"), (7, "a b", "z"), (2, "c", "w")],
+        "doc_id long, text string, src string",
+    )
+    got = {r.doc_id: r for r in exact_dedup(df, "doc_id", "text").collect()}
+    assert sorted(got) == [2, 4]
+    assert got[4].text == "a b" and got[4].src == "y"
+    assert got[2].text == "c" and got[2].src == "w"
 
 
 def test_minhash_near_duplicates(spark, docs):
@@ -88,8 +92,6 @@ def test_exact_dedup_group_key_is_collision_hardened(spark, docs):
         [(1, "aaaa"), (2, "bbbb")], "doc_id long, text string"
     )
     assert exact_dedup(same_len, "doc_id", "text").count() == 2
-    dups = {r.doc_id: r for r in exact_duplicates(same_len, "doc_id", "text").collect()}
-    assert dups[1].group_size == 1 and dups[2].group_size == 1
 
 
 def test_ngram_jaccard_df_cap_exact_rescore(spark):
@@ -165,8 +167,6 @@ def test_exact_dedup_composite_key_survives_forced_collision(spark):
     birthday-bound argument."""
     from pyspark.sql import functions as F
 
-    from e2e_el_spark.operators.dedup import exact_dedup, exact_duplicates
-
     def collide_h1(text_col):
         return [
             F.length(F.col(text_col)).alias("_len"),
@@ -181,6 +181,3 @@ def test_exact_dedup_composite_key_survives_forced_collision(spark):
     )
     kept = sorted(r.doc_id for r in exact_dedup(df, "doc_id", "text", key_fn=collide_h1).collect())
     assert kept == [1, 2]  # distinct texts both kept; true dup dropped
-    groups = {r.doc_id: r.is_duplicate for r in
-              exact_duplicates(df, "doc_id", "text", key_fn=collide_h1).collect()}
-    assert groups == {1: False, 2: False, 3: True}

@@ -151,28 +151,6 @@ def test_extract_features_real_decode_channel_means(spark):
     assert feat[2] == _pytest.approx(200 / 255, abs=1e-6)
 
 
-def test_resize_images_real_roundtrip(spark):
-    """resize: decode(resized PPM payload) has the target shape and the
-    nearest-neighbor content of the source (constant-color invariance)."""
-    import numpy as np
-
-    from e2e_el_spark.operators.multimodal import decode_image, resize_images
-
-    payload, _ = _make_ppm(8, 6, (10, 20, 30))
-    media = spark.createDataFrame(
-        [("m1", "image", bytearray(payload), "image/x-portable-pixmap", 8, 6, 0)],
-        "media_id string, kind string, payload binary, mime string, width int, height int, duration_ms int",
-    )
-    out = resize_images(media, width=4, height=3).collect()[0]
-    assert (out.width, out.height) == (4, 3)
-    img = decode_image(bytes(out.payload))
-    assert img.shape == (3, 4, 3)
-    assert np.all(img.astype(np.uint8) == np.array([10, 20, 30], dtype=np.uint8))
-    # upscale composes too (PPM → PPM chaining)
-    big = decode_image(bytes(resize_images(media, 16, 12).collect()[0].payload))
-    assert big.shape == (12, 16, 3)
-
-
 def test_compressed_codec_seam():
     """Without Pillow: PNG magic raises (honest boundary). With Pillow: the
     real decoder engages and the fake path is unreachable — the roundtrip

@@ -132,16 +132,17 @@ def test_q07_sort_runs_above_the_fan_out_exchange(spark):
     around a pre-exchange 1-task sort."""
     import __spark_entry__ as entrymod
 
+    from tests.plan_inspect import physical_nodes, subtree
     from tests.test_oracle_parity import SF_DIR
 
     df = entrymod.queries()["q07_topk_per_group"](spark, SF_DIR)
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-    tree = plan.split("(1) Scan")[0]
-    assert tree.count("Exchange") == 1
-    assert tree.count("WindowGroupLimit") == 1
-    # the Sort node sits above the Exchange in the operator tree
-    sort_line = next(i for i, l in enumerate(tree.splitlines()) if "Sort" in l)
-    exch_line = next(i for i, l in enumerate(tree.splitlines()) if "Exchange" in l)
-    assert sort_line < exch_line
+    names = [n.nodeName() for n in physical_nodes(df)]
+    # whole node names: "Exchange" is the shuffle only (not BroadcastExchange
+    # / ReusedExchange), "Sort" the sort only (not SortMergeJoin / SortAggregate)
+    assert names.count("Exchange") == 1, names
+    assert names.count("WindowGroupLimit") == 1, names
+    # the Sort node sits above the Exchange: the Exchange is in its subtree
+    sort = next(n for n in physical_nodes(df) if n.nodeName() == "Sort")
+    below_sort = [n.nodeName() for n in subtree(sort)]
+    assert "Exchange" in below_sort, names
+

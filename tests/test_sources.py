@@ -1,135 +1,11 @@
-"""Corpus-format parsers (S5/S6/S10) + id normalization (P5) vs the
-reference's documented semantics."""
+"""Id normalization (P5) vs the reference's documented semantics."""
 
-from pyspark.sql import functions as F
-
-from e2e_el_spark.sources.corpus_formats import (
-    bio_to_spans,
-    normalize_entity_ids,
-    parse_candidate_dict,
-    parse_conll,
-    parse_pubtator,
-)
-
-
-def _lines(spark, rows):
-    return spark.createDataFrame(
-        [(i + 1, s) for i, s in enumerate(rows)], "line_no int, value string"
-    )
-
-
-def test_parse_pubtator(spark):
-    lines = _lines(spark, [
-        "101|t|Cystic fibrosis",
-        "101|a|A disease of the lungs.",
-        "101\t0\t15\tCystic fibrosis\tDisease\tD003550",
-        "101\t2\t9\tstic fi\tDisease\tD999",
-        "malformed\trow",
-        "202|t|Another title",
-        "202|a|Another abstract.",
-    ])
-    docs, mentions = parse_pubtator(lines)
-    d = {r.document_id: r.text for r in docs.collect()}
-    # title + ' ' + abstract concat (el_data_formatter.py:27-29)
-    assert d["101"] == "Cystic fibrosis A disease of the lungs."
-    assert d["202"] == "Another title Another abstract."
-    m = mentions.collect()
-    assert len(m) == 2  # malformed row dropped (P3 len==6 filter)
-    first = [r for r in m if r.start_index == 0][0]
-    assert (first.text, first.label_candidate_id) == ("Cystic fibrosis", "D003550")
-    # span invariant against the reconstructed doc text
-    assert d["101"][first.start_index:first.end_index] == first.text
-
-
-def test_parse_conll_and_bio_spans(spark):
-    lines = _lines(spark, [
-        "-DOCSTART- (1)",
-        "John B-PER",
-        "Smith I-PER",
-        "visited O",
-        "Paris B-LOC",
-        "",
-        "Acme B-ORG",
-        "rocks O",
-    ])
-    toks = parse_conll(lines)
-    got = [(r.doc_id, r.pos, r.token, r.tag) for r in toks.orderBy("doc_id", "pos").collect()]
-    assert got == [
-        (1, 0, "John", "B-PER"), (1, 1, "Smith", "I-PER"), (1, 2, "visited", "O"),
-        (1, 3, "Paris", "B-LOC"), (2, 0, "Acme", "B-ORG"), (2, 1, "rocks", "O"),
-    ]
-    spans = {(r.doc_id, r.start_pos, r.end_pos): (r.type, r.text) for r in bio_to_spans(toks).collect()}
-    assert spans == {
-        (1, 0, 1): ("PER", "John Smith"),
-        (1, 3, 3): ("LOC", "Paris"),
-        (2, 0, 0): ("ORG", "Acme"),
-    }
-
-
-def test_bio_spans_iob_repair(spark):
-    # I- after O starts a new span (standard IOB repair)
-    lines = _lines(spark, ["w1 O", "w2 I-X", "w3 I-X", "w4 I-Y"])
-    toks = parse_conll(lines)
-    spans = {(r.start_pos, r.end_pos): r.type for r in bio_to_spans(toks).collect()}
-    assert spans == {(1, 2): "X", (3, 3): "Y"}
-
-
-def test_parse_candidate_dict(spark):
-    lines = _lines(spark, [
-        "ENTITY Japan",
-        "CANDIDATE E1",
-        "CANDIDATE E2",
-        "ENTITY Tokyo",
-        "CANDIDATE E9",
-    ])
-    got = {r.mention_text: r.candidate_ids for r in parse_candidate_dict(lines).collect()}
-    assert got == {"Japan": ["E1", "E2"], "Tokyo": ["E9"]}
+from e2e_el_spark.functions import normalize_entity_id_expr
 
 
 def test_normalize_entity_ids(spark):
     df = spark.createDataFrame(
         [("UMLS:C123",), ("MESH:D1+D2",), ("E1|E2",), ("plain",)], "entity_id string"
     )
-    got = [r.entity_id for r in normalize_entity_ids(df).collect()]
+    got = [r.entity_id for r in df.select(normalize_entity_id_expr("entity_id").alias("entity_id")).collect()]
     assert got == ["C123", "D1", "E1", "plain"]
-
-
-def test_multifile_ingestion_parallel_and_identical(spark, tmp_path):
-    """S5-S7/S10 scale fix: multi-file corpora parse with PER-FILE windows —
-    results identical to per-file parses, and the physical plans contain no
-    single-partition exchange (the unpartitioned-window serializer)."""
-    from e2e_el_spark.sources.corpus_formats import lines_df
-
-    conll_a = "-DOCSTART- (1)\nJohn B-PER\nSmith I-PER\n\nAcme B-ORG\n"
-    conll_b = "-DOCSTART- (9)\nParis B-LOC\nrocks O\n"
-    (tmp_path / "a.txt").write_text(conll_a)
-    (tmp_path / "b.txt").write_text(conll_b)
-
-    both = parse_conll(lines_df(spark, str(tmp_path / "*.txt")))
-    plan = both._jdf.queryExecution().executedPlan().toString()
-    assert "SinglePartition" not in plan, plan
-
-    def _rows(df):
-        # doc ids are file-prefixed in multi-file mode; compare per-file tails
-        return sorted(
-            (r.doc_id.split("#")[0].rsplit("/", 1)[-1], int(r.doc_id.split("#")[1]),
-             r.pos, r.token, r.tag)
-            for r in df.collect()
-        )
-
-    merged = _rows(both)
-    solo = _rows(parse_conll(lines_df(spark, str(tmp_path / "a.txt")))) + _rows(
-        parse_conll(lines_df(spark, str(tmp_path / "b.txt")))
-    )
-    assert merged == sorted(solo)
-    # per-file doc numbering: each file restarts its boundary counter
-    files = {f for f, *_ in merged}
-    assert files == {"a.txt", "b.txt"}
-
-    # candidate-dict: ENTITY fill-down never crosses files
-    (tmp_path / "c1.txt").write_text("ENTITY Japan\nCANDIDATE E1\n")
-    (tmp_path / "c2.txt").write_text("CANDIDATE ORPHAN\nENTITY Tokyo\nCANDIDATE E9\n")
-    cands = parse_candidate_dict(lines_df(spark, str(tmp_path / "c*.txt")))
-    got = {r.mention_text: sorted(r.candidate_ids) for r in cands.collect()}
-    # ORPHAN precedes any ENTITY in its file → fill-down leaves it unowned
-    assert got == {"Japan": ["E1"], "Tokyo": ["E9"], None: ["ORPHAN"]}

@@ -1,180 +1,12 @@
-"""§2.13 streaming surface: incremental mention detection equals the batch
-backfill; watermarked session windows match the batch sessionizer on
-in-order data."""
+"""§2.13 streaming surface: incremental entity linking over a page stream
+equals the batch backfill, and epoch retries are idempotent."""
 
-import time
+import logging
 
 import pytest
 from pyspark.sql import functions as F
 
-from e2e_el_spark.streaming import sessionize_stream, stream_mentions_to, stream_pages
-
-
-def test_stream_mentions_matches_batch_backfill(spark, tmp_path):
-    from e2e_el_spark.extract import extract_documents
-    from e2e_el_spark.operators.mentions import detect_mentions
-    from e2e_el_spark.synth import aliases_df, pages_df
-
-    src = str(tmp_path / "pages_in")
-    out = str(tmp_path / "mentions_out")
-    ckpt = str(tmp_path / "ckpt")
-    pages = pages_df(spark, 40, n_entities=30, seed=3, partitions=4)
-    pages.write.parquet(src)
-    gaz = aliases_df(spark, 30, seed=3)
-
-    q = stream_mentions_to(
-        stream_pages(spark, src).select("url", "html", "text", "lang"),
-        gaz, out, ckpt,
-    )
-    q.awaitTermination(120)
-
-    got = sorted(
-        (r.mention_id, r.gazetteer_entity_id)
-        for r in spark.read.parquet(out).collect()
-    )
-    want = sorted(
-        (r.mention_id, r.gazetteer_entity_id)
-        for r in detect_mentions(extract_documents(pages), gaz).collect()
-    )
-    assert got == want and len(got) > 0
-
-    # incremental restart: nothing new to process → no duplicate appends
-    q2 = stream_mentions_to(
-        stream_pages(spark, src).select("url", "html", "text", "lang"),
-        gaz, out, ckpt,
-    )
-    q2.awaitTermination(60)
-    time.sleep(1)
-    assert spark.read.parquet(out).count() == len(want)
-
-
-def test_sessionize_stream_matches_batch_on_in_order_events(spark, tmp_path):
-    """Append-mode sessions emit only once the WATERMARK passes their end —
-    so run two checkpointed availableNow passes: pass 1 ingests the real
-    events (advancing the watermark at its end), pass 2 ingests one
-    far-future event whose arrival flushes every closed session."""
-    import datetime as dt
-    import os
-
-    src = str(tmp_path / "events_in")
-    ckpt = str(tmp_path / "sess_ckpt")
-    out = str(tmp_path / "sess_out")
-    base = dt.datetime(2024, 1, 1, 12, 0, 0)
-    rows = [
-        ("u1", base),
-        ("u1", base + dt.timedelta(minutes=10)),   # same session
-        ("u1", base + dt.timedelta(minutes=55)),   # gap > 30m → new session
-        ("u2", base),
-    ]
-    os.makedirs(src)
-    spark.createDataFrame(rows, "user_id string, ts timestamp").coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-
-    def run_once():
-        stream = spark.readStream.schema("user_id string, ts timestamp").parquet(src)
-        sess = sessionize_stream(stream, gap="30 minutes", watermark="1 hour")
-        q = (
-            sess.writeStream.format("parquet")
-            .option("path", out).option("checkpointLocation", ckpt)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination(120)
-
-    run_once()
-    # watermark-flush event, hours later; its own session stays pending
-    spark.createDataFrame(
-        [("u3", base + dt.timedelta(hours=10))], "user_id string, ts timestamp"
-    ).coalesce(1).write.mode("append").parquet(src)
-    run_once()
-
-    got = spark.read.parquet(out).filter(F.col("user_id") != "u3")
-    by_user = {
-        r.user_id: (r.n_sessions, r.n_events)
-        for r in got.groupBy("user_id").agg(
-            F.count("*").alias("n_sessions"), F.sum("n_events").alias("n_events")
-        ).collect()
-    }
-    assert by_user == {"u1": (2, 3), "u2": (1, 1)}
-
-
-def test_stream_dedup_exact_across_batches(spark, tmp_path):
-    """applyInPandasWithState lifetime dedup: duplicates arriving in LATER
-    micro-batches (even across restarts) are dropped; first occurrences
-    survive with their payload intact."""
-    import os
-
-    from e2e_el_spark.streaming import stream_dedup_exact
-
-    src = str(tmp_path / "docs_in")
-    out = str(tmp_path / "docs_out")
-    ckpt = str(tmp_path / "dd_ckpt")
-    os.makedirs(src)
-
-    def run_once():
-        stream = spark.readStream.schema("doc_id long, text string").parquet(src)
-        q = (
-            stream_dedup_exact(stream).writeStream.format("parquet")
-            .option("path", out).option("checkpointLocation", ckpt)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination(120)
-
-    spark.createDataFrame(
-        [(1, "alpha text"), (2, "beta text"), (3, "alpha text")],
-        "doc_id long, text string",
-    ).coalesce(1).write.mode("append").parquet(src)
-    run_once()
-    first = {r.doc_id for r in spark.read.parquet(out).collect()}
-    assert first in ({1, 2}, {2, 3})  # one alpha survives + beta
-    # second wave: a repeat from batch 1 and one brand-new doc
-    spark.createDataFrame(
-        [(4, "alpha text"), (5, "gamma text")], "doc_id long, text string"
-    ).coalesce(1).write.mode("append").parquet(src)
-    run_once()
-    rows = spark.read.parquet(out).collect()
-    assert {r.doc_id for r in rows} == first | {5}  # 4 deduped vs batch-1 state
-    assert sorted({r.text for r in rows}) == ["alpha text", "beta text", "gamma text"]
-
-
-def test_stream_dedup_composite_key_survives_forced_collision(spark, tmp_path):
-    """Two DISTINCT texts engineered to share hash1 (injected constant) must
-    BOTH survive — the (length, h1, h2) composite key, not any single 64-bit
-    hash, is the equality proxy (mirrors batch dedup._text_group_key; the
-    round-2 batch hardening now holds for the streaming twin too)."""
-    import os
-
-    from e2e_el_spark.streaming import stream_dedup_exact
-
-    src = str(tmp_path / "fc_in")
-    out = str(tmp_path / "fc_out")
-    ckpt = str(tmp_path / "fc_ckpt")
-    os.makedirs(src)
-
-    def h2(t):
-        return hash(t) % (1 << 62)  # process-stable within one test run
-
-    def run_once():
-        stream = spark.readStream.schema("doc_id long, text string").parquet(src)
-        q = (
-            stream_dedup_exact(stream, shards=1, hash_fns=(lambda t: 0, h2))
-            .writeStream.format("parquet")
-            .option("path", out).option("checkpointLocation", ckpt)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination(120)
-
-    # 'collide!' vs 'clash!!!': same length not required — key also carries
-    # length; h1 is the SAME constant 0 for all rows (worst case)
-    spark.createDataFrame(
-        [(1, "collide!"), (2, "clash!!!"), (3, "collide!")],
-        "doc_id long, text string",
-    ).coalesce(1).write.mode("append").parquet(src)
-    run_once()
-    rows = spark.read.parquet(out).collect()
-    texts = sorted(r.text for r in rows)
-    assert texts == ["clash!!!", "collide!"], texts  # both distinct survive
-    assert len(rows) == 2  # the true duplicate (doc 3 or 1) was dropped
+from e2e_el_spark.streaming import PAGES_SCHEMA
 
 
 def _st_louis_page_and_kb(spark, pages, ents, gaz):
@@ -217,7 +49,7 @@ def test_stream_links_parity_with_batch_backfill(spark, tmp_path):
     import os
 
     from e2e_el_spark.pipeline import PipelineConfig, run_pipeline
-    from e2e_el_spark.streaming import stream_links_to, stream_pages
+    from e2e_el_spark.streaming import stream_links_to
     from e2e_el_spark.synth import aliases_df, entities_df, pages_df
 
     src = str(tmp_path / "pl_in")
@@ -238,7 +70,7 @@ def test_stream_links_parity_with_batch_backfill(spark, tmp_path):
     for wave in (wave1, wave2):
         wave.coalesce(1).write.mode("append").parquet(src)
         q = stream_links_to(
-            stream_pages(spark, src).select("url", "html", "text", "lang"),
+            spark.readStream.schema(PAGES_SCHEMA).parquet(src),
             ents, gaz, out, ckpt, cfg,
         )
         q.awaitTermination(180)
@@ -269,7 +101,6 @@ def test_stream_links_epoch_idempotent_retry(spark, tmp_path):
     last-ULP difference between the first write and the retry is Spark
     float-sum semantics, not a broken overwrite (observed once in CI:
     ...775 vs ...774)."""
-    from e2e_el_spark.extract import extract_documents
     from e2e_el_spark.streaming import make_links_processor
     from e2e_el_spark.synth import aliases_df, entities_df, pages_df
 
@@ -297,59 +128,23 @@ def test_stream_links_epoch_idempotent_retry(spark, tmp_path):
     assert spark.read.parquet(out).count() == 2 * len(once)
 
 
-def test_stream_dedup_ttl_readmits_expired_text(spark, tmp_path):
-    """ttl_ms: a shard that sees no documents for the TTL drops its seen-set
-    (ProcessingTimeTimeout), so an expired text is re-admitted — and the
-    state-size metrics are emitted via the query progress (VERDICT r3 #7)."""
-    import os
-    import time as _time
+def test_stream_links_warns_that_rerank_is_ignored(spark, tmp_path, caplog):
+    """A micro-batch never reranks: a set ``rerank_topk`` logs one WARNING
+    when the processor is built, and an unset one logs nothing."""
+    from e2e_el_spark.pipeline import PipelineConfig
+    from e2e_el_spark.streaming import make_links_processor
+    from e2e_el_spark.synth import aliases_df, entities_df
 
-    from pyspark.sql import functions as F
-    from e2e_el_spark.streaming import stream_dedup_exact, streaming_state_metrics
+    ents, gaz = entities_df(spark, 5, seed=1), aliases_df(spark, 5, seed=1)
+    out = str(tmp_path / "links")
 
-    # pick two texts that land in DIFFERENT shards (shards=2)
-    cands = [f"text number {i}" for i in range(12)]
-    shard_of = {
-        r.t: r.s
-        for r in spark.createDataFrame([(t,) for t in cands], "t string")
-        .select("t", F.pmod(F.xxhash64("t"), F.lit(2)).alias("s")).collect()
-    }
-    text_a = next(t for t in cands if shard_of[t] == 0)
-    text_b = next(t for t in cands if shard_of[t] == 1)
+    def warnings(cfg):
+        caplog.clear()
+        with caplog.at_level(logging.WARNING, logger="e2e_el_spark.streaming"):
+            make_links_processor(ents, gaz, out, cfg)
+        return [r for r in caplog.records if r.name == "e2e_el_spark.streaming"]
 
-    src = str(tmp_path / "ttl_in")
-    out = str(tmp_path / "ttl_out")
-    ckpt = str(tmp_path / "ttl_ckpt")
-    os.makedirs(src)
-    metrics = []
-
-    def run_once():
-        stream = spark.readStream.schema("doc_id long, text string").parquet(src)
-        q = (
-            stream_dedup_exact(stream, shards=2, ttl_ms=1500)
-            .writeStream.format("parquet")
-            .option("path", out).option("checkpointLocation", ckpt)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination(120)
-        metrics.append(streaming_state_metrics(q))
-
-    spark.createDataFrame([(1, text_a)], "doc_id long, text string").coalesce(
-        1
-    ).write.mode("append").parquet(src)
-    run_once()
-    _time.sleep(3)  # > ttl: shard A's state expires at the next trigger
-    # batch 2 carries only shard B's text → shard A gets the timed-out call
-    spark.createDataFrame([(2, text_b)], "doc_id long, text string").coalesce(
-        1
-    ).write.mode("append").parquet(src)
-    run_once()
-    # batch 3: text_a again — its state was dropped, so it re-emits
-    spark.createDataFrame([(3, text_a)], "doc_id long, text string").coalesce(
-        1
-    ).write.mode("append").parquet(src)
-    run_once()
-    got = sorted((r.doc_id, r.text) for r in spark.read.parquet(out).collect())
-    assert got == [(1, text_a), (2, text_b), (3, text_a)], got
-    # state metrics observable on every batch that ran the stateful operator
-    assert any(m and m["state_rows"] is not None for m in metrics), metrics
+    warned = warnings(PipelineConfig(rerank_topk=5))
+    assert len(warned) == 1 and warned[0].levelno == logging.WARNING
+    assert "rerank_topk=5" in warned[0].getMessage()
+    assert warnings(PipelineConfig()) == []

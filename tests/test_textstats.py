@@ -78,11 +78,11 @@ def test_pairwise_f1_counts(spark):
 def test_ranking_metrics(spark):
     scored = spark.createDataFrame(
         [
-            ("m1", "E1", 0.9, "E1"), ("m1", "E2", 0.5, "E1"),   # gold rank 1
-            ("m2", "E1", 0.9, "E2"), ("m2", "E2", 0.5, "E2"),   # gold rank 2
-            ("m3", "E1", 0.9, "E9"), ("m3", "E2", 0.5, "E9"),   # gold absent
+            ("m1", "E1", 0.9, True), ("m1", "E2", 0.5, False),    # gold rank 1
+            ("m2", "E1", 0.9, False), ("m2", "E2", 0.5, True),    # gold rank 2
+            ("m3", "E1", 0.9, False), ("m3", "E2", 0.5, False),   # gold absent
         ],
-        "mention_id string, entity_id string, score double, label_candidate_id string",
+        "mention_id string, entity_id string, score double, is_gold boolean",
     )
     r = ranking_metrics(scored, k=10).collect()[0]
     assert r.p_at_1 == pytest.approx(1 / 3)
@@ -182,7 +182,7 @@ def test_metric_helpers_single_action(spark):
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         sc.setJobGroup("prf_jobs", "prf_jobs")
-        m = span_overlap_prf(pred, gold)
+        m = span_overlap_prf(pred, gold).collect()[0]
         n_prf = len(list(sc.statusTracker().getJobIdsForGroup("prf_jobs")))
         sc.setJobGroup("pfc_jobs", "pfc_jobs")
         f = pairwise_f1_from_counts(blocked)
@@ -190,7 +190,7 @@ def test_metric_helpers_single_action(spark):
     finally:
         sc.setJobGroup(None, None)
         spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
-    assert m["fp"] == 1 and m["fn"] == 2
+    assert (m.n_pred - m.tp_pred, m.n_gold - m.tp_gold) == (1, 2)  # fp, fn
     assert n_prf <= 2, n_prf
     assert (f["tp"], f["fp"], f["fn"]) == (1, 0, 0)
     assert n_pfc == 1, n_pfc

@@ -11,7 +11,6 @@ from e2e_el_spark.operators.wordpiece import (
     bert_tokenize,
     make_vocab,
     marked_mentions_tokenized,
-    wordpiece_tokens,
     wordpiece_word,
 )
 
@@ -65,18 +64,25 @@ def test_bert_tokenize_full():
 
 
 def test_wordpiece_tokens_spark(spark):
+    """WordPiece tokens and ids of a whole document computed on Spark (a
+    document with no mentions); empty and NULL text give only [CLS] [SEP]."""
     df = spark.createDataFrame(
         [("d1", "The unaffable runner"), ("d2", ""), ("d3", None)],
         "document_id string, text string",
     )
+    no_mentions = spark.createDataFrame(
+        [], "document_id string, start_index int, end_index int"
+    )
     out = {
-        r.document_id: (r.wp_tokens, r.wp_ids)
-        for r in wordpiece_tokens(df, VOCAB).collect()
+        r.document_id: (r.tokens, r.token_ids)
+        for r in marked_mentions_tokenized(df, no_mentions, VOCAB).collect()
     }
-    assert out["d1"][0] == ["the", "un", "##aff", "##able", "run", "##ner"]
+    assert out["d1"][0] == [
+        "[CLS]", "the", "un", "##aff", "##able", "run", "##ner", "[SEP]",
+    ]
     assert out["d1"][1] == [VOCAB[t] for t in out["d1"][0]]
-    assert out["d2"] == ([], [])
-    assert out["d3"] == ([], [])
+    assert out["d2"] == (["[CLS]", "[SEP]"], [VOCAB["[CLS]"], VOCAB["[SEP]"]])
+    assert out["d3"] == out["d2"]
 
 
 def test_marked_mentions_tokenized(spark):
@@ -125,23 +131,6 @@ def test_marked_mentions_multiple_sorted(spark):
     assert r.tokens == ["[CLS]", "amber", "the", "anchor", "[SEP]"]
     assert r.mention_starts == [1, 3] and r.mention_ends == [1, 3]
     assert r.tags == ["O", "B", "O", "B", "O"]
-
-
-def test_pad_and_mask(spark):
-    from e2e_el_spark.operators.wordpiece import pad_and_mask
-
-    df = spark.createDataFrame(
-        [("a", [5, 6, 7]), ("b", []), ("c", [1, 2, 3, 4, 5, 6])],
-        "k string, token_ids array<int>",
-    )
-    out = {r.k: r for r in pad_and_mask(df, max_len=4, pad_id=0).collect()}
-    assert out["a"].token_ids_padded == [5, 6, 7, 0]
-    assert out["a"].attention_mask == [1, 1, 1, 0]
-    assert out["b"].token_ids_padded == [0, 0, 0, 0]
-    assert out["b"].attention_mask == [0, 0, 0, 0]
-    # truncation: ids beyond max_len dropped, mask saturated
-    assert out["c"].token_ids_padded == [1, 2, 3, 4]
-    assert out["c"].attention_mask == [1, 1, 1, 1]
 
 
 def test_marked_mentions_overlapping_spans_dropped(spark):
