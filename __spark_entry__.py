@@ -798,18 +798,18 @@ def q44_frame_sample(spark, sf_dir):
 
 def q45_span_enumeration(spark, sf_dir):
     """Exhaustive token n-gram span enumeration (N4,
-    modeling_E2E_exhaustive.py:87-104) via the Arrow/numpy zero-shuffle form
-    (mentions.candidate_spans_arrow — the enumeration core of the flagship's
-    fused 02_mentions detector): every 1..3-token window with exact
-    character offsets and span text == substr(text, start+1, end-start).
-    Hard oracle: DuckDB reproduces offsets with ordinality + running-sum
-    windows + lead()."""
-    from e2e_el_spark.operators.mentions import candidate_spans_arrow
+    modeling_E2E_exhaustive.py:87-104) via the lead()-window form
+    (mentions.candidate_spans over tokenize_with_offsets — the enumeration
+    the detector's window fallback runs, without its anchor gating): every
+    1..3-token window with exact character offsets and span text ==
+    substr(text, start+1, end-start). Hard oracle: DuckDB reproduces offsets
+    with ordinality + running-sum windows + lead()."""
+    from e2e_el_spark.operators.mentions import candidate_spans, tokenize_with_offsets
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 20).select(
         F.col("doc_id").cast("string").alias("document_id"), "text"
     )
-    return candidate_spans_arrow(d, max_tokens=3).select(
+    return candidate_spans(tokenize_with_offsets(d), 3).select(
         "document_id", "start_index", "end_index", F.col("text").alias("span_text")
     )
 
@@ -839,7 +839,7 @@ def q46_gazetteer_mentions(spark, sf_dir):
         )
         .filter(F.length("alias") >= 3)
     )
-    return detect_mentions(docs, gaz, max_tokens=3, mode="fused")
+    return detect_mentions(docs, gaz, max_tokens=3)
 
 
 def q47_wordpiece_greedy(spark, sf_dir):
@@ -1593,8 +1593,8 @@ def oracle_sql() -> dict[str, str]:
         # n-gram ends via lead(n-1); span text re-derived with substr — the
         # module's span invariant IS the oracle identity. The driver
         # documents table is single-line (no '\n'), so no line partitioning
-        # is needed here; the newline/multi-space quirks are equivalence-
-        # tested in tests/test_mentions.py against the window form.
+        # is needed here; the newline/multi-space/unicode quirks of
+        # candidate_spans are tested in tests/test_mentions.py.
         "q45_span_enumeration": """
             WITH base AS (
                 SELECT doc_id, text, string_split(text, ' ') AS l

@@ -72,8 +72,8 @@ def main() -> None:
     build_kb_artifacts(spark, ents, cfg, kb_dir, kb_fingerprint=kb_fp)
     kb_build_s = round(time.time() - t_kb, 1)
     n_aliases = gaz.count()
-    # the engine's one fused -> window rule: distinct aliases against
-    # FUSED_MAX_ALIASES (mentions.detect_mentions)
+    # detect_mentions' one fallback rule, shared by batch and streaming:
+    # distinct aliases against FUSED_MAX_ALIASES
     fused_fits = gaz.select("alias").distinct().count() <= FUSED_MAX_ALIASES
     walls = []
     n_clusters = 0

@@ -1,16 +1,16 @@
-"""Mention detection as pure DataFrame transforms (SURVEY.md §2.9).
+"""Gazetteer mention detection (SURVEY.md §2.9).
 
 The reference detects mentions with a BIO tagging head / CRF / exhaustive
 span enumeration (`/root/reference/modeling_E2E_exhaustive.py:61-133`,
 `/root/reference/modeling_crf_ner.py:82-124`). Per the north star, this
-engine's detector is a **dictionary/gazetteer matcher expressed as DataFrame
-transforms**: tokenize with character offsets (window cumulative sums), build
-token n-gram span candidates with ``lead()`` windows, equi-join against the
-alias gazetteer (C6: exact surface-form lookup,
-`/root/reference/mention_candidates_AIDA.py:14-31`), then drop spans strictly
-contained in a longer match. Zero Python in the loop — every step is
-codegen'd Columns; Spark's size rule broadcasts the gazetteer while it is
-small.
+engine's detector is a **dictionary/gazetteer matcher** (C6: exact
+surface-form lookup, the reference's `mention_candidates_AIDA.py:14-31`)
+that drops spans strictly contained in a longer match. It has one form and
+one fallback: the fused matcher enumerates token n-gram spans and probes
+the collected alias set inside one ``mapInPandas`` scan; past
+``FUSED_MAX_ALIASES`` distinct aliases, the window form tokenizes with
+character offsets (window cumulative sums), builds anchor-gated n-gram
+spans with ``lead()`` windows and equi-joins them to the gazetteer.
 
 Span invariant preserved: ``substr(text, start_index+1, end_index-start_index)
 == text`` of the mention (`/root/reference/utils_E2E_exhaustive.py:92-94`).
@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 _UTF8_CHUNK_LIMIT = 2**31 - 1
 
 #: distinct-alias limit of the fused detector's driver-side gazetteer
-#: collect (``detect_mentions(fused_max_aliases=)`` defaults to it)
+#: collect; past it ``detect_mentions`` falls back to the window form
 FUSED_MAX_ALIASES = 2_000_000
 
 logger = logging.getLogger(__name__)
@@ -161,7 +161,9 @@ def alias_anchor_dim(gazetteer: DataFrame, max_tokens: int = 4) -> DataFrame:
     semantics-preserving for ANY gazetteer/corpus pair. Aliases longer than
     ``max_tokens`` can never match an enumerator bounded by ``max_tokens``
     and are dropped from the dim. Output is KB-sized (≤ one row per
-    distinct alias first token) — always broadcastable.
+    distinct alias first token); it only runs when the gazetteer is past
+    the fused collect limit, so Spark's size rule, not a hint, decides
+    whether it is broadcast.
     """
     return (
         gazetteer.select(F.split(F.lower("alias"), " ").alias("_aw"))
@@ -186,8 +188,8 @@ def _spans_window(
     contains — the lead() pass itself still sees every token (successor
     tokens of an anchor are arbitrary), but the 4× row expansion and the
     per-span string build collapse to the anchor rate (measured ~5-15% on
-    web-like text). The anchor join is a broadcast hash join sitting
-    between the window exec and the explode: zero extra shuffle.
+    web-like text). The anchor join sits between the window exec and the
+    explode; Spark's size rule picks broadcast or shuffle for it.
     """
     w = Window.partitionBy("document_id", "line").orderBy("lpos")
     cols = tokens
@@ -197,9 +199,7 @@ def _spans_window(
         )
     if anchors is not None:
         cols = cols.join(
-            F.broadcast(anchors),
-            F.lower(F.col("token")) == F.col("_anchor_first"),
-            "inner",
+            anchors, F.lower(F.col("token")) == F.col("_anchor_first"), "inner"
         )
     # ONE window pass + one explode of an array<struct> — not a 4-way union
     # that would re-evaluate the window per branch
@@ -243,194 +243,6 @@ def _spans_window(
     )
 
 
-def candidate_spans_arrow(documents: DataFrame, max_tokens: int = 4) -> DataFrame:
-    """Token n-gram span candidates via Arrow-batched numpy — zero token
-    shuffle AND C-speed enumeration.
-
-    Same output contract as ``candidate_spans(tokenize_with_offsets(docs))``
-    (equivalence-tested). The window form shuffles + sorts EVERY token row
-    — the largest exchange of the mention stage (~10-100× raw document
-    bytes over the network on a real cluster); this form is
-    ``mapInPandas`` over document rows (zero shuffle, like
-    ``segmentation.segment_documents``), measured at ~3-10% CPU tax vs the
-    codegen'd window form (60k pages × mult 8: n2 parity, n8 best-of 10.1s
-    vs 9.1s). Its enumeration core is the one the fused detector
-    (:func:`_match_mentions_arrow`) runs at anchor positions only.
-
-    Python-boundary discipline: the whole Arrow batch is enumerated as ONE
-    flat numpy problem — all (ASCII) docs concatenate into a single byte
-    buffer separated by '\\n' (spans never cross newlines, so doc
-    boundaries are free), separator positions / token offsets / line ids
-    come from vectorized scans, and span TEXTS are built by grouped
-    ``sliding_window_view`` gathers straight into a pyarrow string buffer.
-    No per-span Python object is ever created (a first cut that sliced one
-    Python string per span was memory-allocator-bound: 8 workers churning
-    ~10⁸ PyObjects hit the same DRAM ceiling as the shuffle it replaced).
-    Non-ASCII docs (byte ≠ char offsets) fall back to a per-doc Python
-    slice path — correctness identical, speed proportional to their share.
-    """
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-    import pyarrow as pa
-
-    src = documents.select(
-        F.col("document_id").cast("string").alias("document_id"), "text"
-    )
-    schema = "document_id string, start_index int, end_index int, text string"
-
-    def _python_doc(did, t, out):
-        """Non-ASCII fallback: per-doc Python slicing (char offsets)."""
-        import re
-
-        sp, nl = [], []
-        for m in re.finditer("[ \n]", t):
-            sp.append(m.start())
-            nl.append(t[m.start()] == "\n")
-        spv = np.asarray(sp, dtype=np.int64)
-        tok_s = np.concatenate(([0], spv + 1))
-        tok_e = np.concatenate((spv, [len(t)]))
-        line = np.concatenate(([0], np.cumsum(np.asarray(nl, dtype=bool))))
-        ntok = len(tok_s)
-        for n in range(1, max_tokens + 1):
-            if ntok < n:
-                break
-            m_ = ntok - n + 1
-            ok = line[:m_] == line[n - 1 :]
-            s = tok_s[:m_][ok]
-            e = tok_e[n - 1 :][ok]
-            if len(s):
-                out["ids"].extend([did] * len(s))
-                out["s"].append(s.astype(np.int32))
-                out["e"].append(e.astype(np.int32))
-                out["t"].extend(t[a:b] for a, b in zip(s.tolist(), e.tolist()))
-
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            # split the batch into the ASCII fast path and the fallback
-            fast_ids: list = []
-            fast_bytes: list = []
-            py_out = {"ids": [], "s": [], "e": [], "t": []}
-            for did, text in zip(pdf["document_id"], pdf["text"]):
-                t = text or ""
-                b = t.encode("utf-8")
-                if len(b) == len(t):  # byte offsets == char offsets
-                    fast_ids.append(did)
-                    fast_bytes.append(b)
-                else:
-                    _python_doc(did, t, py_out)
-
-            frames = []
-            if fast_ids:
-                frames.append(_enumerate_ascii(fast_ids, fast_bytes))
-            if py_out["ids"]:
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "document_id": pd.Series(py_out["ids"], dtype="object"),
-                            "start_index": pd.Series(
-                                np.concatenate(py_out["s"]), dtype="int32"
-                            ),
-                            "end_index": pd.Series(
-                                np.concatenate(py_out["e"]), dtype="int32"
-                            ),
-                            "text": pd.Series(py_out["t"], dtype="object"),
-                        }
-                    )
-                )
-            if not frames:
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "document_id": pd.Series([], dtype="object"),
-                            "start_index": pd.Series([], dtype="int32"),
-                            "end_index": pd.Series([], dtype="int32"),
-                            "text": pd.Series([], dtype="object"),
-                        }
-                    )
-                )
-            yield from frames
-
-    def _enumerate_ascii(doc_ids: list, doc_bytes: list) -> "pd.DataFrame":
-        # ONE flat buffer: docs joined by '\n' — the separator scan, token
-        # offsets, line ids, and per-width slides are all batch-global
-        big = b"\n".join(doc_bytes)
-        arr = np.frombuffer(big, dtype=np.uint8)
-        doc_lens = np.asarray([len(b) for b in doc_bytes], dtype=np.int64)
-        # doc k occupies [doc_off[k], doc_off[k] + len_k)
-        doc_off = np.concatenate(([0], np.cumsum(doc_lens[:-1] + 1)))
-        is_sep = (arr == 32) | (arr == 10)
-        sp = np.flatnonzero(is_sep)
-        tok_s = np.concatenate(([0], sp + 1))
-        tok_e = np.concatenate((sp, [len(arr)]))
-        nl = arr[sp] == 10 if len(sp) else np.zeros(0, dtype=bool)
-        line = np.concatenate(([0], np.cumsum(nl)))
-        ntok = len(tok_s)
-
-        id_chunks: list = []
-        s_chunks: list = []
-        e_chunks: list = []
-        len_chunks: list = []
-        val_chunks: list = []
-        for n in range(1, max_tokens + 1):
-            if ntok < n:
-                break
-            m_ = ntok - n + 1
-            ok = line[:m_] == line[n - 1 :]
-            s = tok_s[:m_][ok]
-            e = tok_e[n - 1 :][ok]
-            if not len(s):
-                continue
-            # doc index + doc-relative offsets (same doc for s and e: spans
-            # never cross '\n', and doc boundaries ARE '\n')
-            di = np.searchsorted(doc_off, s, side="right") - 1
-            rel_s = (s - doc_off[di]).astype(np.int32)
-            rel_e = (e - doc_off[di]).astype(np.int32)
-            # grouped gather per span byte-length: one sliding_window_view
-            # slice per distinct width — no per-span Python
-            L = e - s
-            order = np.argsort(L, kind="stable")
-            s_o, L_o = s[order], L[order]
-            id_chunks.append(di[order].astype(np.int32))
-            s_chunks.append(rel_s[order])
-            e_chunks.append(rel_e[order])
-            len_chunks.append(L_o.astype(np.int64))
-            widths, starts_ix = np.unique(L_o, return_index=True)
-            bounds = np.append(starts_ix, len(L_o))
-            for w, lo, hi in zip(widths, bounds[:-1], bounds[1:]):
-                if w == 0:
-                    continue  # empty-token spans contribute 0 bytes
-                windows = np.lib.stride_tricks.sliding_window_view(arr, int(w))
-                val_chunks.append(windows[s_o[lo:hi]].tobytes())
-
-        if not id_chunks:
-            return pd.DataFrame(
-                {
-                    "document_id": pd.Series([], dtype="object"),
-                    "start_index": pd.Series([], dtype="int32"),
-                    "end_index": pd.Series([], dtype="int32"),
-                    "text": pd.Series([], dtype="object"),
-                }
-            )
-        lens = np.concatenate(len_chunks)
-        text_pa = _utf8_from_lens(lens, b"".join(val_chunks))
-        ids_pa = pa.DictionaryArray.from_arrays(
-            pa.array(np.concatenate(id_chunks), type=pa.int32()),
-            pa.array(doc_ids, type=pa.string()),
-        ).cast(pa.string())
-        return pd.DataFrame(
-            {
-                "document_id": pd.Series(ids_pa, dtype=pd.ArrowDtype(pa.string())),
-                "start_index": pd.Series(np.concatenate(s_chunks), dtype="int32"),
-                "end_index": pd.Series(np.concatenate(e_chunks), dtype="int32"),
-                "text": pd.Series(text_pa, dtype=pd.ArrowDtype(pa.string())),
-            }
-        )
-
-    return src.mapInPandas(gen, schema)
-
-
 def _match_mentions_arrow(
     documents: DataFrame, aliases, max_tokens: int
 ) -> DataFrame:
@@ -441,15 +253,19 @@ def _match_mentions_arrow(
     Only MATCHED spans ever leave the UDF: the token shuffle of the window
     form, the 1..max_tokens span explosion and the spans⋈gazetteer join all
     collapse into per-batch pyarrow C++ kernels — ``utf8_lower`` +
-    ``index_in`` against the broadcast-closure alias arrays. Span texts are
-    built (via the grouped ``sliding_window_view`` gathers of
-    ``candidate_spans_arrow``) only at anchor positions whose first token
-    starts some alias at an allowed width — measured ~10-50× fewer span
-    constructions than exhaustive enumeration on web-like text.
+    ``index_in`` against the broadcast-closure alias arrays. The whole Arrow
+    batch is one flat numpy problem: ASCII docs concatenate into a single
+    '\\n'-separated byte buffer (spans never cross newlines, so doc
+    boundaries are free), and span texts are built by grouped
+    ``sliding_window_view`` gathers straight into a pyarrow string buffer,
+    with no per-span Python object — only at anchor positions whose first
+    token starts some alias at an allowed width (measured ~10-50× fewer
+    span constructions than exhaustive enumeration on web-like text).
+    Non-ASCII docs (byte ≠ char offsets) take a per-doc Python path.
 
-    ``aliases`` is the driver-side pandas frame ``(a, e)`` = (raw alias,
-    min entity_id) that :func:`detect_mentions` collects, bounded, at plan
-    construction — the Spark broadcast-variable pattern, same trade as
+    ``aliases`` is :func:`_fused_aliases`'s driver-side table (folded
+    alias → min entity_id), collected, bounded, before plan construction —
+    the Spark broadcast-variable pattern, same trade as
     ``operators.similarity``'s lazy-dim fallback.
 
     Case folding: aliases are collected RAW and folded driver-side with
@@ -458,11 +274,11 @@ def _match_mentions_arrow(
     path probes with utf8proc (``pc.utf8_lower``), which is byte-identical
     to ``str.lower()`` on the pure-ASCII spans that path matches, so the
     one folding is consistent across both fused sub-paths (round-4 verdict
-    carried three divergent foldings here). The window-join path folds
+    carried three divergent foldings here). The window fallback folds
     both sides with JVM ``lower()`` — internally consistent; Python and
-    Java 17 both track recent Unicode so fused == window holds on
-    non-Latin scripts too (equivalence property-tested incl. Cyrillic /
-    Greek final sigma / Turkish dotted-dotless I).
+    Java 17 both track recent Unicode so fused == fallback holds on
+    non-Latin scripts too (both property-tested against an exhaustive
+    reference incl. Cyrillic / Greek final sigma / Turkish dotted-dotless I).
     """
     from collections.abc import Iterator
 
@@ -471,19 +287,19 @@ def _match_mentions_arrow(
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    # min(entity_id) per FOLDED alias: two-level min (per raw alias on the
-    # cluster, per folded key here) == global min per folded key —
-    # deterministic on colliding cross-entity aliases and identical to the
-    # window path's groupBy(lower(alias)).agg(min) for ASCII keys.
-    # pandas str.lower IS Python str.lower per element (object dtype), so
-    # the match-time folding function is unchanged; lexicographic min per
-    # folded key replicates the old dict fold exactly.
-    folded = (
-        pd.DataFrame({"k": aliases["a"].fillna("").str.lower(), "e": aliases["e"]})
-        .groupby("k", sort=False)["e"].min()
-    )
-    alias_norms = folded.index.tolist()
-    alias_entities = folded.tolist()
+    def _empty() -> "pd.DataFrame":
+        return pd.DataFrame(
+            {
+                "document_id": pd.Series([], dtype="object"),
+                "start_index": pd.Series([], dtype="int32"),
+                "end_index": pd.Series([], dtype="int32"),
+                "text": pd.Series([], dtype="object"),
+                "gazetteer_entity_id": pd.Series([], dtype="object"),
+            }
+        )
+
+    alias_norms = aliases.index.tolist()
+    alias_entities = aliases.tolist()
     alias_map = dict(zip(alias_norms, alias_entities))
     # anchor dim: first token -> bitmask of alias token-counts (width w sets
     # bit w); aliases longer than max_tokens can never match
@@ -533,15 +349,7 @@ def _match_mentions_arrow(
 
     def _match_ascii(doc_ids: list, doc_bytes: list) -> "pd.DataFrame":
         if not anchor_firsts:  # empty gazetteer ⇒ no anchors ⇒ no matches
-            return pd.DataFrame(
-                {
-                    "document_id": pd.Series([], dtype="object"),
-                    "start_index": pd.Series([], dtype="int32"),
-                    "end_index": pd.Series([], dtype="int32"),
-                    "text": pd.Series([], dtype="object"),
-                    "gazetteer_entity_id": pd.Series([], dtype="object"),
-                }
-            )
+            return _empty()
         big = b"\n".join(doc_bytes)
         arr = np.frombuffer(big, dtype=np.uint8)
         doc_lens = np.asarray([len(b) for b in doc_bytes], dtype=np.int64)
@@ -614,24 +422,15 @@ def _match_mentions_arrow(
                 windows = np.lib.stride_tricks.sliding_window_view(arr, int(w))
                 sval_chunks.append(windows[s2[lo:hi]].tobytes())
 
-        empty = pd.DataFrame(
-            {
-                "document_id": pd.Series([], dtype="object"),
-                "start_index": pd.Series([], dtype="int32"),
-                "end_index": pd.Series([], dtype="int32"),
-                "text": pd.Series([], dtype="object"),
-                "gazetteer_entity_id": pd.Series([], dtype="object"),
-            }
-        )
         if not id_chunks:
-            return empty
+            return _empty()
         lens = np.concatenate(len_chunks)
         span_pa = _utf8_from_lens(lens, b"".join(sval_chunks))
         midx = pc.index_in(pc.utf8_lower(span_pa), value_set=pa.array(alias_norms))
         keep = pc.is_valid(midx)
         kn = np.flatnonzero(keep.to_numpy(zero_copy_only=False))
         if not len(kn):
-            return empty
+            return _empty()
         kept_idx = midx.filter(keep).cast(pa.int32())
         if isinstance(kept_idx, pa.ChunkedArray):
             kept_idx = kept_idx.combine_chunks()  # matched spans: small
@@ -683,31 +482,17 @@ def _match_mentions_arrow(
                     ).astype({"start_index": "int32", "end_index": "int32"})
                 )
             if not frames:
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "document_id": pd.Series([], dtype="object"),
-                            "start_index": pd.Series([], dtype="int32"),
-                            "end_index": pd.Series([], dtype="int32"),
-                            "text": pd.Series([], dtype="object"),
-                            "gazetteer_entity_id": pd.Series([], dtype="object"),
-                        }
-                    )
-                )
+                frames.append(_empty())
             yield from frames
 
     return src.mapInPandas(gen, schema)
 
 
 def detect_mentions(
-    documents: DataFrame,
-    gazetteer: DataFrame,
-    max_tokens: int = 4,
-    mode: str = "window",
-    anchor_prune: bool = True,
-    fused_max_aliases: int = FUSED_MAX_ALIASES,
+    documents: DataFrame, gazetteer: DataFrame, max_tokens: int = 4
 ) -> DataFrame:
-    """Gazetteer mention detection (N1-analog + C6).
+    """Gazetteer mention detection (N1-analog + C6) — the one detector of
+    ``run_pipeline`` and of every streaming micro-batch.
 
     gazetteer: (entity_id, alias, ...). Matching is case-insensitive exact
     surface form, longest match wins. Returns
@@ -719,51 +504,70 @@ def detect_mentions(
     across reruns and parallelism levels (SURVEY.md §7.4: never
     monotonically_increasing_id).
 
-    ``mode`` picks one of two output-identical forms (equivalence-tested):
-
-    - ``"fused"`` (the ``run_pipeline`` path): enumeration + alias matching
-      in one zero-shuffle scan (:func:`_match_mentions_arrow`). It collects
-      the distinct aliases driver-side at plan construction, bounded by
-      ``fused_max_aliases`` — past it, a driver-heap bet, so this logs the
-      fallback and builds the window form instead.
-    - ``"window"`` (the default; streaming's path, since it needs no
-      per-micro-batch driver collect): lead()-window spans joined to the
-      gazetteer, broadcast or shuffled by Spark's size rule (no hint: past
-      ``fused_max_aliases`` a forced broadcast would gather the very table
-      the fallback exists not to gather). ``anchor_prune`` (default on)
-      gates span materialization on the :func:`alias_anchor_dim` necessary
-      conditions — first token starts some alias, span width in that alias
-      set — before the span text is ever built or probed; off, it is the
-      exhaustive :func:`candidate_spans` reference.
+    Detection is the fused matcher (:func:`_match_mentions_arrow`):
+    enumeration + alias matching in one zero-shuffle scan over the distinct
+    aliases collected driver-side at plan construction. The collect is
+    bounded by ``FUSED_MAX_ALIASES`` (read at call time); past it, a
+    driver-heap bet, this logs a WARNING and falls back to the window form:
+    lead()-window spans gated on the :func:`alias_anchor_dim` necessary
+    conditions (first token starts some alias, span width in that alias
+    set) and joined to the gazetteer, each join broadcast or shuffled by
+    Spark's size rule. The two forms are output-identical (both
+    property-tested against the exhaustive :func:`candidate_spans` match).
     """
-    if mode not in ("fused", "window"):
-        raise ValueError(f"unknown detection mode {mode!r}; 'fused' or 'window'")
-    if mode == "fused":
-        # raw-alias dedupe happens JVM-side (bounds the collect to distinct
-        # aliases); folding happens driver-side so it uses the match-time
-        # function. limit(n+1) bounds the transferred rows even past the
-        # limit. toPandas (Arrow batches) instead of row collect: 2.0s vs
-        # 12.7s at 1.2M aliases (BENCH/SCALING_EVIDENCE.md R5-h).
-        aliases = (
-            gazetteer.groupBy(F.col("alias").alias("a"))
-            .agg(F.min("entity_id").alias("e"))
-            .limit(fused_max_aliases + 1)
-            .toPandas()
+    return _detect(documents, gazetteer, max_tokens, _fused_aliases(gazetteer))
+
+
+def _fused_aliases(gazetteer: DataFrame):
+    """The fused matcher's alias table: min entity_id per folded alias (a
+    pandas Series indexed by the folded alias), collected to the driver —
+    or None, with a WARNING, past ``FUSED_MAX_ALIASES`` distinct aliases.
+    ``streaming.make_links_processor`` collects it once per stream."""
+    import pandas as pd
+
+    # raw-alias dedupe happens JVM-side (bounds the collect to distinct
+    # aliases); folding happens driver-side so it uses the match-time
+    # function. limit(n+1) bounds the transferred rows even past the
+    # limit. toPandas (Arrow batches) instead of row collect: 2.0s vs
+    # 12.7s at 1.2M aliases (BENCH/SCALING_EVIDENCE.md R5-h).
+    limit = FUSED_MAX_ALIASES
+    aliases = (
+        gazetteer.groupBy(F.col("alias").alias("a"))
+        .agg(F.min("entity_id").alias("e"))
+        .limit(limit + 1)
+        .toPandas()
+    )
+    if len(aliases) > limit:
+        logger.warning(
+            "gazetteer has more than FUSED_MAX_ALIASES=%d distinct"
+            " aliases: falling back to the window detector",
+            limit,
         )
-        if len(aliases) > fused_max_aliases:
-            logger.warning(
-                "gazetteer has more than fused_max_aliases=%d distinct"
-                " aliases: falling back to the window detector",
-                fused_max_aliases,
-            )
-            mode = "window"
-        else:
-            matches = _match_mentions_arrow(documents, aliases, max_tokens)
-    if mode == "window":
+        return None
+    # min(entity_id) per FOLDED alias: two-level min (per raw alias on the
+    # cluster, per folded key here) == global min per folded key —
+    # deterministic on colliding cross-entity aliases and identical to the
+    # window path's groupBy(lower(alias)).agg(min) for ASCII keys.
+    # pandas str.lower IS Python str.lower per element (object dtype), so
+    # the match-time folding function is unchanged. Sort + keep-first, not
+    # groupby().min(): pandas reduces an object column one group at a time
+    # in Python (~30 s at 10^6 aliases, against ~2 s for the sort).
+    folded = pd.DataFrame({"k": aliases["a"].fillna("").str.lower(), "e": aliases["e"]})
+    return folded.sort_values(["k", "e"]).drop_duplicates("k").set_index("k")["e"]
+
+
+def _detect(
+    documents: DataFrame, gazetteer: DataFrame, max_tokens: int, aliases
+) -> DataFrame:
+    """:func:`detect_mentions` with the alias table already collected by
+    :func:`_fused_aliases` (None: the window fallback)."""
+    if aliases is not None:
+        matches = _match_mentions_arrow(documents, aliases, max_tokens)
+    else:
         spans = _spans_window(
             tokenize_with_offsets(documents),
             max_tokens,
-            anchors=alias_anchor_dim(gazetteer, max_tokens) if anchor_prune else None,
+            anchors=alias_anchor_dim(gazetteer, max_tokens),
         )
         # min(entity_id) per normalized alias — deterministic on colliding
         # cross-entity aliases (dropDuplicates would pick an arbitrary row)

@@ -701,7 +701,7 @@ def run_pipeline(
 
     mentions = runner.run(
         "02_mentions",
-        lambda: detect_mentions(documents, gazetteer, MAX_MENTION_TOKENS, mode="fused"),
+        lambda: detect_mentions(documents, gazetteer, MAX_MENTION_TOKENS),
     )
     kb = build_kb_artifacts(
         spark, entities, cfg, kb_workdir or os.path.join(workdir, "_kb"),

@@ -4,10 +4,10 @@ linking over a stream of pages.
 The reference is pure batch — nothing here ports reference behavior. This is
 the streaming entry point a production deployment of the same engine needs:
 each micro-batch runs the UNCHANGED batch operators (extract → mentions →
-pairs → score → link) via ``foreachBatch``, because ``detect_mentions`` uses
-window functions, which streaming DataFrames don't support. Same code path
-as batch ⇒ no semantic drift between the backfill job and the incremental
-job.
+pairs → score → link) via ``foreachBatch``, because ``detect_mentions``
+prunes contained spans with a window function, which streaming DataFrames
+don't support. Same code path as batch, the detector included ⇒ no
+semantic drift between the backfill job and the incremental job.
 """
 
 from __future__ import annotations
@@ -42,6 +42,10 @@ def make_links_processor(
     duplicates its links — dedupe downstream on (mention_id) or use the
     idempotent mode.
 
+    The gazetteer's alias table is collected once, when the processor is
+    built, like the KB artifacts ``kb``: the stream links against the KB
+    as it was at start.
+
     Micro-batches never rerank: ``cfg.rerank_topk`` is ignored, with one
     WARNING when it is set: the rerank context of a surface is its
     min-``mention_id`` mention over the whole corpus
@@ -49,7 +53,7 @@ def make_links_processor(
     see.
     """
     from e2e_el_spark.extract import extract_documents
-    from e2e_el_spark.operators.mentions import detect_mentions
+    from e2e_el_spark.operators.mentions import _detect, _fused_aliases
     from e2e_el_spark.pipeline import (
         MAX_MENTION_TOKENS,
         PipelineConfig,
@@ -66,14 +70,14 @@ def make_links_processor(
             "stream_links_to ignores rerank_topk=%s: micro-batch links are "
             "the un-reranked 05_links", cfg.rerank_topk)
     kb_art = kb if kb is not None else kb_frames(entities)
+    # the KB is fixed for the stream's life (as ``kb`` is): collect
+    # detect_mentions' alias table once here, not once per micro-batch
+    aliases = _fused_aliases(gazetteer)
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         docs = extract_documents(batch_df)
-        # default (window-form) detection on whole documents, not
-        # run_pipeline's fused form: the fused matcher collects the
-        # gazetteer at plan construction, i.e. once per MICRO-BATCH here;
-        # the two forms are output-identical (equivalence-tested).
-        mentions = detect_mentions(docs, gazetteer, MAX_MENTION_TOKENS)
+        # run_pipeline's detector (detect_mentions) on whole documents
+        mentions = _detect(docs, gazetteer, MAX_MENTION_TOKENS, aliases)
         cands = candidate_pairs(mentions, kb_art)
         scored = score_candidates(cands, gazetteer)
         links = mention_links(link_top1(scored, cfg.link_threshold), mentions)
@@ -100,11 +104,10 @@ def stream_links_to(
     mention detection).
 
     With ``cfg.rerank_topk`` None, per-micro-batch links are IDENTICAL to
-    ``run_pipeline``'s ``05_links`` over the union of the batches: both detect mentions on the same whole
-    documents (the batch side in the fused form, this side in the window
-    form; the two are equivalence-tested), and every per-mention signal is
-    a pure function of (surface, KB) — the KB-only vocabulary
-    (``pipeline._kb_vocab``) removed the last corpus-level dependency
+    ``run_pipeline``'s ``05_links`` over the union of the batches: both
+    run the same ``detect_mentions`` on the same whole documents, and every
+    per-mention signal is a pure function of (surface, KB) — the KB-only
+    vocabulary (``pipeline._kb_vocab``) removed the last corpus-level dependency
     (corpus IDF), so scoring cannot see batch composition. foreachBatch
     reuses the unchanged batch operators; pass precomputed ``kb`` artifacts
     (``pipeline.build_kb_artifacts``) so each micro-batch plan starts from

@@ -1,12 +1,59 @@
 """Gazetteer mention detection: offsets, longest-match, span invariant."""
 
+import logging
+
 from pyspark.sql import functions as F
 
+from e2e_el_spark.operators import mentions
 from e2e_el_spark.operators.mentions import (
     candidate_spans,
     detect_mentions,
     tokenize_with_offsets,
 )
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _exhaustive_reference(docs, gaz, max_tokens=4):
+    """The match both detector forms are checked against, with no anchor
+    gating anywhere: every :func:`candidate_spans` window joined on
+    JVM-lowered text to the min entity per lowered alias, then the
+    longest-match prune (a match goes iff another match of its doc starts
+    at-or-before and ends at-or-after it) and content mention ids."""
+    spans = candidate_spans(tokenize_with_offsets(docs), max_tokens)
+    gaz = gaz.groupBy(F.lower("alias").alias("_k")).agg(
+        F.min("entity_id").alias("gazetteer_entity_id")
+    )
+    found = spans.join(gaz, F.lower(spans["text"]) == gaz["_k"]).collect()
+    return sorted(
+        (f"{m.document_id}#{m.start_index}-{m.end_index}", m.document_id,
+         m.start_index, m.end_index, m.text, m.gazetteer_entity_id)
+        for m in found
+        if not any(
+            o.document_id == m.document_id and o is not m
+            and o.start_index <= m.start_index and o.end_index >= m.end_index
+            for o in found
+        )
+    )
+
+
+def _fused_and_fallback(monkeypatch, docs, gaz, max_tokens=4):
+    """detect_mentions' rows from the fused matcher and from the window
+    fallback (reached with FUSED_MAX_ALIASES at 0); each plan is checked to
+    be the form it claims."""
+    fused = detect_mentions(docs, gaz, max_tokens)
+    with monkeypatch.context() as m:
+        m.setattr(mentions, "FUSED_MAX_ALIASES", 0)
+        fallback = detect_mentions(docs, gaz, max_tokens)
+    assert "MapInPandas" in _plan(fused)
+    assert "MapInPandas" not in _plan(fallback)
+    return _rows(fused), _rows(fallback)
 
 
 def test_tokenize_offsets_exact(spark):
@@ -96,32 +143,15 @@ def _span_fixture(spark):
     )
 
 
-def test_candidate_spans_alt_forms_equal_window_form(spark):
-    """The zero-shuffle Arrow/numpy enumeration must emit EXACTLY the span
-    set of the window form (same offsets, same texts), including
-    multi-space / multi-line / unicode quirks."""
-    from e2e_el_spark.operators.mentions import candidate_spans_arrow
-
-    docs = _span_fixture(spark)
-    for mt in (1, 2, 4):
-        want = sorted(
-            (r.document_id, r.start_index, r.end_index, r.text)
-            for r in candidate_spans(tokenize_with_offsets(docs), mt).collect()
-        )
-        got = sorted(
-            (r.document_id, r.start_index, r.end_index, r.text)
-            for r in candidate_spans_arrow(docs, mt).collect()
-        )
-        assert got == want, (mt, got[:5], want[:5])
-
-
 def test_candidate_spans_alt_forms_substring_invariant(spark):
-    # span invariant: span text == substr(doc text, start+1, end-start)
-    from e2e_el_spark.operators.mentions import candidate_spans_arrow
-
+    # span invariant: span text == substr(doc text, start+1, end-start),
+    # through multi-space, multi-line and unicode documents
     docs = _span_fixture(spark)
-    spans = candidate_spans_arrow(docs, 4).withColumnRenamed("text", "span_text")
+    spans = candidate_spans(tokenize_with_offsets(docs), 4).withColumnRenamed(
+        "text", "span_text"
+    )
     joined = spans.join(docs, "document_id")
+    assert joined.count() > 0
     n_bad = joined.filter(
         F.expr("substr(text, start_index + 1, end_index - start_index)")
         != F.col("span_text")
@@ -129,7 +159,7 @@ def test_candidate_spans_alt_forms_substring_invariant(spark):
     assert n_bad == 0
 
 
-def test_detect_mentions_same_result_across_span_modes(spark):
+def test_detect_mentions_same_result_across_span_modes(spark, monkeypatch):
     docs = spark.createDataFrame(
         [("d1", "visit amber anchor labs today\nsee amber anchor now")],
         "document_id string, text string",
@@ -138,18 +168,18 @@ def test_detect_mentions_same_result_across_span_modes(spark):
         [("e1", "amber anchor labs"), ("e2", "amber anchor"), ("e3", "today")],
         "entity_id string, alias string",
     )
-    want = sorted(map(tuple, detect_mentions(docs, gaz, mode="window").collect()))
-    got = sorted(map(tuple, detect_mentions(docs, gaz, mode="fused").collect()))
-    assert got == want
+    fused, fallback = _fused_and_fallback(monkeypatch, docs, gaz)
+    assert fused == fallback == _exhaustive_reference(docs, gaz)
 
 
-def test_detect_mentions_anchor_prune_equivalence(spark):
-    """anchor_prune and the fused matcher are output-identical to the
-    unpruned join path — first-token + token-count equality are necessary
-    conditions of full-surface equality, so pruning on them drops nothing.
-    The gazetteer stresses the prune's edges: a single-token alias, an
-    alias longer than max_tokens (never matchable), consecutive spaces
-    (empty first token from split), case variants, and a numeric tail."""
+def test_detect_mentions_anchor_prune_equivalence(spark, monkeypatch):
+    """The fused matcher and the anchor-pruned window fallback are
+    output-identical to the exhaustive reference — first-token +
+    token-count equality are necessary conditions of full-surface equality,
+    so pruning on them drops nothing. The gazetteer stresses the prune's
+    edges: a single-token alias, an alias longer than max_tokens (never
+    matchable), consecutive spaces (empty first token from split), case
+    variants, and a numeric tail."""
     docs = spark.createDataFrame(
         [
             ("d1", "the amber anchor labs 3 report\nAMBER Anchor alone"),
@@ -169,24 +199,17 @@ def test_detect_mentions_anchor_prune_equivalence(spark):
         ],
         "entity_id string, alias string",
     )
-    want = sorted(
-        map(tuple, detect_mentions(docs, gaz, anchor_prune=False).collect())
-    )
+    want = _exhaustive_reference(docs, gaz)
     assert want  # fixture sanity: the prune must have matches to preserve
-    got_pruned = sorted(
-        map(tuple, detect_mentions(docs, gaz, anchor_prune=True).collect())
-    )
-    got_fused = sorted(
-        map(tuple, detect_mentions(docs, gaz, mode="fused").collect())
-    )
-    assert got_pruned == want
-    assert got_fused == want
+    fused, fallback = _fused_and_fallback(monkeypatch, docs, gaz)
+    assert fallback == want
+    assert fused == want
 
 
-def test_detect_mentions_fused_non_ascii_fallback(spark):
+def test_detect_mentions_fused_non_ascii_fallback(spark, monkeypatch):
     """Non-ASCII documents route through the fused matcher's per-doc Python
-    path; results must match the join path exactly (offsets are CHAR
-    offsets, not byte offsets)."""
+    path; results must match the exhaustive reference exactly (offsets are
+    CHAR offsets, not byte offsets)."""
     docs = spark.createDataFrame(
         [
             ("d1", "héllo wörld amber anchor\nzz top 9 amber"),
@@ -203,15 +226,12 @@ def test_detect_mentions_fused_non_ascii_fallback(spark):
         ],
         "entity_id string, alias string",
     )
-    want = sorted(
-        map(tuple, detect_mentions(docs, gaz, anchor_prune=False).collect())
-    )
-    got = sorted(map(tuple, detect_mentions(docs, gaz, mode="fused").collect()))
-    assert got == want
+    want = _exhaustive_reference(docs, gaz)
+    fused, fallback = _fused_and_fallback(monkeypatch, docs, gaz)
+    assert fused == want
+    assert fallback == want
     # the span invariant holds through the fallback: char-offset substr
-    m = detect_mentions(docs, gaz, mode="fused").withColumnRenamed(
-        "text", "mtext"
-    )
+    m = detect_mentions(docs, gaz).withColumnRenamed("text", "mtext")
     bad = (
         m.join(docs, "document_id")
         .filter(
@@ -228,14 +248,15 @@ def test_detect_mentions_fused_empty_gazetteer(spark):
         [("d1", "some text here")], "document_id string, text string"
     )
     gaz = spark.createDataFrame([], "entity_id string, alias string")
-    assert detect_mentions(docs, gaz, mode="fused").count() == 0
+    assert detect_mentions(docs, gaz).count() == 0
 
 
-def test_detect_mentions_mode_equivalence_property(spark):
-    """Property: both detection forms (anchor-pruned window, fused) agree
-    with the unpruned window reference on random corpora and gazetteers — words drawn from a small alphabet so aliases collide with
+def test_detect_mentions_mode_equivalence_property(spark, monkeypatch):
+    """Property: both detection forms (fused, anchor-pruned window
+    fallback) agree with the exhaustive reference on random corpora and
+    gazetteers — words drawn from a small alphabet so aliases collide with
     document n-grams often, plus unicode words to force the fused matcher's
-    fallback, empty tokens (double spaces), newlines, and width-1..5
+    non-ASCII path, empty tokens (double spaces), newlines, and width-1..5
     aliases (5 > max_tokens exercises the never-matchable prune)."""
     import hypothesis.strategies as st
     from hypothesis import HealthCheck, given, settings
@@ -265,25 +286,24 @@ def test_detect_mentions_mode_equivalence_property(spark):
         )
         if gaz.isEmpty():
             return
-        want = sorted(
-            map(tuple, detect_mentions(docs, gaz, anchor_prune=False).collect())
-        )
-        for kw in ({"anchor_prune": True}, {"mode": "fused"}):
-            got = sorted(map(tuple, detect_mentions(docs, gaz, **kw).collect()))
-            assert got == want, (kw, texts, aliases)
+        want = _exhaustive_reference(docs, gaz)
+        fused, fallback = _fused_and_fallback(monkeypatch, docs, gaz)
+        assert fused == want, ("fused", texts, aliases)
+        assert fallback == want, ("fallback", texts, aliases)
 
     run()
 
 
-def test_detect_mentions_mode_equivalence_non_latin(spark):
+def test_detect_mentions_mode_equivalence_non_latin(spark, monkeypatch):
     """Round-4 verdict #3: the fused matcher used THREE case foldings (JVM
     lower for the alias map, utf8proc for ASCII docs, Python str.lower for
     non-ASCII docs) — divergent on locale-exotic codepoints. Now aliases
     are collected raw and folded with the match-time function, so fused ==
-    window must hold on non-Latin scripts where foldings historically
-    diverge: Cyrillic case pairs, Greek final sigma (context-sensitive
-    lowering), Turkish dotted/dotless I (U+0130 lowers to i + combining
-    dot), Kelvin sign K (U+212A lowers to ASCII k)."""
+    fallback == the JVM-folded exhaustive reference must hold on non-Latin
+    scripts where foldings historically diverge: Cyrillic case pairs, Greek
+    final sigma (context-sensitive lowering), Turkish dotted/dotless I
+    (U+0130 lowers to i + combining dot), Kelvin sign K (U+212A lowers to
+    ASCII k)."""
     import hypothesis.strategies as st
     from hypothesis import HealthCheck, given, settings
 
@@ -315,21 +335,19 @@ def test_detect_mentions_mode_equivalence_non_latin(spark):
         )
         if gaz.isEmpty():
             return
-        want = sorted(
-            map(tuple, detect_mentions(docs, gaz, mode="window").collect())
-        )
-        got = sorted(
-            map(tuple, detect_mentions(docs, gaz, mode="fused").collect())
-        )
-        assert got == want, (texts, aliases)
+        want = _exhaustive_reference(docs, gaz)
+        fused, fallback = _fused_and_fallback(monkeypatch, docs, gaz)
+        assert fused == want, ("fused", texts, aliases)
+        assert fallback == want, ("fallback", texts, aliases)
 
     run()
 
 
-def test_detect_mentions_fused_cross_case_non_ascii(spark):
+def test_detect_mentions_fused_cross_case_non_ascii(spark, monkeypatch):
     """Uppercase Cyrillic alias vs lowercase Cyrillic document text (and
-    vice versa) must match through the fused matcher's Python fallback —
-    the exact path-pair whose foldings diverged in round 4."""
+    vice versa) must match through the fused matcher's Python path — the
+    exact path-pair whose foldings diverged in round 4 — and through the
+    window fallback."""
     docs = spark.createDataFrame(
         [("d0", "в москва сегодня"), ("d1", "В МОСКВА СЕГОДНЯ")],
         "document_id string, text string",
@@ -337,24 +355,19 @@ def test_detect_mentions_fused_cross_case_non_ascii(spark):
     gaz = spark.createDataFrame(
         [("E1", "МОСКВА"), ("E2", "сегодня")], "entity_id string, alias string"
     )
-    for mode in ("fused", "window"):
-        got = {
-            (r.document_id, r.text, r.gazetteer_entity_id)
-            for r in detect_mentions(docs, gaz, mode=mode).collect()
-        }
+    for form, rows in zip(("fused", "fallback"), _fused_and_fallback(monkeypatch, docs, gaz)):
+        got = {(r[1], r[4], r[5]) for r in rows}
         assert got == {
             ("d0", "москва", "E1"), ("d0", "сегодня", "E2"),
             ("d1", "МОСКВА", "E1"), ("d1", "СЕГОДНЯ", "E2"),
-        }, mode
+        }, form
 
 
-def test_detect_mentions_fused_alias_limit(spark, caplog):
+def test_detect_mentions_fused_alias_limit(spark, caplog, monkeypatch):
     """The fused matcher's driver-side gazetteer collect is guarded: past
-    fused_max_aliases distinct aliases detection falls back to the window
+    FUSED_MAX_ALIASES distinct aliases detection falls back to the window
     form — same output — and logs the fallback instead of silently betting
     driver memory (round-4 verdict #6)."""
-    import logging
-
     docs = spark.createDataFrame(
         [("d0", "a alias1 c alias7\nALIAS3 b")], "document_id string, text string"
     )
@@ -362,28 +375,31 @@ def test_detect_mentions_fused_alias_limit(spark, caplog):
         [(f"E{i}", f"alias{i}") for i in range(10)] + [("E0", "alias0")],
         "entity_id string, alias string",
     )
-    want = sorted(map(tuple, detect_mentions(docs, gaz, mode="window").collect()))
+    want = _exhaustive_reference(docs, gaz)
     assert len(want) == 3  # fixture sanity
     logger = "e2e_el_spark.operators.mentions"
+    monkeypatch.setattr(mentions, "FUSED_MAX_ALIASES", 9)
     with caplog.at_level(logging.WARNING, logger=logger):
-        got = detect_mentions(docs, gaz, mode="fused", fused_max_aliases=9)
-    assert sorted(map(tuple, got.collect())) == want
+        got = detect_mentions(docs, gaz)
+    assert _rows(got) == want
     assert any("falling back" in r.getMessage() for r in caplog.records)
+    assert "MapInPandas" not in _plan(got)
     # at the limit (10 distinct aliases; the duplicate row does not count)
     # the fused form runs and nothing is logged
     caplog.clear()
+    monkeypatch.setattr(mentions, "FUSED_MAX_ALIASES", 10)
     with caplog.at_level(logging.WARNING, logger=logger):
-        got = detect_mentions(docs, gaz, mode="fused", fused_max_aliases=10)
-    assert sorted(map(tuple, got.collect())) == want
+        got = detect_mentions(docs, gaz)
+    assert _rows(got) == want
     assert not caplog.records
-    assert "MapInPandas" in got._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in _plan(got)
 
 
-def test_detect_mentions_colliding_folded_aliases_min_entity(spark):
+def test_detect_mentions_colliding_folded_aliases_min_entity(spark, monkeypatch):
     """R5-h: the fused matcher's vectorized driver fold (groupby-min per
-    folded key) must keep the window path's semantics — when case-variant
-    aliases of DIFFERENT entities fold to one key, the minimum entity_id
-    wins, identically in both modes."""
+    folded key) must keep the window fallback's semantics — when
+    case-variant aliases of DIFFERENT entities fold to one key, the minimum
+    entity_id wins, identically in both forms."""
     docs = spark.createDataFrame(
         [("d1", "we met acme yesterday")], "document_id string, text string"
     )
@@ -391,8 +407,7 @@ def test_detect_mentions_colliding_folded_aliases_min_entity(spark):
         [("e9", "Acme"), ("e1", "ACME"), ("e5", "acme")],
         "entity_id string, alias string",
     )
-    for mode in ("fused", "window"):
-        got = detect_mentions(docs, gaz, mode=mode).collect()
-        assert len(got) == 1, (mode, got)
-        assert got[0].gazetteer_entity_id == "e1", (mode, got)
-        assert got[0].text == "acme"
+    for form, got in zip(("fused", "fallback"), _fused_and_fallback(monkeypatch, docs, gaz)):
+        assert len(got) == 1, (form, got)
+        assert got[0][5] == "e1", (form, got)
+        assert got[0][4] == "acme"

@@ -5,9 +5,16 @@ import pytest
 from pyspark.sql import functions as F
 
 from e2e_el_spark.extract import extract_documents
+from e2e_el_spark.operators import mentions
 from e2e_el_spark.operators.mentions import detect_mentions
 from e2e_el_spark.synth import aliases_df
-from tests.plan_inspect import broadcast_hinted_columns, broadcast_threshold, evh_pruned
+from tests.plan_inspect import (
+    broadcast_hinted_columns,
+    broadcast_threshold,
+    evh_pruned,
+    physical_nodes,
+    subtree,
+)
 
 
 def _plan(df) -> str:
@@ -39,10 +46,13 @@ def test_extract_prunes_stored_text_column(spark, tmp_path):
     assert "url" in plan and "html" in plan
 
 
-def test_gazetteer_join_is_broadcast(spark):
+def test_gazetteer_join_is_broadcast(spark, monkeypatch):
+    """The window fallback's gazetteer join on a small KB is broadcast by
+    Spark's own size rule."""
     docs = spark.createDataFrame([("d1", "alpha beta")], "document_id string, text string")
     gaz = aliases_df(spark, 20, seed=42)
-    plan = _plan(detect_mentions(docs, gaz, mode="window"))
+    monkeypatch.setattr(mentions, "FUSED_MAX_ALIASES", 0)
+    plan = _plan(detect_mentions(docs, gaz))
     assert "BroadcastHashJoin" in plan, plan
 
 
@@ -56,7 +66,7 @@ def test_fused_detector_plan_has_no_pre_scan_exchange(spark):
         [("d1", "alpha beta gamma")], "document_id string, text string"
     )
     gaz = aliases_df(spark, 20, seed=42)
-    plan = _plan(detect_mentions(docs, gaz, mode="fused"))
+    plan = _plan(detect_mentions(docs, gaz))
     assert "MapInPandas" in plan, plan
     # nothing below the python scan: no join, no explode/generate anywhere
     assert "Join" not in plan, plan
@@ -99,25 +109,68 @@ def test_pipeline_mentions_stage_is_one_python_scan(spark, tmp_path, monkeypatch
     assert "Join" not in plan, plan
 
 
-def test_anchor_pruned_window_form_gates_explode_on_anchor_join(spark):
-    """anchor_prune=True (window mode): the broadcast anchor join must sit
+_JOINS = ("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin")
+
+
+def _anchor_join(df):
+    """The ``_anchor_first`` join below the window fallback's width-gated
+    span explode, whatever the join strategy."""
+    explode = next(
+        n for n in physical_nodes(df)
+        if n.nodeName() == "Generate"
+        and "array_contains(_anchor_widths" in n.generator().toString()
+    )
+    return next(
+        n for n in subtree(explode)
+        if n.nodeName() in _JOINS and "_anchor_first" in n.toString().split("\n")[0]
+    )
+
+
+def test_anchor_pruned_window_form_gates_explode_on_anchor_join(spark, monkeypatch):
+    """The window fallback: the anchor join on the lowered token must sit
     BETWEEN the token window pass and the span explode, so the 1..k row
     expansion happens only for anchor tokens."""
     docs = spark.createDataFrame(
         [("d1", "alpha beta gamma")], "document_id string, text string"
     )
     gaz = aliases_df(spark, 20, seed=42)
-    plan = _plan(
-        detect_mentions(docs, gaz, mode="window", anchor_prune=True)
+    monkeypatch.setattr(mentions, "FUSED_MAX_ALIASES", 0)
+    join = _anchor_join(detect_mentions(docs, gaz))
+    assert "lower(token" in join.toString().split("\n")[0], join.toString()
+    assert any(n.nodeName() == "Window" for n in subtree(join)), join.toString()
+
+
+def test_window_fallback_follows_the_size_rule(spark, monkeypatch, caplog):
+    """The window fallback runs only for a gazetteer too big to collect,
+    so its anchor dim carries no broadcast hint: with broadcasting off the
+    anchor join is shuffled, and the output still equals the fused
+    matcher's."""
+    import logging
+
+    docs = spark.createDataFrame(
+        [("d1", "visit amber anchor labs today\nsee Amber Anchor now"),
+         ("d2", "zz top 9 and amber")],
+        "document_id string, text string",
     )
-    # the anchor dim is broadcast-joined on the lowered token...
-    assert "_anchor_first" in plan and "BroadcastHashJoin [lower(token" in plan, plan
-    # ...and every span variant inside the explode is width-gated
-    span_explode = next(
-        s for s in plan.split("+- Generate") if "start_index" in s.split("\n")[0]
+    gaz = spark.createDataFrame(
+        [("e1", "amber anchor labs"), ("e2", "amber anchor"), ("e3", "today"),
+         ("e4", "zz top 9"), ("e5", "amber")],
+        "entity_id string, alias string",
     )
-    head = span_explode.split("\n")[0]
-    assert "array_contains(_anchor_widths" in head, head
+    fused = sorted(map(tuple, detect_mentions(docs, gaz).collect()))
+    assert fused  # fixture sanity
+    monkeypatch.setattr(mentions, "FUSED_MAX_ALIASES", 0)
+    with broadcast_threshold(spark, "-1"), caplog.at_level(
+        logging.WARNING, logger="e2e_el_spark.operators.mentions"
+    ):
+        fallback = detect_mentions(docs, gaz)
+        hinted = broadcast_hinted_columns(fallback)
+        join = _anchor_join(fallback)
+        got = sorted(map(tuple, fallback.collect()))
+    assert any("falling back" in r.getMessage() for r in caplog.records)
+    assert not any("_anchor_first" in cols for cols in hinted), hinted
+    assert join.nodeName() != "BroadcastHashJoin", join.toString()
+    assert got == fused
 
 
 def test_vocab_topk_is_distributed(spark):
@@ -214,7 +267,6 @@ def test_kb_scale_plan_decisions_output_invariant(spark, tmp_path, caplog, monke
     prune fires, plus the window-mode detection fallback) on a small input
     must give bit-identical clusters to the default paths — plan decisions
     are performance only."""
-    import functools
     import logging
 
     from e2e_el_spark import pipeline
@@ -234,16 +286,13 @@ def test_kb_scale_plan_decisions_output_invariant(spark, tmp_path, caplog, monke
         return pairs_plans[-1]
 
     monkeypatch.setattr(pipeline, "candidate_pairs", recording_candidate_pairs)
-    monkeypatch.setattr(
-        pipeline, "detect_mentions",
-        functools.partial(pipeline.detect_mentions, fused_max_aliases=0),
-    )
+    monkeypatch.setattr(mentions, "FUSED_MAX_ALIASES", 0)
     with broadcast_threshold(spark, "-1"), caplog.at_level(
         logging.WARNING, logger="e2e_el_spark.operators.mentions"
     ):
         alt = run_pipeline(spark, pages, ents, gaz, str(tmp_path / "b"))
     # the window fallback really fired (else this compares fused to fused)
-    assert any("fused_max_aliases=0" in r.getMessage() for r in caplog.records)
+    assert any("FUSED_MAX_ALIASES=0" in r.getMessage() for r in caplog.records)
     # ... and 03_pairs took the pruned branch
     assert len(pairs_plans) == 1 and evh_pruned(pairs_plans[0])
 

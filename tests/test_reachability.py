@@ -30,8 +30,6 @@ ROOTS = [
 ]
 
 ALLOWED_TEST_ONLY = {
-    "mentions.candidate_spans":
-        "exhaustive span reference the gazetteer matchers are checked against",
     "metrics.labeled_same_block_pairs":
         "pair-table reference that pairwise_f1_from_counts is checked against",
     "functions.char_ngrams_all_expr":

@@ -148,3 +148,49 @@ def test_stream_links_warns_that_rerank_is_ignored(spark, tmp_path, caplog):
     assert len(warned) == 1 and warned[0].levelno == logging.WARNING
     assert "rerank_topk=5" in warned[0].getMessage()
     assert warnings(PipelineConfig()) == []
+
+
+def test_stream_micro_batch_runs_the_fused_detector(spark, tmp_path, monkeypatch):
+    """A micro-batch detects mentions with run_pipeline's detector: its
+    mentions frame has exactly one MapInPandas (the fused matcher over the
+    extracted documents) and no token Window below it. The alias table is
+    collected once per processor, not once per micro-batch. The pages are
+    read from parquet, as a stream source delivers them (the synthetic
+    generator is itself a MapInPandas)."""
+    from e2e_el_spark import pipeline
+    from e2e_el_spark.operators import mentions as mentions_mod
+    from e2e_el_spark.streaming import make_links_processor
+    from e2e_el_spark.synth import aliases_df, entities_df, pages_df, via_parquet
+    from tests.plan_inspect import physical_nodes, subtree
+
+    class Captured(Exception):
+        pass
+
+    frames = []
+
+    def capture(mentions, kb):
+        frames.append(mentions)
+        raise Captured
+
+    collects = []
+    fused_aliases = mentions_mod._fused_aliases
+
+    def counted(gazetteer):
+        collects.append(gazetteer)
+        return fused_aliases(gazetteer)
+
+    monkeypatch.setattr(pipeline, "candidate_pairs", capture)
+    monkeypatch.setattr(mentions_mod, "_fused_aliases", counted)
+    ents, gaz = entities_df(spark, 15, seed=9), aliases_df(spark, 15, seed=9)
+    proc = make_links_processor(ents, gaz, str(tmp_path / "links"))
+    pages = via_parquet(pages_df(spark, 10, n_entities=15, seed=9, partitions=2),
+                        str(tmp_path / "pages"))
+    for epoch in (0, 1):
+        with pytest.raises(Captured):
+            proc(pages, epoch)
+    assert len(collects) == 1
+    mentions = frames[0]
+    assert mentions.collect()
+    scans = [n for n in physical_nodes(mentions) if n.nodeName() == "MapInPandas"]
+    assert len(scans) == 1, [n.nodeName() for n in physical_nodes(mentions)]
+    assert not any(n.nodeName() == "Window" for n in subtree(scans[0]))
